@@ -196,154 +196,6 @@ def extract_prepped_text(spark, sf_dir):
 
 
 @_q(
-    "page_outlinks",
-    f"""
-    WITH base AS (
-      SELECT doc_id,
-             'https://' || (CASE WHEN doc_id % 10 < 4 THEN 'hot' ELSE source END)
-               || '.example.com' AS dom,
-             {_SQL_URL} AS url
-      FROM documents
-    ),
-    links AS (
-      SELECT doc_id, dom, url, 0 AS link_no, '/home' AS href,
-             'Home' AS anchor_text
-      FROM base
-      UNION ALL
-      SELECT doc_id, dom, url, CAST(j + 1 AS INT) AS link_no,
-             '/promo/' || doc_id || '/' || j AS href,
-             'Promoted story ' || j AS anchor_text
-      FROM base, range(8) r(j)
-    )
-    SELECT url, CAST(link_no AS INT) AS link_no, href,
-           dom || href AS target, anchor_text
-    FROM links
-    """,
-)
-def page_outlinks(spark, sf_dir):
-    """Outlink extraction from raw HTML (spark/links.py::page_outlinks) —
-    the link-graph ingestion path when only the crawl itself is on hand
-    (the WAT tier, `wat_link_meta`, covers crawls where Common Crawl
-    pre-extracted links): one vectorized mapInPandas pass over the pages
-    walks each page's anchors with the engine's own DOM parser and
-    resolves hrefs against the page URL under `urifix`'s public mozilla
-    rules (<base href> honored, in-page fragments kept relative).  Output
-    (url, link_no, href, target, anchor_text) in document order feeds the
-    same consumers as the WAT tier — `pagerank_links`, host link stats,
-    frontier construction.
-
-    Input here is the junk-page variant (one nav anchor + an 8-link promo
-    table per page — 9 deterministic anchors), so the oracle enumerates
-    every link in closed form; failure isolation matches extraction's
-    (undecodable/unparseable pages emit zero links).  Scale: map-only —
-    no shuffle, no join, one row per anchor."""
-    from readability_spark.spark.links import page_outlinks as extract_links
-    from readability_spark.spark.pages import junk_pages_from_documents
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return extract_links(junk_pages_from_documents(docs))
-
-
-@_q(
-    "anchor_text_profile",
-    f"""
-    WITH base AS (
-      SELECT doc_id,
-             'https://' || (CASE WHEN doc_id % 10 < 4 THEN 'hot' ELSE source END)
-               || '.example.com' AS dom,
-             {_SQL_URL} AS url
-      FROM documents
-    ),
-    links AS (
-      SELECT doc_id, dom, url, '/home' AS href, 'Home' AS anchor_text
-      FROM base
-      UNION ALL
-      SELECT doc_id, dom, url, '/promo/' || doc_id || '/' || j AS href,
-             'Promoted story ' || j AS anchor_text
-      FROM base, range(8) r(j)
-    ),
-    l AS (SELECT url, dom || href AS target, anchor_text FROM links),
-    toks AS (SELECT url, target, t AS term
-             FROM l, UNNEST(string_split(anchor_text, ' ')) u(t)),
-    tt AS (SELECT target, term, count(*) AS term_count
-           FROM toks GROUP BY target, term),
-    st AS (SELECT target, count(*) AS n_inlinks,
-                  count(DISTINCT url) AS n_sources
-           FROM l GROUP BY target),
-    rk AS (SELECT *, row_number() OVER (PARTITION BY target
-             ORDER BY term_count DESC, term ASC) AS term_rank FROM tt)
-    SELECT st.target AS target, n_inlinks, n_sources,
-           CAST(term_rank AS INT) AS term_rank, term, term_count
-    FROM rk JOIN st USING (target) WHERE term_rank <= 3
-    """,
-)
-def anchor_text_profile(spark, sf_dir):
-    """Inbound anchor-text profile per link target — the webgraph quality
-    signal search and FineWeb-style curation pipelines aggregate: what the
-    REST of the web calls a page (inlink count, distinct referring pages,
-    top anchor terms) is a stronger quality/topic prior than anything on
-    the page itself.  Consumes the engine's own extracted link graph
-    (`page_outlinks` — DOM-parsed anchors, hrefs resolved under mozilla
-    rules), emitting per target the inlink/source counts and the top-3
-    anchor terms ranked (count DESC, term ASC).
-
-    Scale shape: both aggregates are map-combinable counts, so the hot
-    targets every webgraph has (here /home per domain, 40% of pages on
-    one salted domain by construction) combine map-side before the
-    (target)/(target, term) exchanges; the ranking window's input is
-    DISTINCT TERMS per target — anchor-vocabulary-bounded, never
-    inlink-cardinality — and the final stats join is target-keyed on
-    frames already partitioned by target (AQE decides broadcast; both
-    sides are data-dependent so no forced hint).  No Python beyond the
-    shared outlink extraction pass."""
-    from pyspark.sql import Window
-
-    from readability_spark.spark.links import page_outlinks as extract_links
-    from readability_spark.spark.pages import junk_pages_from_documents
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # The profile needs the link table at TWO grains ((target, term) and
-    # (target)), and Spark's column pruning pushes a different projection
-    # below any shared exchange per branch, defeating exchange reuse — so
-    # without a barrier the expensive Python extraction pass would run
-    # once PER GRAIN.  localCheckpoint is that barrier (the
-    # dedup_clusters/pagerank lineage-truncation device): extraction runs
-    # ONCE, both aggregates read the materialized link table.  At 10^12
-    # pages this is also simply how the job is run — the extracted link
-    # table is a persisted intermediate shared by pagerank_links/host
-    # stats, not something to recompute per consumer.
-    links = (
-        extract_links(junk_pages_from_documents(docs))
-        .select("url", "target", "anchor_text")
-        .localCheckpoint(eager=False)
-    )
-    toks = links.select(
-        "target", F.explode(F.split("anchor_text", " ")).alias("term")
-    )
-    tt = toks.groupBy("target", "term").agg(
-        F.count(F.lit(1)).alias("term_count")
-    )
-    st = links.groupBy("target").agg(
-        F.count(F.lit(1)).alias("n_inlinks"),
-        F.countDistinct("url").alias("n_sources"),
-    )
-    w = Window.partitionBy("target").orderBy(
-        F.col("term_count").desc(), F.col("term").asc()
-    )
-    ranked = tt.withColumn("term_rank", F.row_number().over(w)).filter(
-        F.col("term_rank") <= 3
-    )
-    return ranked.join(st, "target").select(
-        "target",
-        "n_inlinks",
-        "n_sources",
-        "term_rank",
-        "term",
-        "term_count",
-    )
-
-
-@_q(
     "extract_media_text",
     f"""
     SELECT {_SQL_URL} AS url,
@@ -2788,64 +2640,6 @@ def winnow_fingerprints_q(spark, sf_dir):
 
 
 @_q(
-    "warc_outlinks",
-    f"""
-    SELECT {_SQL_URL} AS url,
-           CAST(0 AS INT) AS link_no,
-           '/home' AS href,
-           'https://' || (CASE WHEN doc_id % 10 < 4 THEN 'hot' ELSE source END)
-             || '.example.com/home' AS target,
-           'Home' AS anchor_text
-    FROM documents
-    """,
-)
-def warc_outlinks(spark, sf_dir):
-    """Crawl archive -> link graph, end to end: the WARC source connector
-    (`spark/warc.py`, binaryFile + ISO-28500 parser) feeds the outlink
-    extractor (`spark/links.py`) directly — the composition a link-graph
-    build actually runs over Common Crawl when no WAT tier ships with the
-    snapshot.  The plain page template carries exactly one anchor
-    (`/home`), so the oracle enumerates the whole link set in closed
-    form; resolution against each page's own URL exercises the per-row
-    base handling through the connector path.  Map-only after the
-    archive explode — no shuffle anywhere."""
-    from readability_spark.spark.links import page_outlinks as extract_links
-    from readability_spark.spark.warc import read_warc_pages
-
-    import shutil
-    from pathlib import Path
-
-    import pandas as pd
-
-    from readability_spark.spark.pages import page_url, synthesize_html
-    from readability_spark.spark.warc import build_warc
-
-    sf = sf_dir.rstrip("/").split("/")[-1]
-    base = Path(f"/tmp/readability_warc_links/{sf}")
-    shutil.rmtree(base, ignore_errors=True)
-    base.mkdir(parents=True)
-    docs = pd.read_parquet(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang", "source"]
-    )
-    n_files = 4
-    for part in range(n_files):
-        sub = docs[docs["doc_id"] % n_files == part]
-        records = [
-            (
-                "response",
-                page_url(r.doc_id, r.source),
-                "2026-03-01T00:00:00Z",
-                synthesize_html(r.doc_id, r.text, r.lang).encode("utf-8"),
-            )
-            for r in sub.itertuples()
-        ]
-        (base / f"crawl-{part}.warc.gz").write_bytes(
-            build_warc(records, compress=True)
-        )
-    return extract_links(read_warc_pages(spark, str(base)))
-
-
-@_q(
     "warc_extract_meta",
     f"""
     SELECT {_SQL_URL} AS url,
@@ -3552,6 +3346,16 @@ from readability_spark.spark.modelscore import (  # noqa: E402
 
 _QC_W_SQL = "[" + ", ".join(repr(w) for w in _QC_WEIGHTS) + "]"
 
+#: the 4dp-rounded logit as Spark's round() computes it: HALF_UP on the
+#: double's shortest decimal text.  DuckDB's round(double, 4) scales by
+#: 10^4 in floating point first, so a double just below a decimal tie
+#: (doc 63 at sf0.001: 0.028749999999999998) rounds up there but down
+#: in Spark; rounding the decimal text instead matches Spark exactly.
+_QC_LOGIT_4DP_SQL = (
+    f"CAST(round(CAST(CAST(sw / n_tokens + {_QC_BIAS!r} AS VARCHAR)"
+    " AS DECIMAL(38, 20)), 4) AS DOUBLE)"
+)
+
 
 @_q(
     "quality_classifier_hashed",
@@ -3570,7 +3374,7 @@ _QC_W_SQL = "[" + ", ".join(repr(w) for w in _QC_WEIGHTS) + "]"
     )
     SELECT doc_id,
            CAST(n_tokens AS BIGINT) AS n_tokens,
-           round(sw / n_tokens + {_QC_BIAS!r}, 4) AS quality_logit,
+           {_QC_LOGIT_4DP_SQL} AS quality_logit,
            (sw / n_tokens + {_QC_BIAS!r}) >= 0 AS keep
     FROM s
     """,
@@ -3624,7 +3428,7 @@ def quality_classifier_hashed(spark, sf_dir):
     )
     SELECT doc_id,
            CAST(n_tokens AS BIGINT) AS n_tokens,
-           round(sw / n_tokens + {_QC_BIAS!r}, 4) AS quality_logit,
+           {_QC_LOGIT_4DP_SQL} AS quality_logit,
            (sw / n_tokens + {_QC_BIAS!r}) >= 0 AS keep,
            'hashed' AS scorer
     FROM s
@@ -3864,8 +3668,7 @@ def gopher_quality_filter(spark, sf_dir):
     line-level rules — bullet/ellipsis line fractions — live in
     gopher_line_rules, over deterministically synthesized line
     structure.)  The signal/rule expressions are the shared
-    `spark/quality.py::gopher_signals` builder, so the streaming gate
-    (`stream_gopher_gate`) provably applies the identical bundle."""
+    `spark/quality.py::gopher_signals` builder."""
     docs = _docs(spark, sf_dir).filter(F.trim(F.col("text")) != "")
     signals, rules, keep = _gopher_signals("text")
     return docs.select(
@@ -5389,7 +5192,7 @@ def semdedup_embeddings(spark, sf_dir):
 
 
 #: the unrolled 3-iteration PageRank CTE chain (n, t, e, r0..r3),
-#: shared by the pagerank_links and crawl_frontier_plan oracles
+#: the pagerank_links oracle
 _PAGERANK_CTES = """
     n AS (SELECT count(*) AS n FROM documents),
     t AS (
@@ -5447,9 +5250,8 @@ def pagerank_links(spark, sf_dir):
 
 
 def _pagerank_ranks(spark, sf_dir, iters=3):
-    """(doc_id, n, rank) after ``iters`` power iterations — the shared
-    loop behind pagerank_links and crawl_frontier_plan (mirrors the
-    shared _PAGERANK_CTES oracle chain)."""
+    """(doc_id, n, rank) after ``iters`` power iterations — the loop
+    behind pagerank_links (mirrors the _PAGERANK_CTES oracle chain)."""
     docs = _docs(spark, sf_dir).select("doc_id")
     nrow = docs.agg(F.count(F.lit(1)).alias("n"))
     base = docs.crossJoin(F.broadcast(nrow))
@@ -5921,8 +5723,6 @@ _BPE_APPLY_CTES = f"""
       SELECT token, arg_min(len(syms), len(syms)) AS n_pieces
       FROM bpe GROUP BY token
     )"""
-
-
 
 
 def _bpe_piece_counts(vocab, merge_rank):
@@ -7111,252 +6911,6 @@ def stream_extract_meta(spark, sf_dir):
     return out.select("url", "title", "byline", "site_name", "status")
 
 
-@_q(
-    "stream_dedup_exact",
-    f"""
-    SELECT {_SQL_URL} AS url FROM documents
-    """,
-)
-def stream_dedup_exact_q(spark, sf_dir):
-    """Streaming exact dedup of the crawl landing zone: the input holds every
-    page TWICE (two parquet drops of the same pages table); dropDuplicates
-    state across micro-batches must emit each url exactly once, equal to the
-    batch distinct-url oracle."""
-    from readability_spark.streaming import stream_dedup_exact
-
-    base = _stream_workdir(sf_dir, "dedup")
-    pages = read_pages(spark, sf_dir).select("url", "warc_ts", "html", "text", "lang")
-    pages.write.mode("overwrite").parquet(str(base / "input"))
-    pages.write.mode("append").parquet(str(base / "input"))  # duplicate drop
-    sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    return stream_dedup_exact(
-        spark, str(base / "input"), str(base / "checkpoint"),
-        query_name=f"stream_dedup_{sf_tag}",
-    )
-
-
-@_q(
-    "stream_dedup_against_corpus",
-    """
-    WITH corpus AS (SELECT md5(text) AS text_hash FROM documents),
-    increment AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 4 = 0 THEN text
-                  ELSE text || ' update run2' END AS text
-      FROM documents WHERE doc_id % 2 = 0
-    )
-    SELECT doc_id, md5(text) AS text_hash
-    FROM increment
-    WHERE md5(text) NOT IN (SELECT text_hash FROM corpus)
-    """,
-)
-def stream_dedup_against_corpus_q(spark, sf_dir):
-    """STREAM-STATIC join coverage — the streaming form of the recurring
-    incremental-dedup job: a new-crawl increment arrives as a STREAM and
-    is admitted only if its content hash is absent from the STATIC
-    existing-corpus snapshot.  Same synthesized increment (and therefore
-    the same closed-form oracle) as the batch `incremental_dedup_bloom`:
-    %4==0 re-fetches dedup away, the rest changed and pass.  Streaming
-    forbids a stream-static left anti, so the helper uses the supported
-    left-outer + null-filter shape; the static key table is planned once
-    per micro-batch (broadcast when small); at scale it is replaced by
-    the corpus Bloom bitmap exactly as the batch job does."""
-    from readability_spark.streaming import stream_static_anti_corpus
-
-    base = _stream_workdir(sf_dir, "sscorpus")
-    docs = _docs(spark, sf_dir)
-    corpus = docs.select(F.md5(F.col("text")).alias("text_hash"))
-    increment = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id",
-        F.md5(
-            F.when(F.col("doc_id") % 4 == 0, F.col("text")).otherwise(
-                F.concat(F.col("text"), F.lit(" update run2"))
-            )
-        ).alias("text_hash"),
-    )
-    increment.write.mode("overwrite").parquet(str(base / "input"))
-    sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    return stream_static_anti_corpus(
-        spark,
-        str(base / "input"),
-        corpus,
-        "doc_id bigint, text_hash string",
-        "text_hash",
-        f"ss_dedup_{sf_tag}",
-        str(base / "checkpoint"),
-    )
-
-
-@_q(
-    "stream_dedup_watermarked",
-    f"""
-    SELECT {_SQL_URL} AS url FROM documents
-    """,
-)
-def stream_dedup_watermarked_q(spark, sf_dir):
-    """Bounded-state streaming dedup (dropDuplicatesWithinWatermark over
-    warc_ts — the 10^12-document form of stream_dedup_exact): the landing
-    zone again holds every page twice; both copies carry the same event
-    time, so each url sits well inside the watermark window and must be
-    emitted exactly once, equal to the batch distinct-url oracle.  State
-    for a url is evicted once the watermark passes it, so worker state is
-    bounded by arrival-rate x window instead of corpus size.  The
-    watermark is DERIVED from the fixture's measured event-time span
-    (max-min warc_ts, + 24 h margin) rather than hardcoded: with a fixed
-    '720 hours' the oracle equality silently breaks once the corpus grows
-    past ~70k docs (doc_id*37 s span exceeds the watermark and sole
-    copies of the oldest urls are dropped as late data) — rows older than
-    the watermark at arrival are dropped per the operator's contract, so
-    the window must cover the span for the drain to be loss-free."""
-    from readability_spark.streaming import stream_dedup_watermarked
-
-    base = _stream_workdir(sf_dir, "dedup_wm")
-    pages = read_pages(spark, sf_dir).select("url", "warc_ts", "html", "text", "lang")
-    pages.write.mode("overwrite").parquet(str(base / "input"))
-    pages.write.mode("append").parquet(str(base / "input"))  # duplicate drop
-    span = pages.agg(
-        (
-            F.unix_timestamp(F.max("warc_ts")) - F.unix_timestamp(F.min("warc_ts"))
-        ).alias("s")
-    ).first()["s"]
-    wm_hours = int((span or 0) // 3600) + 24  # span + 1-day margin
-    sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    return stream_dedup_watermarked(
-        spark, str(base / "input"), str(base / "checkpoint"),
-        watermark=f"{wm_hours} hours",
-        query_name=f"stream_dedup_wm_{sf_tag}",
-    )
-
-
-@_q(
-    "stream_windowed_counts",
-    """
-    SELECT date_trunc('hour', TIMESTAMP '2026-01-01 00:00:00'
-             + to_seconds(doc_id * 37)) AS window_start,
-           count(*) AS n_pages
-    FROM documents GROUP BY 1
-    """,
-)
-def stream_windowed_counts(spark, sf_dir):
-    """Watermarked tumbling-window rollup over the page stream (the
-    streaming metrics path; oracle recomputes the deterministic warc_ts
-    windows in closed form)."""
-    from readability_spark.streaming import run_windowed_counts_complete
-
-    base = _stream_workdir(sf_dir, "windowed")
-    read_pages(spark, sf_dir).write.mode("overwrite").parquet(str(base / "input"))
-    sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    return run_windowed_counts_complete(
-        spark, str(base / "input"), f"windowed_counts_{sf_tag}"
-    )
-
-
-@_q(
-    "stream_domain_sessions",
-    """
-    WITH pages AS (
-      SELECT (case when doc_id % 10 < 4 then 'hot' else source end) || '.example.com' AS domain,
-             doc_id * 37 AS epoch
-      FROM documents
-    ),
-    marks AS (
-      SELECT domain, epoch,
-             CASE WHEN lag(epoch) OVER w IS NULL
-                       OR epoch - lag(epoch) OVER w > 120 THEN 1 ELSE 0 END AS new_s
-      FROM pages WINDOW w AS (PARTITION BY domain ORDER BY epoch)
-    ),
-    sess AS (
-      SELECT domain, epoch,
-             sum(new_s) OVER (PARTITION BY domain ORDER BY epoch) AS sid
-      FROM marks
-    )
-    SELECT domain, min(epoch) AS session_start, max(epoch) AS session_end,
-           count(*) AS n_pages
-    FROM sess GROUP BY domain, sid
-    """,
-)
-def stream_domain_sessions(spark, sf_dir):
-    """Custom stateful streaming operator (applyInPandasWithState): gap-based
-    crawl sessionization per domain.  Event time = the deterministic epoch
-    seconds behind warc_ts; a far-future sentinel event per domain flushes
-    the final open sessions so the streamed result equals the closed-form
-    batch sessionization (lag-window oracle) exactly."""
-    from readability_spark.streaming.stream import run_domain_sessions
-
-    base = _stream_workdir(sf_dir, "sessions")
-    # deterministic epoch: warc_ts = 2026-01-01 + doc_id*37s -> epoch = doc_id*37
-    # (difference of two unix_timestamps cancels the session timezone)
-    pages = read_pages(spark, sf_dir).select(
-        F.regexp_extract("url", r"https://([^/]+)/", 1).alias("domain"),
-        (
-            F.unix_timestamp("warc_ts")
-            - F.unix_timestamp(F.lit("2026-01-01 00:00:00").cast("timestamp"))
-        ).alias("epoch"),
-    )
-    sentinels = pages.select("domain").distinct().select(
-        "domain", F.lit(10_000_000_000).alias("epoch")
-    )
-    pages.select("domain", "epoch").union(sentinels).write.mode("overwrite").parquet(
-        str(base / "input")
-    )
-    sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    out = run_domain_sessions(spark, str(base / "input"), f"domain_sessions_{sf_tag}")
-    # the sentinel's own session stays open in state and is never emitted
-    return out
-
-
-@_q(
-    "stream_gopher_gate",
-    f"""
-    WITH t AS (
-      SELECT doc_id, source, text, string_split(trim(text), ' ') AS toks
-      FROM documents WHERE trim(text) != ''
-    ),
-    m AS (
-      SELECT doc_id, source,
-             len(toks) AS n_words,
-             CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
-               / len(toks) AS mean_wl,
-             CAST(len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-               / len(toks) AS alpha_frac,
-             CAST(length(text) - length(replace(text, '#', ''))
-                  + (length(text) - length(replace(text, '...', ''))) / 3
-               AS DOUBLE) / len(toks) AS symbol_ratio,
-             len(list_intersect(list_distinct(toks),
-                 {list(_GOPHER_STOPS)})) AS n_req_stopwords
-      FROM t
-    )
-    SELECT {_SQL_URL} AS url,
-           CAST(n_words AS BIGINT) AS n_words,
-           (n_words BETWEEN 50 AND 100000) AND (mean_wl BETWEEN 3 AND 10)
-             AND symbol_ratio <= 0.1 AND alpha_frac >= 0.8
-             AND n_req_stopwords >= 2 AS keep
-    FROM m
-    """,
-)
-def stream_gopher_gate(spark, sf_dir):
-    """Streaming quality gating (streaming/stream.py::stream_quality_gate):
-    the Gopher word-rule bundle applied per micro-batch on the crawl
-    landing stream — the gate a pipeline runs BEFORE paying for
-    extraction or dedup state on junk pages.  Pure narrow projection per
-    micro-batch (no state, no watermark — memory is O(batch), never
-    O(corpus)), built from the SAME `quality.gopher_signals` expressions
-    as the batch `gopher_quality_filter`, so the drained stream must
-    equal the batch oracle exactly — streaming and batch are the same
-    engine and the same rules."""
-    from readability_spark.streaming import stream_quality_gate
-
-    base = _stream_workdir(sf_dir, "quality")
-    read_pages(spark, sf_dir).write.mode("overwrite").parquet(str(base / "input"))
-    sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    return stream_quality_gate(
-        spark,
-        str(base / "input"),
-        str(base / "checkpoint"),
-        query_name=f"stream_quality_{sf_tag}",
-    )
-
-
 # ------------------------------------------------ relational / metrics ops
 
 
@@ -7645,7 +7199,7 @@ def split_leakage_audit(spark, sf_dir):
     # pushes a different projection below the shared exchange per side,
     # defeating exchange reuse — without a barrier the md5 gram pass
     # (the dominant map cost) would run TWICE over the corpus.
-    # localCheckpoint is that barrier (the anchor_text_profile device):
+    # localCheckpoint is that barrier (the dedup_clusters device):
     # the fingerprint pass runs once, both sides read the materialized
     # guarded table.
     guarded = (
@@ -7754,7 +7308,6 @@ def mixture_plan_report(spark, sf_dir):
         F.round(epochs, 4).alias("epochs"),
         (epochs > _MIX_EPOCH_CAP).cast("int").alias("over_epoch_cap"),
     )
-
 
 
 #: image aHash demo geometry: images (doc_id % 3 == 0, the attach_payloads
@@ -8026,8 +7579,6 @@ def ann_pq_topk(spark, sf_dir):
     )
 
 
-
-
 @_q(
     "ann_ivfpq_topk",
     f"""
@@ -8122,81 +7673,6 @@ def ann_ivfpq_topk(spark, sf_dir):
     return textops.pq_adc_topk(
         probe, _pq_codebooks(spark, sf_dir), _PQ_DSUB, qvec, k=10, shortlist=50
     )
-
-
-
-@_q(
-    "canonical_link_dedup",
-    f"""
-    WITH base AS (
-      SELECT doc_id,
-             'https://' || (CASE WHEN doc_id % 10 < 4 THEN 'hot' ELSE source END)
-               || '.example.com' AS dom,
-             {_SQL_URL}
-               || (CASE WHEN doc_id % 5 IN (1, 2, 3)
-                        THEN '?utm_source=feed' ELSE '' END) AS url,
-             doc_id // 5 AS gid
-      FROM documents
-    ),
-    meta AS (
-      SELECT url,
-             CASE WHEN doc_id % 5 IN (1, 2)
-                    THEN 'https://canonical.example.com/story/' || gid
-                  WHEN doc_id % 5 = 3 THEN dom || '/story/' || gid
-             END AS canonical,
-             doc_id % 7 = 3 AS noindex
-      FROM base
-    )
-    SELECT coalesce(canonical, url) AS canon_key,
-           min(url) AS kept_url,
-           count(*) AS n_pages,
-           CAST(count(*) FILTER (WHERE canonical IS NOT NULL) AS BIGINT)
-             AS n_declared
-    FROM meta WHERE NOT noindex
-    GROUP BY 1
-    """,
-)
-def canonical_link_dedup(spark, sf_dir):
-    """Canonical-link dedup + robots-noindex curation — the SEO-signal
-    lane every production crawl pipeline runs BEFORE content hashing
-    (pages declare their own duplicate groups; honoring them is cheaper
-    and more precise than near-dup detection for tracked-URL variants):
-    extract each page's <link rel=canonical> target and robots
-    directives with the engine's own DOM parser
-    (spark/links.py::page_seo_meta — first canonical in tree order wins,
-    rel matched as a case-insensitive token list, href resolved against
-    the page URL like outlinks, robots 'noindex' matched as a whole
-    comma-token), drop noindex pages, then group by
-    coalesce(canonical, url) and keep the lexicographically-least URL
-    per group.  Complements `url_dedup_normalized` (string-rule URL
-    canonicalization) with the page-DECLARED grouping.
-
-    Input is the SEO page variant (pages.seo_pages_from_documents):
-    tracked-URL duplicates declaring absolute, case-variant and RELATIVE
-    canonicals plus a first-wins decoy and non-noindex robots decoys —
-    every parsing branch is load-bearing in the oracle's closed form.
-
-    Plan at scale: ONE vectorized extraction pass (the mapInPandas stage
-    IS the product's design) and ONE map-combined aggregate keyed on the
-    canonical target — a single exchange whose key is exactly the
-    partitioning a downstream fetch-dedup wants; no joins."""
-    from readability_spark.spark.links import page_seo_meta
-    from readability_spark.spark.pages import seo_pages_from_documents
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    meta = page_seo_meta(seo_pages_from_documents(docs))
-    return (
-        meta.filter(~F.col("noindex"))
-        .groupBy(
-            F.coalesce(F.col("canonical"), F.col("url")).alias("canon_key")
-        )
-        .agg(
-            F.min("url").alias("kept_url"),
-            F.count(F.lit(1)).alias("n_pages"),
-            F.count(F.col("canonical")).alias("n_declared"),
-        )
-    )
-
 
 
 @_q(
@@ -8336,7 +7812,6 @@ def pq_residual_report(spark, sf_dir):
     )
 
 
-
 #: Zipf audit geometry: top-K token ranks fitted by least squares on
 #: log10-log10 (a healthy natural-language corpus fits slope ~ -1;
 #: boilerplate-flooded or synthetic corpora bend the curve)
@@ -8443,7 +7918,6 @@ def corpus_zipf_report(spark, sf_dir):
     )
 
 
-
 #: frozen eval-holdout quota per language stratum
 _EHS_QUOTA = 20
 
@@ -8496,7 +7970,6 @@ def eval_holdout_sample(spark, sf_dir):
         .filter(F.col("rn") <= _EHS_QUOTA)
         .select("doc_id", "lang", F.col("rn").cast("int").alias("holdout_rank"))
     )
-
 
 
 #: demo tag dictionary (term -> category) standing in for the config
@@ -8571,7 +8044,6 @@ def keyword_tag_report(spark, sf_dir):
     )
 
 
-
 @_q(
     "langid_confusion_report",
     f"""
@@ -8626,190 +8098,6 @@ def langid_confusion_report(spark, sf_dir):
         (F.col("lang") == F.col("lang_guess")).alias("correct"),
     )
 
-
-
-#: the three synthesized robots.txt templates (closed-form decisions the
-#: oracle replays): 0 = site-wide disallow with an /articles/ carve-out
-#: for our agent (longest-match precedence); 1 = a '$'-anchored wildcard
-#: Disallow beaten by a longer Allow prefix for doc_id < 100; 2 = no
-#: graftbot group at all (falls back to '*'), plain prefix rules with
-#: the same < 100 decision — every RFC 9309 mechanism is load-bearing
-_ROBOTS_T0 = (
-    "User-agent: *\nDisallow: /\n\n"
-    "User-agent: graftbot\nDisallow: /\nAllow: /articles/\n"
-)
-_ROBOTS_T1 = (
-    "User-agent: graftbot\n"
-    "Disallow: /articles/*.html$\nAllow: /articles/doc-0000\n"
-)
-_ROBOTS_T2 = (
-    "# no graftbot group - falls back to *\n"
-    "User-agent: *\nDisallow: /articles/doc-000\nAllow: /articles/doc-0000\n"
-)
-
-
-@_q(
-    "robots_txt_filter",
-    f"""
-    WITH base AS (
-      SELECT doc_id, {_SQL_URL} AS url,
-             CASE WHEN doc_id % 10 < 4 THEN 0
-                  ELSE 1 + (CAST(substr(source, 4) AS INT) % 2) END AS tcls
-      FROM documents
-    )
-    SELECT url,
-           CASE WHEN tcls = 0 THEN TRUE ELSE doc_id < 100 END AS crawl_allowed,
-           'graftbot' AS matched_agent
-    FROM base
-    """,
-)
-def robots_txt_filter(spark, sf_dir):
-    """robots.txt crawl-politeness gate (RFC 9309) — the decision a fetch
-    frontier applies BEFORE a URL is ever requested, implemented as a
-    real spec matcher (spark/links.py::robots_rules / robots_allowed /
-    robots_filter): most-specific user-agent group selection with '*'
-    fallback, longest-matching-pattern precedence, Allow winning ties,
-    '*' wildcards and '$' end anchors.  The three synthesized per-domain
-    robots bodies make every mechanism load-bearing — a site-wide
-    Disallow beaten by a longer agent-specific Allow, a '$'-anchored
-    wildcard Disallow beaten by a longer Allow prefix, and a missing
-    agent group falling back to '*' — so the oracle's closed-form
-    decisions test the matcher, not just the plumbing.  12 direct unit
-    tests pin the spec cases (tie-break, anchors, empty Disallow,
-    group adjacency).
-
-    Plan at scale: robots bodies are a per-HOST dim (bounded by host
-    count) — here synthesized as a narrow column expression, evaluated
-    in ONE vectorized mapInPandas pass with per-batch rule caching (one
-    parse per distinct body per batch), no shuffle at all: a frontier
-    filters in place (plan-gated zero exchanges)."""
-    from readability_spark.spark.links import robots_filter
-
-    hot = F.col("doc_id") % 10 < 4
-    url = F.concat(
-        F.lit("https://"),
-        F.when(hot, F.lit("hot")).otherwise(F.col("source")),
-        F.lit(".example.com/articles/doc-"),
-        F.lpad(F.col("doc_id").cast("string"), 6, "0"),
-        F.lit(".html"),
-    )
-    robots = (
-        F.when(hot, F.lit(_ROBOTS_T0))
-        .when(
-            F.substring("source", 4, 10).cast("int") % 2 == 0,
-            F.lit(_ROBOTS_T1),
-        )
-        .otherwise(F.lit(_ROBOTS_T2))
-    )
-    pages = _docs(spark, sf_dir).select(
-        url.alias("url"), robots.alias("robots_txt")
-    )
-    return robots_filter(pages, agent="graftbot")
-
-
-
-#: per-host fetch budget for the frontier plan (politeness: a crawler
-#: schedules at most this many URLs per host per cycle)
-_CFP_HOST_BUDGET = 3
-
-
-@_q(
-    "crawl_frontier_plan",
-    f"""
-    WITH {_PAGERANK_CTES},
-    base AS (
-      SELECT doc_id,
-             (CASE WHEN doc_id % 10 < 4 THEN 'hot' ELSE source END)
-               || '.example.com' AS host,
-             {_SQL_URL} AS url,
-             CASE WHEN doc_id % 10 < 4 THEN TRUE ELSE doc_id < 100 END
-               AS crawl_allowed
-      FROM documents
-    ),
-    gated AS (
-      SELECT b.host, b.doc_id, b.url,
-             round(r3.rank * n.n, 4) AS priority
-      FROM base b JOIN r3 ON r3.doc_id = b.doc_id CROSS JOIN n
-      WHERE b.crawl_allowed
-    )
-    SELECT host, doc_id, url, priority, CAST(slot AS INT) AS slot
-    FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY host ORDER BY priority DESC, doc_id ASC) AS slot
-      FROM gated
-    ) WHERE slot <= {_CFP_HOST_BUDGET}
-    """,
-)
-def crawl_frontier_plan(spark, sf_dir):
-    """Crawl-frontier scheduling — the capstone composition where three
-    of the engine's artifacts meet in the crawler's ACTUAL per-cycle
-    decision: which URLs to fetch next = robots.txt-permitted pages
-    (the RFC 9309 gate, `robots_txt_filter`'s matcher with the same
-    synthesized per-domain bodies), ranked by link centrality (the
-    `pagerank_links` power iteration, shared CTE chain in the oracle),
-    capped at {_CFP_HOST_BUDGET} URLs per host per cycle (politeness
-    budget — the reason frontiers are host-keyed).  Output: (host,
-    doc_id, url, priority, slot), slot 1..{_CFP_HOST_BUDGET} per host.
-
-    Plan at scale: the robots gate is the zero-shuffle vectorized pass
-    (doc_id rides through `robots_filter(keep_cols=...)`, no join back);
-    PageRank contributes its k iteration exchanges; the gate joins the
-    rank frame on doc_id (both sides corpus-keyed equi-join — AQE
-    decides the strategy); the budget is one per-host window whose
-    partition key is EXACTLY the partitioning a fetch scheduler wants
-    downstream.  Ranking keys are the 4dp-rounded rank with a doc_id
-    tiebreak (the ann_pq discipline)."""
-    from pyspark.sql import Window
-
-    from readability_spark.spark.links import robots_filter
-
-    hot = F.col("doc_id") % 10 < 4
-    host = F.concat(
-        F.when(hot, F.lit("hot")).otherwise(F.col("source")),
-        F.lit(".example.com"),
-    )
-    url = F.concat(
-        F.lit("https://"),
-        host,
-        F.lit("/articles/doc-"),
-        F.lpad(F.col("doc_id").cast("string"), 6, "0"),
-        F.lit(".html"),
-    )
-    robots = (
-        F.when(hot, F.lit(_ROBOTS_T0))
-        .when(
-            F.substring("source", 4, 10).cast("int") % 2 == 0,
-            F.lit(_ROBOTS_T1),
-        )
-        .otherwise(F.lit(_ROBOTS_T2))
-    )
-    pages = _docs(spark, sf_dir).select(
-        url.alias("url"),
-        robots.alias("robots_txt"),
-        "doc_id",
-        host.alias("host"),
-    )
-    gated = robots_filter(
-        pages, agent="graftbot", keep_cols=(("doc_id", "bigint"), ("host", "string"))
-    ).filter(F.col("crawl_allowed"))
-    ranks = _pagerank_ranks(spark, sf_dir).select(
-        "doc_id", F.round(F.col("rank") * F.col("n"), 4).alias("priority")
-    )
-    w = Window.partitionBy("host").orderBy(
-        F.col("priority").desc(), F.col("doc_id").asc()
-    )
-    return (
-        gated.join(ranks, "doc_id")
-        .select(
-            "host",
-            "doc_id",
-            "url",
-            "priority",
-            F.row_number().over(w).alias("slot"),
-        )
-        .filter(F.col("slot") <= _CFP_HOST_BUDGET)
-        .select("host", "doc_id", "url", "priority", F.col("slot").cast("int").alias("slot"))
-    )
 
 # ----------------------------------------------------------------- contract
 

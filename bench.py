@@ -183,103 +183,8 @@ def main():
         "extract_scored_text",
         "extract_prepped_text",
         "extract_media_text",
-        "dedup_exact",
-        "token_stats",
-        "quality_score",
-        "lang_id_heuristic",
-        "topk_cosine",
-        "agg_pricing_summary",
-        "join_customer_orders",
-        "events_hourly",
-        "dedup_jaccard_pairs",
-        "minhash_lsh_pairs",
-        "simhash_fingerprint",
-        "embedding_near_dup",
-        "ann_ivf_topk",
-        "multimodal_features",
         "pdf_extract_text",
         "readerable_flags",
-        "winnow_fingerprints",
-        "lsh_cosine_pairs",
-        "latest_snapshot_per_url",
-        "crawl_cube_stats",
-        "lang_id_ngram",
-        # round-3 operators
-        "paragraph_dedup",
-        "pii_scrub",
-        "gopher_quality_filter",
-        "dedup_clusters",
-        "repeated_ngram_spans",
-        "curated_corpus",
-        # round-4 operators
-        "repeated_span_ranges",
-        "repeated_ngram_spans_winnowed",
-        "curated_corpus_neardup",
-        "gopher_line_rules",
-        "c4_quality_filter",
-        "perplexity_filter",
-        "dsir_importance",
-        "ccnet_buckets",
-        "sequence_pack",
-        "url_blocklist_filter",
-        "pagerank_links",
-        "semdedup_embeddings",
-        "gopher_repetition_rules",
-        # round-4c operators
-        "incremental_dedup_bloom",
-        "quality_classifier_hashed",
-        "text_normalize",
-        "gopher_dup_lines",
-        "cms_token_counts",
-        "hll_distinct_texts",
-        "histogram_quantiles",
-        "tf_idf_keywords",
-        "temperature_mix_sample",
-        "bm25_search",
-        "hybrid_search_rrf",
-        "decontam_semantic",
-        "inverted_index",
-        "incremental_dedup_neardup",
-        "source_data_card",
-        "repeated_span_scrub",
-        "llm_corpus_pipeline",
-        "bpe_tokenize",
-        "bpe_train",
-        "quality_score_auto",
-        "crawl_diff_report",
-        "quantile_gated_filter",
-        # round-5 operators
-        "ivf_train",
-        "host_reputation_filter",
-        "lsh_recall_report",
-        "cluster_mix_report",
-        "bigram_perplexity_filter",
-        "knn_label_propagation",
-        "simhash_hamming_pairs",
-        "tokenizer_fertility_report",
-        "page_outlinks",
-        "ccnet_pipeline",
-        "classifier_train",
-        "classifier_score_trained",
-        "doc_chunks",
-        "ann_recall_report",
-        "anchor_text_profile",
-        "filter_funnel_report",
-        "split_assign",
-        "split_leakage_audit",
-        "mixture_plan_report",
-        "image_ahash_neardup",
-        "pq_codes",
-        "ann_pq_topk",
-        "ann_ivfpq_topk",
-        "canonical_link_dedup",
-        "pq_residual_report",
-        "corpus_zipf_report",
-        "eval_holdout_sample",
-        "keyword_tag_report",
-        "langid_confusion_report",
-        "robots_txt_filter",
-        "crawl_frontier_plan",
     ]
     allq = entrymod.queries()
     extraction_rep = make_extraction_rep(spark, sf_dir, factor)
@@ -302,12 +207,8 @@ def main():
 
     # noise on a shared VM is strictly ADDITIVE (a contended run is only
     # ever slower), so min-of-reps estimates the uncontended wall and is
-    # more run-to-run stable than the median; raw samples ship in the sidecar
-    # 2-decimal mins: the driver's stdout tail window is exactly 2000 chars
-    # (BENCH_r01-03 tails) and a 65-query dict at 3 decimals measured 1992
-    # chars — a 7-char margin.  2 decimals + the slim key set below keeps
-    # the line ~1900 chars with headroom for more queries; full-precision
-    # mins and raw per-rep samples ship in the sidecar.
+    # more run-to-run stable than the median; full-precision mins and raw
+    # per-rep samples ship in the sidecar
     queries = {n: round(min(s), 2) for n, s in samples.items()}
     docs_per_sec = (
         docs / queries["extract_flagship"] if queries["extract_flagship"] > 0 else 0.0
@@ -349,28 +250,7 @@ def main():
     except OSError:
         pass  # sidecar is best-effort; the headline line below is the contract
     spark.stop()
-    # the driver captures only the last ~2000 chars of stdout: if catalog
-    # growth ever pushes the 2-decimal line past a 1950-char safety margin,
-    # degrade the stdout copy — first to 1 decimal, then by dropping the
-    # FASTEST queries from the stdout dict (they carry the least signal;
-    # "omitted_fastest" records how many) until the line fits.  Full
-    # precision and every query always ship in the sidecar's queries_3dp,
-    # and "value" stays the all-queries total either way.
-    line = json.dumps(headline)
-    if len(line) > 1950:
-        headline["queries"] = {n: round(min(s), 1) for n, s in samples.items()}
-        line = json.dumps(headline)
-    omitted = 0
-    while len(line) > 1950 and len(headline["queries"]) > 1:
-        fastest = min(
-            (n for n in headline["queries"] if n != "extract_flagship"),
-            key=lambda n: (headline["queries"][n], -len(n)),
-        )
-        del headline["queries"][fastest]
-        omitted += 1
-        headline["omitted_fastest"] = omitted
-        line = json.dumps(headline)
-    print(line)
+    print(json.dumps(headline))
 
 
 if __name__ == "__main__":

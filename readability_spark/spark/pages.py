@@ -16,10 +16,8 @@ import html as _htmlmod
 from typing import Iterator
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql.types import (
     BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -323,85 +321,3 @@ def gzip_html(pages_df):
 
     return pages_df.mapInPandas(compress, schema=pages_df.schema)
 
-
-def synthesize_seo_html(doc_id, text, lang):
-    """SEO-signal page variant for the canonical-link dedup lane.
-
-    Closed-form signals (mirrored by the `canonical_link_dedup` oracle;
-    gid = doc_id // 5):
-      doc_id % 5 == 1  -> absolute canonical
-                          'https://canonical.example.com/story/{gid}',
-                          PLUS a decoy second canonical later in head that
-                          first-in-tree-order parsing must ignore
-      doc_id % 5 == 2  -> same target, rel spelled 'Canonical' (parsing is
-                          case-insensitive per the html5 rel contract)
-      doc_id % 5 == 3  -> RELATIVE canonical '/story/{gid}' (resolves
-                          against the page's own scheme+host)
-      else             -> no canonical (self-canonical implied)
-      doc_id % 7 == 3  -> <meta name=robots content='noindex, follow'>
-      doc_id % 7 == 5  -> <meta name=robots content='index, follow'>
-                          (present but NOT a noindex — parsing must
-                          token-split, not substring-match)
-    A rel=stylesheet link rides along on every page as a non-canonical
-    <link> decoy."""
-    gid = doc_id // 5
-    head = [
-        f"<title>Daily Report Number {doc_id} Edition | ExampleSite</title>",
-        '<link rel="stylesheet" href="/static/site.css"/>',
-    ]
-    if doc_id % 5 == 1:
-        head.append(
-            f'<link rel="canonical" href="https://canonical.example.com/story/{gid}"/>'
-        )
-    elif doc_id % 5 == 2:
-        head.append(
-            f'<link rel="Canonical" href="https://canonical.example.com/story/{gid}"/>'
-        )
-    elif doc_id % 5 == 3:
-        head.append(f'<link rel="canonical" href="/story/{gid}"/>')
-    if doc_id % 7 == 3:
-        head.append('<meta name="robots" content="noindex, follow"/>')
-    elif doc_id % 7 == 5:
-        head.append('<meta name="robots" content="index, follow"/>')
-    if doc_id % 5 == 1:
-        head.append('<link rel="canonical" href="https://evil.example.com/dup"/>')
-    body_text = _htmlmod.escape(text, quote=False)
-    return (
-        f'<html lang="{lang}"><head>{"".join(head)}</head><body>'
-        f'<div id="page-main"><h1>Daily Report Number {doc_id} Edition</h1>'
-        f"<p>{body_text}</p></div>"
-        f"</body></html>"
-    )
-
-
-def seo_pages_from_documents(documents_df):
-    """documents -> SEO-variant pages: tracked-URL duplicates declaring
-    canonical links (doc_id % 5 in 1..3 get a ?utm_source=feed query
-    suffix on their url), robots directives per synthesize_seo_html."""
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        page_url(i, s)
-                        + ("?utm_source=feed" if i % 5 in (1, 2, 3) else "")
-                        for i, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_seo_html(i, t, l).encode("utf-8")
-                        for i, t, l in zip(
-                            pdf["doc_id"], pdf["text"], pdf["lang"]
-                        )
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
-    )

@@ -1,13 +1,12 @@
 """Gopher/MassiveText word-level quality signals (Rae et al. 2021) as a
-shared Column-expression builder — consumed by the batch query
+shared Column-expression builder — consumed by the batch queries
 (`__spark_entry__.gopher_quality_filter`, where a DuckDB oracle pins every
-value) and by the streaming gate (`streaming/stream.py::
-stream_quality_gate`), so both paths apply the IDENTICAL published rules.
+value, and the other Gopher-rule entries), so every caller applies the
+IDENTICAL published rules.
 
 Everything here is a pure narrow projection over built-in array/string
 functions: no shuffle, no UDF, no state — the shape that rides the scan
-at 100 TB and runs per micro-batch in a stream without accumulating
-anything."""
+at 100 TB."""
 
 from __future__ import annotations
 

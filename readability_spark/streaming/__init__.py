@@ -1,10 +1,4 @@
 from .stream import (  # noqa: F401
     read_pages_stream,
-    run_windowed_counts_complete,
-    stream_dedup_exact,
-    stream_dedup_watermarked,
-    stream_quality_gate,
-    stream_static_anti_corpus,
     stream_extract_to_parquet,
-    windowed_page_counts,
 )

@@ -4,19 +4,16 @@ The reference is strictly batch (single document, SURVEY.md section 2.4
 "Streaming: absent"), so this is engine capability beyond parity: a crawl
 landing zone consumed as a file stream, the SAME vectorized
 ``extract_articles`` transform applied to the unbounded DataFrame
-(mapInPandas composes with streaming), checkpointed exactly-once parquet
-output, and watermarked tumbling-window metrics for late-arriving pages.
+(mapInPandas composes with streaming), and checkpointed exactly-once
+parquet output.
 
 At scale: the file source lists incrementally (maxFilesPerTrigger bounds a
-micro-batch), state for the windowed agg is bounded by the watermark, and
-the parquet/Iceberg sink commits per micro-batch — the batch job's
-partitioning/salting applies unchanged inside ``foreachBatch`` when
-per-partition lineage is wanted.
+micro-batch) and the parquet/Iceberg sink commits per micro-batch — the
+batch job's partitioning/salting applies unchanged inside ``foreachBatch``
+when per-partition lineage is wanted.
 """
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
 
 from ..spark.job import extract_articles
 from ..spark.pages import PAGES_SCHEMA
@@ -61,288 +58,3 @@ def stream_extract_to_parquet(
     _await_or_stop(query, timeout_secs)
     return spark.read.parquet(output_dir)
 
-
-def windowed_page_counts(pages_stream, window="1 hour", watermark="2 hours"):
-    """Tumbling-window page counts with a late-data watermark — the
-    streaming metrics rollup (batch analog: events_hourly)."""
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .select(F.col("w").getField("start").alias("window_start"), "n_pages")
-    )
-
-
-def run_windowed_counts_complete(spark, input_dir, query_name, timeout_secs=600):
-    """Run the windowed rollup over everything in ``input_dir`` (memory sink,
-    complete mode, AvailableNow) and return the result as a DataFrame."""
-    counts = windowed_page_counts(read_pages_stream(spark, input_dir))
-    query = (
-        counts.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(query, timeout_secs)
-    return spark.table(query_name)
-
-
-def stream_dedup_exact(
-    spark, input_dir, checkpoint_dir, key_cols=("url",), query_name="stream_dedup",
-    timeout_secs=600,
-):
-    """Streaming exact dedup on the landing zone: ``dropDuplicates`` on the
-    key with dedup state checkpointed across micro-batches, so a url seen in
-    an earlier trigger (or an earlier bounded run resuming from the same
-    checkpoint) is never emitted again.  Bounded drain via AvailableNow.
-
-    At 10^12-document scale the unbounded-state form here becomes
-    ``dropDuplicatesWithinWatermark`` over the crawl timestamp so state is
-    evicted once the watermark passes — same plan shape, bounded memory."""
-    stream = read_pages_stream(spark, input_dir)
-    deduped = stream.select(*key_cols).dropDuplicates(list(key_cols))
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(query, timeout_secs)
-    return spark.table(query_name)
-
-
-def stream_dedup_watermarked(
-    spark,
-    input_dir,
-    checkpoint_dir,
-    key_cols=("url",),
-    ts_col="warc_ts",
-    watermark="2 hours",
-    query_name="stream_dedup_wm",
-    timeout_secs=600,
-):
-    """Bounded-state streaming dedup: ``dropDuplicatesWithinWatermark`` on
-    the key over the crawl timestamp — the 10^12-document form of
-    :func:`stream_dedup_exact`.  Dedup state for a key is EVICTED once the
-    watermark (max event time seen minus ``watermark``) passes the key's
-    last event, so worker state holds only the trailing window instead of
-    every key ever seen.  Spark's documented contract for the operator,
-    stated fully: (a) a duplicate arriving later than the watermark delay
-    is re-admitted, and (b) a row whose event time is already older than
-    the current watermark when it ARRIVES is dropped as late data — so
-    across multiple micro-batches, ``watermark`` must exceed the event-time
-    disorder of the arrival stream or sole copies of old-timestamped keys
-    are lost, not just un-deduped.  Size it to the crawl's out-of-orderness
-    (hours), not to taste.  Guarantee: each key emitted exactly once per
-    watermark window.
-
-    On a crawl landing zone this matches the data's arrival pattern:
-    re-fetches of a url land close together (same crawl segment), so a
-    watermark of hours dedups them with state proportional to arrival
-    rate x window, not corpus size."""
-    stream = read_pages_stream(spark, input_dir)
-    deduped = (
-        stream.select(*key_cols, ts_col)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(list(key_cols))
-        .select(*key_cols)
-    )
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(query, timeout_secs)
-    return spark.table(query_name)
-
-
-def advance_sessions(start, last, n, ts, gap_seconds, domain=None):
-    """Session-advance core shared by the stateful operator (pure, so the
-    cross-batch ordering semantics are unit-testable): fold sorted ``ts``
-    into the open session ``(start, last, n)``; returns the new open state
-    and the list of closed ``(domain, start, last, n)`` sessions.
-
-    An event at or before ``last`` (possible across micro-batches — sorting
-    is per batch only) merges into the open session instead of emitting a
-    spurious negative-gap split."""
-    closed = []
-    for t in ts:
-        if start is None:
-            start, last, n = t, t, 1
-        elif t <= last:
-            start = min(start, t)
-            n += 1
-        elif t - last > gap_seconds:
-            closed.append((domain, start, last, n))
-            start, last, n = t, t, 1
-        else:
-            last = t
-            n += 1
-    return (start, last, n), closed
-
-
-def domain_sessions(pages_stream, gap_seconds=120):
-    """Custom stateful streaming operator: per-domain crawl sessionization
-    via ``applyInPandasWithState`` (the engine's arbitrary-state surface —
-    windowed aggs cover only fixed windows; session boundaries depend on
-    data gaps, which needs explicit state).
-
-    Input stream schema: ``(domain STRING, epoch LONG)`` (event time as
-    epoch seconds — the deterministic form of ``warc_ts``).  State per
-    domain: the open session ``(start, last, n)``.  A session CLOSES when a
-    later event for the same domain arrives more than ``gap_seconds`` after
-    the previous one (data-driven closure); the still-open session stays in
-    state unemitted.  Callers that need end-of-input flushing append a
-    far-future sentinel event per domain (and production deployments use a
-    watermark + EventTimeTimeout instead — same function body, timeout
-    branch closing the open session).
-
-    Emits ``(domain, session_start, session_end, n_pages)`` per closed
-    session, in append mode.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("domain", StringType(), False),
-            StructField("session_start", LongType(), False),
-            StructField("session_end", LongType(), False),
-            StructField("n_pages", LongType(), False),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start", LongType(), False),
-            StructField("last", LongType(), False),
-            StructField("n", LongType(), False),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        domain = key[0]
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start = last = None
-            n = 0
-        ts = []
-        for pdf in pdfs:
-            ts.extend(int(t) for t in pdf["epoch"])
-        ts.sort()
-        (start, last, n), closed = advance_sessions(
-            start, last, n, ts, gap_seconds, domain
-        )
-        if start is not None:
-            state.update((start, last, n))
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["domain", "session_start", "session_end", "n_pages"]
-            )
-
-    return pages_stream.groupBy("domain").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def run_domain_sessions(spark, input_dir, query_name, gap_seconds=120, timeout_secs=600):
-    """Drain a (domain, epoch) parquet dir through the sessionizer
-    (memory sink, append mode, AvailableNow) and return the closed-session
-    DataFrame."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("domain", StringType(), False),
-            StructField("epoch", LongType(), False),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    sessions = domain_sessions(stream, gap_seconds=gap_seconds)
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(query, timeout_secs)
-    return spark.table(query_name)
-
-
-def stream_static_anti_corpus(
-    spark, input_dir, static_df, schema, key, query_name, checkpoint_dir,
-    timeout_secs=600,
-):
-    """Stream-static join: dedup a streaming increment against a STATIC
-    corpus — the streaming form of the recurring incremental-dedup job
-    (batch analogs: incremental_dedup_bloom / incremental_dedup_neardup).
-    Structured Streaming does not allow a stream-static left ANTI join,
-    so the supported shape is used: left OUTER against the marked static
-    key set, then filter where the static side is null — semantically
-    the anti-join, executed per micro-batch with the static side planned
-    once (broadcast when small, shuffled hash lookup otherwise).
-
-    At 10^12 docs the static side is the snapshot's key table (hash per
-    url/content) — at that scale the production variant swaps the raw
-    key set for its Bloom bitmap (textops.bloom_bitmap) exactly as the
-    batch job does, testing membership map-side per micro-batch."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    marked = (
-        static_df.select(key).distinct().withColumn("_in_corpus", F.lit(True))
-    )
-    new = (
-        stream.join(marked, key, "left_outer")
-        .filter(F.col("_in_corpus").isNull())
-        .drop("_in_corpus")
-    )
-    query = (
-        new.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(query, timeout_secs)
-    return spark.table(query_name)
-
-
-def stream_quality_gate(
-    spark, input_dir, checkpoint_dir, query_name="stream_quality", timeout_secs=600
-):
-    """Streaming quality gating on the landing zone: the Gopher word-level
-    rule bundle (the SAME `spark/quality.py::gopher_signals` expressions
-    the batch `gopher_quality_filter` query runs) applied per micro-batch
-    as a pure narrow projection — no state, no watermark, nothing
-    accumulates, so throughput scales with arrival rate at any corpus
-    size.  This is the gate a crawl pipeline runs BEFORE paying for
-    extraction or dedup state on junk pages.  Emits (url, n_words, keep)
-    for every non-blank page; bounded drain via AvailableNow."""
-    from ..spark.quality import gopher_signals
-
-    stream = read_pages_stream(spark, input_dir).filter(F.trim(F.col("text")) != "")
-    signals, _, keep = gopher_signals("text")
-    gated = stream.select(
-        "url",
-        signals["n_words"].cast("long").alias("n_words"),
-        keep.alias("keep"),
-    )
-    query = (
-        gated.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_or_stop(query, timeout_secs)
-    return spark.table(query_name)

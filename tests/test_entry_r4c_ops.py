@@ -895,25 +895,6 @@ class TestCrawlDiffReport:
         assert got == expected
 
 
-class TestStreamDedupAgainstCorpus:
-    def test_closed_form_and_matches_batch_bloom(self, spark):
-        """The stream-static anti form must admit exactly the changed
-        increment docs (%2==0 and %4!=0) — the identical contract the
-        batch incremental_dedup_bloom proves — since both compute the
-        same anti-join by different execution strategies."""
-        rows = sorted(
-            r.doc_id
-            for r in entry.stream_dedup_against_corpus_q(spark, SF_DIR).collect()
-        )
-        n_docs = entry._docs(spark, SF_DIR).count()
-        assert rows == [d for d in range(n_docs) if d % 2 == 0 and d % 4 != 0]
-        batch = sorted(
-            r.doc_id
-            for r in entry.incremental_dedup_bloom(spark, SF_DIR).collect()
-        )
-        assert rows == batch
-
-
 class TestQuantileGatedFilter:
     def test_gate_uses_sketch_median_and_keeps_half(self, spark):
         """The gate threshold must equal the histogram sketch's q=0.5

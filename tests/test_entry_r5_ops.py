@@ -459,39 +459,6 @@ def test_ann_recall_report_consistency(spark):
     assert rows[0].n_truth == len(truth0) and rows[0].n_ann == len(ann0)
 
 
-# ------------------------------------------------------ anchor profiles
-def test_anchor_text_profile_replay(spark):
-    """The inbound anchor profile must be the exact rollup of
-    page_outlinks: per target the inlink count, distinct referring
-    pages, and top-3 anchor terms ranked (count desc, term asc)."""
-    from collections import Counter, defaultdict
-
-    links = entry.page_outlinks(spark, SF_DIR).collect()
-    inlinks: Counter = Counter()
-    sources: dict = defaultdict(set)
-    terms: dict = defaultdict(Counter)
-    for r in links:
-        inlinks[r.target] += 1
-        sources[r.target].add(r.url)
-        for t in r.anchor_text.split(" "):
-            terms[r.target][t] += 1
-    got = defaultdict(dict)
-    for r in entry.anchor_text_profile(spark, SF_DIR).collect():
-        assert r.n_inlinks == inlinks[r.target]
-        assert r.n_sources == len(sources[r.target])
-        got[r.target][r.term_rank] = (r.term, r.term_count)
-    assert set(got) == set(inlinks)
-    for target, by_rank in got.items():
-        want = sorted(terms[target].items(), key=lambda kv: (-kv[1], kv[0]))
-        assert sorted(by_rank) == list(range(1, min(3, len(want)) + 1))
-        for rank, (term, cnt) in by_rank.items():
-            assert (term, cnt) == want[rank - 1], (target, rank)
-    # the /home targets aggregate across every page of a domain — the
-    # hot-domain skew case the docstring's scale argument is about
-    hot = [t for t in inlinks if t.endswith("hot.example.com/home")]
-    assert hot and inlinks[hot[0]] > 1
-
-
 # ------------------------------------------------------ filter funnel
 def test_filter_funnel_is_rollup_of_standalone_filters(spark):
     """The funnel must be the exact cumulative composition of the three

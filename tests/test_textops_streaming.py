@@ -1,5 +1,6 @@
-"""Tests for the dataset-level similarity/dedup operators (textops), the
-multimodal binary-column plumbing, and Structured Streaming ingestion.
+"""Tests for the dataset-level similarity/dedup operators (textops) and the
+multimodal binary-column plumbing (Structured Streaming extraction is
+tested in test_stream_extract.py).
 
 Correctness anchors:
 - MinHash/LSH: exact duplicates always collide; a verified pair's Jaccard
@@ -10,13 +11,10 @@ Correctness anchors:
   neighbours share the query's bucket (verified on a planted cluster).
 - Multimodal: schema/batch plumbing real; corrupt payloads isolate as
   status='error'; features are the deterministic fake-decode closed form.
-- Streaming: AvailableNow drain of a file stream == batch extraction on the
-  same input, row for row.
 """
 
 from __future__ import annotations
 
-import shutil
 import sys
 from pathlib import Path
 
@@ -26,7 +24,6 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from readability_spark.spark import textops
-from readability_spark.spark.job import extract_articles
 from readability_spark.spark.multimodal import (
     MAGIC,
     attach_payloads,
@@ -34,12 +31,7 @@ from readability_spark.spark.multimodal import (
     extract_media_features,
     fake_decode,
 )
-from readability_spark.spark.pages import pages_from_documents
 from readability_spark.spark.session import get_spark
-from readability_spark.streaming import (
-    run_windowed_counts_complete,
-    stream_extract_to_parquet,
-)
 
 
 @pytest.fixture(scope="module")
@@ -251,133 +243,6 @@ class TestMultimodalTransforms:
         assert by_id[1].status == "error" and by_id[2].status == "error"
 
 
-class TestStreaming:
-    def test_stream_drain_equals_batch(self, spark, docs, tmp_path_factory):
-        base = tmp_path_factory.mktemp("stream")
-        pages = pages_from_documents(docs)
-        pages.write.mode("overwrite").parquet(str(base / "input"))
-
-        streamed = stream_extract_to_parquet(
-            spark, str(base / "input"), str(base / "out"), str(base / "ckpt")
-        )
-        batch = extract_articles(spark.read.parquet(str(base / "input")))
-        cols = ["url", "title", "byline", "text_content", "length", "status"]
-        s = sorted(map(tuple, streamed.select(cols).collect()))
-        b = sorted(map(tuple, batch.select(cols).collect()))
-        assert s == b and len(s) == 5
-
-    def test_stream_resume_processes_only_new_files(self, spark, docs, tmp_path_factory):
-        base = tmp_path_factory.mktemp("stream_resume")
-        pages = pages_from_documents(docs)
-        pages.filter(F.col("url").contains("doc-0000") == False).write.mode(
-            "overwrite"
-        ).parquet(str(base / "input"))
-        first = stream_extract_to_parquet(
-            spark, str(base / "input"), str(base / "out"), str(base / "ckpt")
-        )
-        n_first = first.count()
-        # drop one more page file into the landing zone, re-drain
-        pages.limit(0).write.mode("append").parquet(str(base / "input"))
-        again = stream_extract_to_parquet(
-            spark, str(base / "input"), str(base / "out"), str(base / "ckpt")
-        )
-        # no new data -> no duplicate output rows (exactly-once sink)
-        assert again.count() == n_first
-
-    def test_quality_gate_stream_equals_batch(self, spark, docs, tmp_path_factory):
-        """The streamed Gopher gate must equal the same gate run as a plain
-        batch projection over the identical input — same shared
-        quality.gopher_signals expressions, same rows, same verdicts."""
-        import pyspark.sql.functions as FF
-
-        from readability_spark.spark.quality import gopher_signals
-        from readability_spark.streaming import stream_quality_gate
-
-        base = tmp_path_factory.mktemp("stream_quality")
-        pages = pages_from_documents(docs)
-        pages.write.mode("overwrite").parquet(str(base / "input"))
-
-        streamed = stream_quality_gate(
-            spark, str(base / "input"), str(base / "ckpt"),
-            query_name="quality_gate_test",
-        )
-        signals, _, keep = gopher_signals("text")
-        batch = (
-            spark.read.parquet(str(base / "input"))
-            .filter(FF.trim(FF.col("text")) != "")
-            .select(
-                "url",
-                signals["n_words"].cast("long").alias("n_words"),
-                keep.alias("keep"),
-            )
-        )
-        s = sorted(map(tuple, streamed.collect()))
-        b = sorted(map(tuple, batch.collect()))
-        assert s == b and len(s) > 0
-
-    def test_watermarked_dedup_emits_each_key_once(self, spark, docs, tmp_path_factory):
-        from readability_spark.streaming import stream_dedup_watermarked
-
-        base = tmp_path_factory.mktemp("stream_wm")
-        pages = pages_from_documents(docs)
-        pages.write.mode("overwrite").parquet(str(base / "input"))
-        pages.write.mode("append").parquet(str(base / "input"))  # duplicate drop
-
-        out = stream_dedup_watermarked(
-            spark, str(base / "input"), str(base / "ckpt"),
-            query_name="wm_dedup_test",
-        )
-        urls = [r.url for r in out.collect()]
-        # every url exactly once despite the double drop (both copies share
-        # one event time, so both sit inside the watermark window)
-        assert len(urls) == len(set(urls)) == 5
-        assert out.columns == ["url"]
-
-    def test_windowed_counts(self, spark, docs, tmp_path_factory):
-        base = tmp_path_factory.mktemp("stream_win")
-        pages_from_documents(docs).write.mode("overwrite").parquet(str(base / "input"))
-        counts = run_windowed_counts_complete(spark, str(base / "input"), "win_test")
-        # doc_id*37 seconds from 2026-01-01: all five land in hour zero
-        rows = counts.collect()
-        assert len(rows) == 1 and rows[0].n_pages == 5
-        assert str(rows[0].window_start) == "2026-01-01 00:00:00"
-
-
-class TestDomainSessions:
-    def test_gap_sessionization_with_sentinel_flush(self, spark, tmp_path_factory):
-        from readability_spark.streaming.stream import run_domain_sessions
-
-        d = tmp_path_factory.mktemp("sessions")
-        rows = [
-            # domain a: two sessions (gap 500 > 120 between 200 and 700)
-            ("a.example.com", 100),
-            ("a.example.com", 150),
-            ("a.example.com", 200),
-            ("a.example.com", 700),
-            ("a.example.com", 750),
-            # domain b: one session
-            ("b.example.com", 100),
-            # sentinels flush the final open sessions
-            ("a.example.com", 10_000_000_000),
-            ("b.example.com", 10_000_000_000),
-        ]
-        spark.createDataFrame(rows, "domain string, epoch long").write.parquet(
-            str(d / "input")
-        )
-        out = run_domain_sessions(
-            spark, str(d / "input"), "test_domain_sessions", gap_seconds=120
-        )
-        got = {
-            (r.domain, r.session_start): (r.session_end, r.n_pages)
-            for r in out.collect()
-        }
-        assert got == {
-            ("a.example.com", 100): (200, 3),
-            ("a.example.com", 700): (750, 2),
-            ("b.example.com", 100): (100, 1),
-        }
-
-
 class TestWinnowing:
     def test_shared_run_guarantees_shared_fingerprint(self, spark):
         from readability_spark.spark.textops import winnow_fingerprints
@@ -427,42 +292,6 @@ class TestSignLSH:
         assert buckets[3] == "00"
         pairs = lsh_cosine_pairs(emb, planes, threshold=0.9).collect()
         assert [(p.vec_a, p.vec_b, p.cosine) for p in pairs] == [(1, 2, 1.0)]
-
-
-class TestSessionAdvanceCore:
-    """Cross-batch ordering semantics of the sessionizer state machine
-    (streaming/stream.py::advance_sessions)."""
-
-    def test_in_order_gap_splits(self):
-        from readability_spark.streaming.stream import advance_sessions
-
-        state, closed = advance_sessions(None, None, 0, [10, 20, 300], 120, "d")
-        assert closed == [("d", 10, 20, 2)]
-        assert state == (300, 300, 1)
-
-    def test_out_of_order_cross_batch_event_merges(self):
-        from readability_spark.streaming.stream import advance_sessions
-
-        # batch 1 left an open session ending at t=200
-        state, closed = advance_sessions(100, 200, 3, [150], 120, "d")
-        # a late t=150 must NOT split (200-150 would be a negative gap):
-        # it merges into the open session
-        assert closed == []
-        assert state == (100, 200, 4)
-
-    def test_out_of_order_event_before_start_extends_start(self):
-        from readability_spark.streaming.stream import advance_sessions
-
-        state, closed = advance_sessions(100, 200, 3, [50], 120, "d")
-        assert closed == []
-        assert state == (50, 200, 4)
-
-    def test_late_then_new_session(self):
-        from readability_spark.streaming.stream import advance_sessions
-
-        state, closed = advance_sessions(100, 200, 3, [150, 900], 120, "d")
-        assert closed == [("d", 100, 200, 4)]
-        assert state == (900, 900, 1)
 
 
 class TestMultimodalNullMetadata:

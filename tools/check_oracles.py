@@ -40,28 +40,13 @@ def table_hash(rows, cols):
 
 def main(sf_dir="/root/testdata/sf0.01", only=None):
     spark = get_spark(app_name="oracle-check", master="local[8]")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    con = duckdb_views(sf_dir)
     failures = []
-    for name, fn in queries.items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = sdf.columns
-        if name not in oracles:
-            print(f"{name:28s} rows={len(srows):6d}  (rows-only check, no oracle)")
-            continue
-        orel = con.execute(oracles[name])
-        ocols = [d[0] for d in orel.description]
-        orows = orel.fetchall()
+        ok, srows, scols, orows, ocols = compare(spark, con, name, sf_dir)
         sh, oh = table_hash(srows, scols), table_hash(orows, ocols)
-        ok = len(srows) == len(orows) and sorted(scols) == sorted(ocols) and sh == oh
         status = "OK " if ok else "FAIL"
         print(f"{name:28s} {status} spark={len(srows):6d} duck={len(orows):6d} hash {sh} vs {oh}")
         if not ok:
@@ -82,6 +67,34 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
         sys.exit(1)
     print("all oracle checks passed")
 
+
+
+def duckdb_views(sf_dir):
+    """DuckDB connection with one view per ``TABLES`` parquet in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare(spark, con, name, sf_dir):
+    """Run entry ``name`` on Spark and its oracle on ``con``; returns
+    (ok, spark rows, spark columns, duck rows, duck columns), where ok means
+    equal row count, column names and value hash."""
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    scols = sdf.columns
+    orel = con.execute(entrymod.oracle_sql()[name])
+    ocols = [d[0] for d in orel.description]
+    orows = orel.fetchall()
+    ok = (
+        len(srows) == len(orows)
+        and sorted(scols) == sorted(ocols)
+        and table_hash(srows, scols) == table_hash(orows, ocols)
+    )
+    return ok, srows, scols, orows, ocols
 
 if __name__ == "__main__":
     main(only=set(sys.argv[1:]) or None)

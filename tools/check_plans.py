@@ -601,19 +601,6 @@ def main():
         exact_exchanges=1,
     )
 
-    # anchor_text_profile: the Python outlink extraction must NOT appear
-    # in the query plan — it runs ONCE into the localCheckpoint barrier
-    # (pruning-below-exchange would otherwise re-run it per grain), and
-    # both aggregation grains read the materialized link table
-    # (ExistingRDD); nothing cartesian, no sort-merge at this sf
-    check(
-        "anchor_profile_single_extraction_pass",
-        allq["anchor_text_profile"](spark, SF_DIR),
-        must=[r"ExistingRDD", r"Window", r"HashAggregate"],
-        must_not=[r"MapInPandas", r"ArrowEvalPython", r"CartesianProduct"],
-        max_exchanges=5,
-    )
-
     # ann_recall_report: truth + served top-ks are all heap
     # TakeOrderedAndProject branches against broadcast 1-row queries —
     # ZERO shuffle exchanges for the whole 3-query eval
@@ -665,16 +652,6 @@ def main():
         ],
         max_exchanges=7,
         materialize=True,
-    )
-
-    # 34l11. Page outlinks: a single vectorized extraction pass — the
-    # MapInPandas anchor walk is the operator (same design as the
-    # extraction UDF), with NO exchange, NO join, NO aggregate anywhere.
-    check(
-        "page_outlinks_map_only",
-        allq["page_outlinks"](spark, SF_DIR),
-        must=[r"MapInPandas"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate", r"Sort\b"],
     )
 
     # 34l10. Tokenizer fertility: same discipline as bpe_tokenize — the
@@ -1074,20 +1051,6 @@ def main():
         exact_exchanges=0,
     )
 
-    # canonical_link_dedup: one vectorized DOM extraction pass (the
-    # MapInPandas stage IS the design), one aggregate on the canonical
-    # key — exactly one exchange, no joins.  min(string) has an immutable
-    # aggregation buffer, so Spark compiles a SortAggregate (partial
-    # map-side like hash agg; its Sorts are per-partition on the group
-    # key, never a corpus-global order)
-    check(
-        "canonical_dedup_one_extraction_one_agg",
-        allq["canonical_link_dedup"](spark, SF_DIR),
-        must=[r"MapInPandas", r"SortAggregate|HashAggregate"],
-        must_not=[r"Join", r"Sort\b.*global=true", r"Window"],
-        exact_exchanges=1,
-    )
-
     # pq_residual_report: coarse assignment, the inlined centroid-vector
     # lookup, the residual subtraction and BOTH encodes chain as narrow
     # projections — zero exchanges, zero joins, no Python
@@ -1157,33 +1120,6 @@ def main():
         must=[r"HashAggregate", r"Window"],
         must_not=[r"Join", r"MapInPandas", r"ArrowEvalPython"],
         max_exchanges=2,
-    )
-
-    # robots_txt_filter: a frontier filters in place — one vectorized
-    # decision pass, ZERO exchanges, no joins
-    check(
-        "robots_filter_map_only",
-        allq["robots_txt_filter"](spark, SF_DIR),
-        must=[r"MapInPandas"],
-        must_not=[r"Join", r"HashAggregate", r"Window", r"Sort\b"],
-        exact_exchanges=0,
-    )
-
-    # crawl_frontier_plan: the robots gate stays the zero-shuffle
-    # vectorized pass (doc_id/host ride through keep_cols — no join back
-    # onto the url), PageRank contributes its iteration exchanges (the
-    # 1-row count crossJoin is the intended BroadcastNestedLoopJoin —
-    # pagerank's own gate), the rank join is a doc_id equi-join (nothing
-    # cartesian), the politeness budget is ONE host-keyed window; the
-    # exchange budget is PageRank's k-iteration chain + the gate join +
-    # the window — bounded, never quadratic
-    check(
-        "frontier_plan_composition",
-        allq["crawl_frontier_plan"](spark, SF_DIR),
-        must=[r"MapInPandas", r"Window"],
-        must_not=[r"CartesianProduct"],
-        max_exchanges=14,
-        materialize=True,
     )
 
     # image_ahash_neardup: same contract as the text SimHash gate — the
