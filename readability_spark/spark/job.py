@@ -8,6 +8,9 @@ Design (SURVEY.md sections 3.4 / 2.5):
 - the per-document 16-stage DOM pipeline runs inside ONE ``mapInPandas``
   invocation per row batch (Arrow exchange is the only JVM<->Python copy;
   no stage-per-UDF chaining, no driver-side loops over rows);
+- every ``mapInPandas`` body calls ``prepare_python_worker()`` first, so
+  PySpark's per-task ``importlib.invalidate_caches()`` stops re-parsing the
+  zips on the worker's ``sys.path``;
 - partition attribution is logical: ``partition_id = pmod(xxhash64(url), N)``
   — stable across cluster sizes, so lineage written at N executors resumes
   correctly at 4N;
@@ -44,6 +47,7 @@ from pyspark.sql.types import (
 
 from ..options import DEFAULT_OPTIONS
 from ..pipeline import extract_row
+from .session import prepare_python_worker
 from .sources import append_ref, read_ref
 
 ARTICLE_FIELDS = [
@@ -71,6 +75,9 @@ STATUS_FIELDS = [
 # inflate them).  Which partitions committed — the resume contract — depends
 # only on the (run_id, partition_id, status) rows, never on these counts;
 # exact counts are always derivable from the output table itself.
+# docs_per_sec is docs / sum(extract_ms) over the partition's rows: a per-core
+# row rate inside extract_row, not job throughput (JobReport.docs_per_sec is
+# docs / job wall time).
 LINEAGE_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),
@@ -196,6 +203,7 @@ def extract_articles(
         raise ValueError(f"unknown html_codec: {html_codec!r}")
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         import gzip as _gzip
 
         for pdf in batches:
@@ -276,6 +284,7 @@ def readerable_flags(df: DataFrame, html_col="html", url_col="url") -> DataFrame
     )
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             flags, scores = [], []
             for raw in pdf[html_col]:

@@ -32,6 +32,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .session import prepare_python_worker
+
 #: env var naming a trained fasttext supervised model file; the real
 #: branch activates only when BOTH the package and the file exist
 MODEL_PATH_ENV = "SPARK_GRAFT_QUALITY_MODEL"
@@ -400,6 +402,7 @@ def score_auto(
     import pandas as pd
 
     def run_model(batches):
+        prepare_python_worker()
         for pdf in batches:
             texts = pdf[text_col].tolist()
             scores = scorer(texts)

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .session import prepare_python_worker
+
 MEDIA_TYPES = ("image/png", "audio/wav", "video/mp4")
 
 #: 4-byte magic prefixed to every synthetic payload
@@ -216,6 +218,7 @@ def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
     payloads stay opaque bytes end to end."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             payloads, ws, hs, statuses = [], [], [], []
             for payload, mt in zip(pdf["payload"], pdf["media_type"]):
@@ -310,6 +313,7 @@ def sample_video_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     video yields a single status='error' row so failures stay visible."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             ids, idxs, tss, md5s, statuses = [], [], [], [], []
             for doc_id, payload, mt in zip(
@@ -348,6 +352,7 @@ def extract_media_features(df: DataFrame) -> DataFrame:
     mapInPandas pass; per-row failures become status='error' rows."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             n_bytes, md5s, ws, hs, statuses = [], [], [], [], []
             for payload, mt in zip(pdf["payload"], pdf["media_type"]):

@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .session import prepare_python_worker
+
 #: fraction of rows assigned to the hot domain to exercise skew salting
 HOT_DOMAIN = "hot.example.com"
 
@@ -79,6 +81,7 @@ def synthesize_html(doc_id, text, lang):
 
 
 def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    prepare_python_worker()
     for pdf in batches:
         urls = [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])]
         htmls = [
@@ -153,6 +156,7 @@ def junk_pages_from_documents(documents_df):
     input for the extract_prepped_text driver query."""
 
     def synth(batches):
+        prepare_python_worker()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -221,6 +225,7 @@ def media_pages_from_documents(documents_df):
     input for the extract_media_text driver query."""
 
     def synth(batches):
+        prepare_python_worker()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -274,6 +279,7 @@ def bench_pages_from_documents(documents_df, n_paragraphs=80, n_nav_links=20):
     """documents -> heavy bench pages (same schema as pages_from_documents)."""
 
     def synth(batches):
+        prepare_python_worker()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -311,6 +317,7 @@ def gzip_html(pages_df):
     import gzip as _gzip
 
     def compress(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             out = pdf.copy()
             out["html"] = [

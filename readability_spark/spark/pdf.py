@@ -18,6 +18,7 @@ from pyspark.sql.types import (
 )
 
 from ..pdftext import build_simple_pdf, extract_pdf_text
+from .session import prepare_python_worker
 
 PDF_RESULT_FIELDS = [
     StructField("pdf_text", StringType(), True),
@@ -33,6 +34,7 @@ def synthesize_pdfs(docs: DataFrame) -> DataFrame:
     decoders run in the oracle-checked path."""
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -58,6 +60,7 @@ def extract_pdf_pages(df: DataFrame, pdf_col="pdf") -> DataFrame:
     out_cols = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             texts, chars, statuses, errors = [], [], [], []
             for payload in pdf[pdf_col]:

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from .pages import PAGES_SCHEMA
+from .session import prepare_python_worker
 
 _GZIP_MAGIC = b"\x1f\x8b"
 
@@ -142,6 +143,7 @@ def read_warc_pages(spark, path) -> DataFrame:
     files = spark.read.format("binaryFile").load(path).select("content")
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             rows = []
             for blob in pdf["content"]:
@@ -201,6 +203,7 @@ def read_wet_documents(spark, path) -> DataFrame:
     files = spark.read.format("binaryFile").load(path).select("content")
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             rows = []
             for blob in pdf["content"]:
@@ -280,6 +283,7 @@ def read_wat_metadata(spark, path) -> DataFrame:
     files = spark.read.format("binaryFile").load(path).select("content")
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             rows = []
             for blob in pdf["content"]:

@@ -23,7 +23,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from readability_spark.fixtures import build_rows, golden_for
 from readability_spark.spark.job import extract_articles, run_job
-from readability_spark.spark.session import get_spark
+from readability_spark.spark.session import get_spark, prepare_python_worker
 
 # 97 families: 9/20 of rows cycle the 96 non-plain families, so the >=3-
 # per-family invariant needs N_ROWS*9/20 >= 3*96 = 288; 660 gives 297
@@ -372,3 +372,46 @@ def test_html_codec_gzip_roundtrip(spark, pages_df, extracted):
     # unknown codec rejected loudly
     with pytest.raises(ValueError):
         extract_articles(pages_df, html_codec="zstd")
+
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="zipimporter re-reads lazily on 3.13+")
+def test_worker_invalidate_caches_keeps_zip_directories(spark):
+    """On the real worker sys.path (pyspark.zip, py4j, the spark-core jar)
+    PySpark's per-task importlib.invalidate_caches() re-reads no unchanged
+    archive once prepare_python_worker has run, on every task."""
+
+    def count_reads(batches):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        prepare_python_worker()
+        reads = []
+        read = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        for _ in batches:
+            pass
+        importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        yield pd.DataFrame({"reads": [len(reads)], "importers": [importers]})
+
+    rows = (
+        spark.range(8, numPartitions=8)
+        .mapInPandas(count_reads, "reads long, importers long")
+        .collect()
+    )
+    assert len(rows) == 8
+    assert all(r.importers > 0 for r in rows)
+    assert [r.reads for r in rows] == [0] * 8
