@@ -19,8 +19,11 @@ Design (SURVEY.md sections 3.4 / 2.5):
   reducers while keeping the logical partition key intact.
 
 At 100 TB the same plan holds: the parquet/Iceberg scan prunes on the
-partition transform, the repartition is the only shuffle, and the write is
-an idempotent append keyed by (run_id, partition_id).
+partition transform and the repartition is the only shuffle.  The write
+is an at-least-once append per commit group, not an idempotent one: a
+group is appended to the output first and recorded in the lineage table
+second, so a run that dies between the two appends that group again on
+resume, and its urls then have duplicate output rows.
 """
 
 from __future__ import annotations
@@ -497,17 +500,9 @@ def run_job(
     ``("title", "text_content", "length", "lang")``.
     """
     t_start = time.time()
-    trace = os.environ.get("READABILITY_JOB_TRACE") == "1"
-
-    def _t(label, t0):
-        if trace:
-            print(f"JOB_TRACE {label}={time.time() - t0:.1f}s", flush=True)
-
     pages = with_partition_id(pages_df, num_partitions)
 
-    t0 = time.time()
     done = completed_partitions(spark, lineage_path, run_id)
-    _t("lineage_check", t0)
     todo = [p for p in range(num_partitions) if p not in done]
 
     groups = [
@@ -519,7 +514,6 @@ def run_job(
     processed = 0
 
     for group in groups:
-        t0 = time.time()
         started_at = pd.Timestamp.utcnow().tz_localize(None)
         subset = pages.filter(F.col("partition_id").isin(group))
         subset = with_salt(subset, salt_n)
@@ -538,9 +532,7 @@ def run_job(
             html_codec=html_codec,
         )
         append_ref(extracted, output_path, ("partition_id",))
-        _t("extract_write", t0)
         finished_at = pd.Timestamp.utcnow().tz_localize(None)
-        t0 = time.time()
 
         by_pid = acc.value
         lineage_rows = []
@@ -563,10 +555,7 @@ def run_job(
             total_ok += ok
             total_failed += failed
             processed += 1
-        _t("metrics_acc", t0)
-        t0 = time.time()
         _append_lineage(spark, lineage_rows, lineage_path)
-        _t("lineage_write", t0)
 
     wall = time.time() - t_start
     return JobReport(

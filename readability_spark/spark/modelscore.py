@@ -195,10 +195,10 @@ def classifier_train(
 ) -> DataFrame:
     """TRAIN the hashed-linear quality classifier — full-batch gradient
     descent over the corpus, completing the scoring story the way
-    `bpe_train` completes `bpe_tokenize` and `textops.ivf_train` completes
-    `ann_ivf_topk`: `quality_classifier_hashed`/`score_auto` apply a weight
-    vector, this learns one from weak-supervision rule labels (the
-    fasttext-bootstrap recipe CCNet/LLaMA-style pipelines use).
+    `bpe_train` completes `bpe_tokenize`: `quality_classifier_hashed`/
+    `score_auto` apply a weight vector, this learns one from
+    weak-supervision rule labels (the fasttext-bootstrap recipe
+    CCNet/LLaMA-style pipelines use).
 
     Model: logit z = sum_j w_j * (f_j / n) + b over hashed bag-of-words
     frequencies; squash p = 0.5 + 0.5 * z/(1+|z|) (the Elliott "fast
@@ -212,10 +212,9 @@ def classifier_train(
     1. **gradient** — ONE corpus-scan aggregate: each document's D+1
        gradient contributions are quantized to `floor(g * 2^24 + 0.5)`
        BIGINTs map-side and integer-summed (order-independent, so the
-       learned weights are bit-identical regardless of partitioning — the
-       `ivf_train` fixed-point device); output is ONE row of D+1 sums no
-       matter the corpus size, map-side combine caps the shuffle at D+1
-       values per task.
+       learned weights are bit-identical regardless of partitioning);
+       output is ONE row of D+1 sums no matter the corpus size, map-side
+       combine caps the shuffle at D+1 values per task.
     2. **update** — w' = w - lr * (S / 2^24) / N computed on the 1-row
        frames; the new weights ride back into the next round's plan as a
        broadcast 1-row cross join (never a corpus shuffle).
@@ -311,8 +310,7 @@ def classifier_score_trained(
     loop, then score every document with the EXACT final weights — the
     unrounded doubles still in the 1-row weight frame, broadcast into a
     map-side scoring projection (no driver round-trip, no rounding
-    seam; the same closed-loop consumption `cluster_mix_report` gives
-    the IVF codebook).  p is the training squash (Elliott rational), so
+    seam).  p is the training squash (Elliott rational), so
     keep == (p >= 0.5) == (z >= 0), and every output double is
     bit-identical to the oracle's replay of the identical arithmetic.
 

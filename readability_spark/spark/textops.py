@@ -482,129 +482,6 @@ def ann_ivf_topk(
     )
 
 
-#: fixed-point scale for ivf_train's centroid-mean sums: quantizing each
-#: coordinate to round(x * 2^20) makes the per-cluster sums exact integers,
-#: so the learned means are bit-identical regardless of aggregation order
-#: (double summation over a shuffled corpus is order-dependent; integer
-#: summation is not) — the property that lets a DuckDB oracle replay the
-#: whole training loop hash-exactly
-IVF_TRAIN_FP = 1 << 20
-
-
-def ivf_train(
-    emb: DataFrame,
-    k=4,
-    iters=3,
-    id_col="vec_id",
-    vec_col="embedding",
-    fp=IVF_TRAIN_FP,
-) -> DataFrame:
-    """Train the IVF coarse codebook itself — Lloyd's k-means over the
-    embedding corpus, the missing half next to `ivf_assign`/`ann_ivf_topk`
-    which consume an already-trained codebook (the same completion
-    `bpe_train` is to `bpe_tokenize`).
-
-    Per iteration (the classic distributed-Lloyd shape, cf. spark.ml
-    KMeans):
-
-    1. **assign** — the current K centroids are collapsed into ONE row
-       (``collect_list`` of (cid, cvec) structs; K is a contract constant,
-       so the row is bounded) and broadcast; every corpus vector computes
-       its max-cosine centroid MAP-SIDE via an ``array_max`` fold over the
-       broadcast codebook — no corpus shuffle, no argmax groupBy, the
-       `ivf_assign` expression with the literal codebook swapped for a
-       broadcast column so the whole loop stays lazy in one plan.
-       Tie-break: higher cosine, then lower centroid_id.
-    2. **update** — per-cluster mean via ONE bounded-output aggregate:
-       posexplode the fixed-point-quantized coordinates and
-       ``groupBy(centroid_id, pos)``; map-side combine reduces the shuffle
-       to <= K*dim rows per map task no matter the corpus size.  Empty
-       clusters keep their previous centroid (standard Lloyd convention),
-       via a K-row left join.
-
-    The corpus is scanned once per iteration and NEVER shuffled — the only
-    exchanges carry <= K*dim aggregate rows.  All cosine arithmetic is
-    forced to double (parquet embeddings are float32) with the same
-    left-to-right fold as `topk_cosine`/`decontam_semantic`, and the means
-    fed into iteration i+1 are derived from exact integer sums, so both
-    engines run iteration i+1 on IDENTICAL doubles.
-
-    Returns the trained codebook as flat rows — the post-final-assignment
-    cluster stats: (centroid_id, pos, sum_fixed, cluster_size, centroid)
-    where centroid = sum_fixed / cluster_size / fp rounded to 6 dp.
-    Feed through `codebook_from_training` to consume it with
-    `ann_ivf_topk`."""
-    vec = F.col(vec_col).cast("array<double>")
-    emb_d = emb.select(F.col(id_col), vec.alias("v"))
-    cent = emb_d.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("cid"), F.col("v").alias("cvec")
-    )
-    quant = F.transform(
-        F.col("v"), lambda x: F.floor(x * F.lit(float(fp)) + F.lit(0.5))
-    )
-    stats = None
-    for _ in range(iters):
-        cb = cent.agg(F.collect_list(F.struct("cid", "cvec")).alias("cb"))
-        best = F.array_max(
-            F.transform(
-                F.col("cb"),
-                lambda c: F.struct(
-                    _cosine(F.col("v"), c["cvec"]).alias("cc"),
-                    (-c["cid"]).alias("neg"),
-                ),
-            )
-        )
-        assigned = emb_d.crossJoin(F.broadcast(cb)).select(
-            F.col(id_col), F.col("v"), (-best["neg"]).alias("cid")
-        )
-        stats = (
-            assigned.select("cid", F.posexplode(quant).alias("pos", "qv"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        mean = F.col("s").cast("double") / F.col("n") / F.lit(float(fp))
-        rebuilt = stats.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("pos"), mean.alias("m")))),
-                lambda r: r["m"],
-            ).alias("mvec")
-        )
-        cent = cent.join(rebuilt, "cid", "left").select(
-            "cid", F.coalesce(F.col("mvec"), F.col("cvec")).alias("cvec")
-        )
-    if stats is None:  # iters == 0: degenerate, return the init stats shape
-        stats = (
-            emb_d.filter(F.col(id_col) < k)
-            .select(F.col(id_col).alias("cid"), F.posexplode(quant).alias("pos", "qv"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-    mean = F.col("s").cast("double") / F.col("n") / F.lit(float(fp))
-    return stats.select(
-        F.col("cid").alias("centroid_id"),
-        F.col("pos"),
-        F.col("s").cast("long").alias("sum_fixed"),
-        F.col("n").cast("long").alias("cluster_size"),
-        F.round(mean, 6).alias("centroid"),
-    )
-
-
-def codebook_from_training(trained: DataFrame):
-    """Collect `ivf_train` output (bounded by K*dim rows, a contract
-    constant) into the (cid, [double]) codebook list `ivf_assign` and
-    `ann_ivf_topk` consume — centroids reconstructed from the exact
-    integer sums, not the rounded display column."""
-    rows = trained.select("centroid_id", "pos", "sum_fixed", "cluster_size").collect()
-    by_cid = {}
-    for r in rows:
-        by_cid.setdefault(int(r[0]), []).append(
-            (int(r[1]), int(r[2]) / int(r[3]) / float(IVF_TRAIN_FP))
-        )
-    return [
-        (cid, [m for _, m in sorted(dims)]) for cid, dims in sorted(by_cid.items())
-    ]
-
-
 def winnow_fingerprints(
     docs: DataFrame, k=5, w=4, id_col="doc_id", text_col="text", extra_cols=()
 ) -> DataFrame:
@@ -816,72 +693,6 @@ def connected_components(
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-def _bloom_positions(col, num_bits, num_hashes):
-    """The ``num_hashes`` bit positions a value sets/tests in a Bloom filter
-    of ``num_bits`` bits: xxhash64 seeded per lane by a literal prefix,
-    folded into [0, num_bits).  Pure JVM-side expressions."""
-    return [
-        F.pmod(F.xxhash64(F.concat(F.lit(f"{j}:"), col)), F.lit(num_bits))
-        for j in range(num_hashes)
-    ]
-
-
-def bloom_bitmap(df: DataFrame, col, num_bits=1 << 20, num_hashes=4):
-    """Build a Bloom-filter bitmap over ``df[col]`` with pure DataFrame ops
-    (PySpark does not expose ``DataFrameStatFunctions.bloomFilter`` or the
-    internal ``bloom_filter_agg`` SQL function, so the filter is assembled
-    from built-ins): each value sets ``num_hashes`` bit positions; positions
-    are packed into 64-bit words with a ``bit_or`` aggregate; the resulting
-    word table — at most ``num_bits/64`` rows, a CONFIG constant independent
-    of the input size — is collected into a Python list of longs suitable
-    for ``F.lit`` re-broadcast (the same small-by-contract collect as
-    ``collect_codebook``).
-
-    Returns ``(bitmap_words, num_bits)`` where ``bitmap_words[i]`` holds
-    bits ``[64*i, 64*i+63]``.
-
-    Scale: building the bitmap is one map-side-combined groupBy on the word
-    index (≤ num_bits/64 groups), so the shuffle volume is bounded by the
-    bitmap size no matter how large ``df`` is.  Sizing follows the standard
-    Bloom math (num_bits ≈ 1.44 · k · n for FPP 2^-k); false positives only
-    cost extra rows through the exact verify tier — never wrong answers."""
-    num_words = num_bits // 64
-    pos = F.explode(F.array(*_bloom_positions(F.col(col), num_bits, num_hashes)))
-    mask = F.call_function(
-        "shiftleft", F.lit(1).cast("long"), (F.col("pos") % 64).cast("int")
-    )
-    words = (
-        df.select(pos.alias("pos"))
-        .select((F.col("pos") / 64).cast("int").alias("word"), mask.alias("mask"))
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-        .collect()
-    )
-    bitmap = [0] * num_words
-    for r in words:
-        bitmap[r.word] = r.bits
-    return bitmap, num_bits
-
-
-def bloom_might_contain(bitmap, col, num_hashes=4):
-    """Map-side Bloom membership predicate against a bitmap built by
-    ``bloom_bitmap``: true iff ALL ``num_hashes`` bit positions of ``col``
-    are set.  The bitmap rides the plan as an array<long> literal (same
-    inlining pattern as the IVF codebook) — zero joins, zero shuffles;
-    guaranteed no false negatives, so ``NOT bloom_might_contain(...)`` rows
-    are definitively absent and can skip any exact verify join."""
-    arr = F.lit(bitmap)
-    cond = None
-    for pos in _bloom_positions(col, len(bitmap) * 64, num_hashes):
-        word = F.element_at(arr, (pos / 64).cast("int") + 1)
-        mask = F.call_function(
-            "shiftleft", F.lit(1).cast("long"), (pos % 64).cast("int")
-        )
-        c = word.bitwiseAND(mask) != 0
-        cond = c if cond is None else cond & c
-    return cond
-
-
 def semdedup(
     emb: DataFrame,
     centroids,
@@ -981,7 +792,7 @@ def pq_codebooks_from_vectors(
     """Slice K bounded training vectors into M sub-codebooks.
 
     ``train`` must be small by contract (K codewords per subquantizer — a
-    real pipeline k-means-trains each sub-codebook the `ivf_train` way;
+    real pipeline k-means-trains each sub-codebook;
     the codebook is K*dsub*M floats regardless of corpus size, so the
     collect here is bounded by construction, same as `collect_codebook`).
     Rows are sorted by id so codes are deterministic.  Returns a list of

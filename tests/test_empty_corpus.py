@@ -17,6 +17,7 @@ sources and are exercised in test_stream_extract.py.)
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -31,6 +32,7 @@ from check_oracles import TABLES, compare, duckdb_views  # noqa: E402
 from readability_spark.spark.session import get_spark  # noqa: E402
 
 SRC_SF = "/root/testdata/sf0.001"
+CATALOG = Path(__file__).resolve().parents[1] / "QUERIES.md"
 
 
 @pytest.fixture(scope="module")
@@ -52,6 +54,8 @@ def empty_sf(tmp_path_factory):
 
 def test_every_query_matches_its_oracle(spark):
     assert sorted(entry.oracle_sql()) == sorted(entry.queries())
+    listed = re.findall(r"^\| `(\w+)` \|", CATALOG.read_text(), re.M)
+    assert sorted(listed) == sorted(entry.queries()), "regenerate QUERIES.md"
     con = duckdb_views(SRC_SF)
     failures = [
         name for name in entry.queries() if not compare(spark, con, name, SRC_SF)[0]

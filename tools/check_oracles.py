@@ -15,7 +15,7 @@ import duckdb
 import __spark_entry__ as entrymod
 from readability_spark.spark.session import get_spark
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "documents embeddings".split()
 
 
 def norm_cell(v):

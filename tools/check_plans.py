@@ -185,28 +185,11 @@ def main():
         exact_exchanges=1,
     )
 
-    # 8. decontamination probe: benchmark hash set broadcasts (map-only
-    # probe of the corpus side — no sort-merge shuffle of the candidates)
     import __spark_entry__ as entrymod
 
     allq = entrymod.queries()
-    check(
-        "decontam_broadcast_probe",
-        allq["decontam_ngram_overlap"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin"],
-    )
 
-    # 9. repetition filter is a pure narrow projection over the scan:
-    # no exchange, no join, no aggregate
-    check(
-        "repetition_filter_map_only",
-        allq["repetition_filter"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate"],
-    )
-
-    # 10. stratified sampler: pure map-side filter, nothing else
+    # 8. stratified sampler: pure map-side filter, nothing else
     check(
         "sample_stratified_map_only",
         allq["sample_stratified"](spark, SF_DIR),
@@ -214,26 +197,7 @@ def main():
         must_not=[r"Exchange", r"Join", r"HashAggregate"],
     )
 
-    # 11. paragraph dedup: the chunk/explode is narrow; both window
-    # functions share ONE hash partitioning on para_hash — exactly one
-    # Exchange in the whole plan, no join
-    check(
-        "paragraph_dedup_one_exchange",
-        allq["paragraph_dedup"](spark, SF_DIR),
-        must=[r"Generate[\s\S]*Scan parquet"],
-        must_not=[r"Join"],
-        exact_exchanges=1,
-    )
-
-    # 12. PII scrub: pure narrow projection (regexp built-ins), nothing else
-    check(
-        "pii_scrub_map_only",
-        allq["pii_scrub"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate"],
-    )
-
-    # 13. Gopher rule bundle: pure narrow projection like repetition_filter
+    # 9. Gopher rule bundle: pure narrow projection over the scan
     check(
         "gopher_quality_filter_map_only",
         allq["gopher_quality_filter"](spark, SF_DIR),
@@ -241,64 +205,7 @@ def main():
         must_not=[r"Exchange", r"Join", r"HashAggregate"],
     )
 
-    # 14. curated_corpus: the WHOLE end-to-end curation pipeline costs
-    # exactly one Exchange (the md5(text) canonical window) and has NO
-    # join — the gate/canonical filter/scrub are narrow post-window ops
-    check(
-        "curated_corpus_one_exchange",
-        allq["curated_corpus"](spark, SF_DIR),
-        must_not=[r"Join"],
-        exact_exchanges=1,
-    )
-
-    # 15. dedup_clusters edge stage: the document-frequency skew guard
-    # (left-anti against hot hashes) must be present in the plan, and the
-    # self-join must be a hash equi-join — never nested-loop/cartesian
-    from __spark_entry__ import _dedup_cluster_edges
-
-    check(
-        "dedup_cluster_edges_df_guard",
-        _dedup_cluster_edges(spark, SF_DIR),
-        must=[r"LeftAnti"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-    )
-
-    # 16. repeated_ngram_spans: the join-back of the small repeated-hash
-    # set must broadcast (AQE decides at runtime, hence materialize) —
-    # the corpus-sized gram stream is never sort-merge shuffled; <=2
-    # shuffles = the two-phase countDistinct
-    check(
-        "repeated_ngram_spans_broadcast_joinback",
-        allq["repeated_ngram_spans"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin"],
-        materialize=True,
-        max_exchanges=2,
-    )
-
-    # 17. repeated_span_ranges: the gaps-and-islands window (doc_id) and
-    # the island groupBy (doc_id, island) must SHARE one exchange — hash
-    # partitioning on doc_id satisfies the agg's clustered distribution on
-    # (doc_id, island), so the span stream shuffles exactly once on top of
-    # the repeated_ngram_spans plan (<=3 shuffle Exchanges total)
-    check(
-        "repeated_span_ranges_shared_exchange",
-        allq["repeated_span_ranges"](spark, SF_DIR),
-        must_not=[r"SortMergeJoin"],
-        materialize=True,
-        max_exchanges=3,
-    )
-
-    # 18. Gopher line-level rules: pure narrow projection over array/string
-    # built-ins — the synthesized line structure never leaves the row
-    check(
-        "gopher_line_rules_map_only",
-        allq["gopher_line_rules"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate"],
-    )
-
-    # 19. C4 cleaning rules: same contract — line synthesis, per-line keep
+    # 10. C4 cleaning rules: same contract — line synthesis, per-line keep
     # filter and cleaned-text re-join are all narrow; no shuffle anywhere
     check(
         "c4_quality_filter_map_only",
@@ -307,58 +214,7 @@ def main():
         must_not=[r"Exchange", r"Join", r"HashAggregate"],
     )
 
-    # 20. CCNet perplexity filter: the vocab (result of the token agg,
-    # vocab-sized << corpus) must broadcast back onto the token stream;
-    # the corpus-sized token stream is never sort-merge shuffled
-    check(
-        "perplexity_filter_broadcast_vocab",
-        allq["perplexity_filter"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin"],
-        materialize=True,
-    )
-
-    # 21. DSIR importance weights: the combined model/weight table is a
-    # 64-row frame — every join onto the corpus-sized feature stream must
-    # broadcast; no cartesian/SMJ anywhere
-    check(
-        "dsir_importance_broadcast_models",
-        allq["dsir_importance"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin", r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 22. winnowing-sampled exact-substring dedup: same plan contract as
-    # repeated_ngram_spans — only sampled hash triples shuffle (two-phase
-    # countDistinct = <=2 Exchanges) and the repeated-hash join-back
-    # broadcasts on the AQE-final plan
-    check(
-        "repeated_ngram_spans_winnowed_broadcast_joinback",
-        allq["repeated_ngram_spans_winnowed"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin"],
-        materialize=True,
-        max_exchanges=2,
-    )
-
-    # 23. near-dup curation flagship: the cluster-label join carries NO
-    # forced broadcast hint (label count is the corpus' dup rate — data-
-    # dependent); at this sf AQE must still CONVERT it to a broadcast
-    # join from the measured runtime size (materialize to see the final
-    # adaptive plan); nothing in the composed plan may go cartesian.
-    # (A SortMergeJoin elsewhere in the composed plan — e.g. the verify
-    # tier's collision-set-sized size lookups — is fine: those joins are
-    # deliberately AQE-decided now, not force-broadcast.)
-    check(
-        "curated_corpus_neardup_broadcast_labels",
-        allq["curated_corpus_neardup"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 23b. minhash_lsh_pairs verify tier: the per-doc size aggregate is
+    # 11. minhash_lsh_pairs verify tier: the per-doc size aggregate is
     # corpus-cardinality, so it must be semi-joined down to the LSH
     # collision set BEFORE the jaccard lookup joins (LeftSemi in the
     # plan) — the guard that replaced round 4's forced corpus-sized
@@ -371,15 +227,7 @@ def main():
         must_not=[r"CartesianProduct"],
     )
 
-    # 23c. same guard on the exact-Jaccard twin
-    check(
-        "jaccard_verify_sizes_semijoin",
-        allq["dedup_jaccard_pairs"](spark, SF_DIR),
-        must=[r"LeftSemi"],
-        must_not=[r"CartesianProduct"],
-    )
-
-    # 24. sequence packing: exactly ONE exchange (the per-source-shard
+    # 12. sequence packing: exactly ONE exchange (the per-source-shard
     # running-sum window); the boundary explode stays narrow
     check(
         "sequence_pack_one_exchange",
@@ -389,7 +237,7 @@ def main():
         exact_exchanges=1,
     )
 
-    # 25. URL blocklist: the rules frame broadcasts (nested-loop is the
+    # 13. URL blocklist: the rules frame broadcasts (nested-loop is the
     # expected join for the OR-of-kinds predicate) and the corpus side
     # never shuffles
     check(
@@ -402,7 +250,7 @@ def main():
         exact_exchanges=0,
     )
 
-    # 26. ccnet bucketing: the per-lang cutoff table broadcasts back onto
+    # 14. ccnet bucketing: the per-lang cutoff table broadcasts back onto
     # the scored stream; no corpus-sized sort-merge join
     check(
         "ccnet_buckets_broadcast_cutoffs",
@@ -412,7 +260,7 @@ def main():
         materialize=True,
     )
 
-    # 27. pagerank: iterations shuffle contribution tuples only — the
+    # 15. pagerank: iterations shuffle contribution tuples only — the
     # node-list join-back must broadcast under AQE, never cartesian
     check(
         "pagerank_links_broadcast_iterations",
@@ -422,7 +270,7 @@ def main():
         materialize=True,
     )
 
-    # 28b. Gopher repetition rules: one explode feeds all five n-gram
+    # 16. Gopher repetition rules: one explode feeds all five n-gram
     # lanes; three bounded linear aggregations, no join anywhere
     check(
         "gopher_repetition_three_aggs",
@@ -432,7 +280,7 @@ def main():
         max_exchanges=3,
     )
 
-    # 28. SemDeDup: codebook assignment is inlined (no join feeding the
+    # 17. SemDeDup: codebook assignment is inlined (no join feeding the
     # pair join's build side beyond the bucket equi-join); the cluster-
     # label join back is UNHINTED (label count is data-dependent) and AQE
     # must convert it to a broadcast join at this sf; nothing cartesian
@@ -444,24 +292,7 @@ def main():
         materialize=True,
     )
 
-    # 29. Incremental dedup with Bloom prefilter: the membership test is a
-    # map-side expression (bloom-negative branch of the Union carries NO
-    # join), the exact verify tier is a LeftAnti hash join on the
-    # bloom-positive sliver only (AQE broadcasts the corpus-hash side at
-    # this sf — materialize to see it), and nothing is cartesian.  The
-    # whole query needs no shuffle Exchange: both Union branches are
-    # narrow over the scan and the verify join's corpus side arrives by
-    # broadcast.
-    check(
-        "incremental_dedup_bloom_mapside_prefilter",
-        allq["incremental_dedup_bloom"](spark, SF_DIR),
-        must=[r"Union", r"LeftAnti", r"BroadcastHashJoin"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-        exact_exchanges=0,
-        materialize=True,
-    )
-
-    # 30. Hashed linear quality classifier: the inlined 64-weight table and
+    # 18. Hashed linear quality classifier: the inlined 64-weight table and
     # the per-token F.aggregate fold must stay a pure narrow projection —
     # no explode (Generate), no join, no shuffle
     check(
@@ -471,7 +302,7 @@ def main():
         must_not=[r"Exchange", r"Join", r"HashAggregate", r"Generate"],
     )
 
-    # 30b. score_auto's STUB tier (this container has no model): must be
+    # 19. score_auto's STUB tier (this container has no model): must be
     # the same pure narrow projection — no Python stage, no shuffle; the
     # model tier's mapInPandas shape is proven by the seam unit tests
     check(
@@ -488,58 +319,7 @@ def main():
         ],
     )
 
-    # 31. Text normalization: replace/regexp chain is map-only codegen
-    check(
-        "text_normalize_map_only",
-        allq["text_normalize"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate", r"Generate"],
-    )
-
-    # 32. Within-doc duplicate-line/paragraph rules: the sorted-adjacency
-    # formulation keeps the whole query a narrow projection — no explode,
-    # no groupBy(doc_id, line) corpus shuffle, no join
-    check(
-        "gopher_dup_lines_map_only",
-        allq["gopher_dup_lines"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate", r"Generate"],
-    )
-
-    # 33. Count-min sketch probe: estimates are served from the INLINED
-    # sketch literal (no lookup join anywhere — the only joins are the
-    # demo's broadcast truth probe and the final est-truth merge, both
-    # probe-sized); nothing cartesian
-    check(
-        "cms_probe_inlined_sketch",
-        allq["cms_token_counts"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin", r"SortMergeJoin"],
-        materialize=True,
-    )
-
-    # 34n. Quantile-gated filter: the derived one-row threshold must
-    # BROADCAST into the corpus-side filter (the corpus never shuffles
-    # for a gating decision), nothing sort-merge
-    check(
-        "quantile_gate_broadcast_threshold",
-        allq["quantile_gated_filter"](spark, SF_DIR),
-        must=[r"BroadcastNestedLoopJoin|BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin"],
-        materialize=True,
-    )
-
-    # 34m. Crawl diff: one key-equi full-outer join over hashes (SMJ on
-    # doc_id is the correct shape here — both sides corpus-sized), no
-    # nested-loop/cartesian, text never joined
-    check(
-        "crawl_diff_single_outer_join",
-        allq["crawl_diff_report"](spark, SF_DIR),
-        must=[r"FullOuter"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-    )
-
-    # 34l2. BPE train: NO Python anywhere (the merge is built-in
+    # 20. BPE train: NO Python anywhere (the merge is built-in
     # replace()), the per-round argmax is a heap top-1
     # (TakeOrderedAndProject, never a full sort of the pair counts), and
     # the corpus appears only in the word-count aggregate — the per-round
@@ -635,7 +415,7 @@ def main():
         max_exchanges=7,
     )
 
-    # 34l12. CCNet composed pipeline: detected-lang scoring + sampled
+    # 21. CCNet composed pipeline: detected-lang scoring + sampled
     # bucketing in one plan — vocab aggregate, AQE scoring join, one
     # doc_id shuffle, sample-sized windows, a languages-row cuts
     # broadcast; 7 static exchanges, all bounded or key-reused; no
@@ -654,7 +434,7 @@ def main():
         materialize=True,
     )
 
-    # 34l10. Tokenizer fertility: same discipline as bpe_tokenize — the
+    # 22. Tokenizer fertility: same discipline as bpe_tokenize — the
     # Python apply (MapInPandas) sits on the DISTINCT-vocabulary branch
     # only; the corpus collapses first to the (source, token) aggregate;
     # nothing cartesian.
@@ -666,7 +446,7 @@ def main():
         materialize=True,
     )
 
-    # 34l9. SimHash Hamming pairs: candidates from ONE equi-join on the
+    # 23. SimHash Hamming pairs: candidates from ONE equi-join on the
     # (block, value) key — nothing all-pairs, nothing cartesian; the
     # verify fingerprint lookup is semi-joined to the candidate set and
     # unhinted (source audit); no Python, no global sort.
@@ -683,27 +463,7 @@ def main():
         materialize=True,
     )
 
-    # 34l8. kNN label propagation: the labeled-x-unlabeled pair join is
-    # an equi-join on centroid_id (never cartesian; quadratic only
-    # within a cluster — the SemDeDup bounding argument), the codebook
-    # assignment is map-side literals, and the whole rank->vote->argmax
-    # tail shares ONE vec_id exchange (the ranking window, the vote
-    # aggregate and the argmax window all cluster by vec_id).
-    check(
-        "knn_label_prop_one_vecid_exchange",
-        allq["knn_label_propagation"](spark, SF_DIR),
-        must=[r"HashAggregate", r"Window"],
-        must_not=[
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"CartesianProduct",
-            r"SortMergeJoin",
-        ],
-        exact_exchanges=1,
-        materialize=True,
-    )
-
-    # 34l7. Bigram-LM perplexity: the three model frames (bigram table,
+    # 24. Bigram-LM perplexity: the three model frames (bigram table,
     # context counts, unigram probs) are vocabulary-bounded map-combined
     # aggregates; the scoring joins are UNHINTED (vocabulary cardinality
     # is data-dependent) and AQE converts them to broadcasts at this sf;
@@ -724,28 +484,7 @@ def main():
         materialize=True,
     )
 
-    # 34l6. Cluster mix report: the trained codebook is consumed as
-    # inlined literals (training ran at build time; its own plan is
-    # gated by ivf_train_bounded_aggs_no_corpus_shuffle), so the served
-    # query is a map-side assignment + ONE bounded (cluster, label)
-    # aggregate + a window over those <= K*|labels| rows — exactly two
-    # exchanges, no joins, no Python.
-    check(
-        "cluster_mix_two_bounded_exchanges",
-        allq["cluster_mix_report"](spark, SF_DIR),
-        must=[r"HashAggregate", r"Window"],
-        must_not=[
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"CartesianProduct",
-            r"SortMergeJoin",
-            r"BroadcastHashJoin",
-        ],
-        exact_exchanges=2,
-        materialize=True,
-    )
-
-    # 34l5. LSH recall report: an EVALUATION harness — every frame
+    # 25. LSH recall report: an EVALUATION harness — every frame
     # descends from the bounded doc_id < 300 sample, so no exchange
     # budget applies (the exact all-pairs truth join is the harness's
     # point and is bounded by construction); what must hold is that
@@ -759,7 +498,7 @@ def main():
         materialize=True,
     )
 
-    # 34l4. Host reputation filter: the verdict join-back is UNHINTED
+    # 26. Host reputation filter: the verdict join-back is UNHINTED
     # (host cardinality is data-dependent — the source-level broadcast
     # audit below guarantees no F.broadcast() here) and AQE must still
     # convert it to a broadcast join at this sf; the rollup is one
@@ -773,177 +512,13 @@ def main():
         materialize=True,
     )
 
-    # 34l3. IVF codebook training (Lloyd's k-means): NO Python anywhere,
-    # nothing cartesian (the per-iteration codebook joins back as a
-    # 1-row broadcast — BroadcastNestedLoopJoin on that side is the
-    # intended cross shape), no SortMergeJoin (the K-row empty-cluster
-    # join must broadcast), and no global sort of the corpus.  The only
-    # exchanges carry bounded aggregate rows: per iteration one
-    # groupBy(cid, pos) mean update (<= K*dim rows post map-combine),
-    # one K-row codebook rebuild, and one single-row collect_list (<= 4
-    # bounded exchanges x 3 iterations, measured 11 static) — the corpus
-    # itself is scanned once per iteration and never shuffled.
-    check(
-        "ivf_train_bounded_aggs_no_corpus_shuffle",
-        allq["ivf_train"](spark, SF_DIR),
-        must=[r"HashAggregate"],
-        must_not=[
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"CartesianProduct",
-            r"SortMergeJoin",
-            r"Sort\b.*global=true",
-        ],
-        max_exchanges=12,
-        materialize=True,
-    )
-
-    # 34l. BPE tokenize: the Python stage (ArrowEvalPython/MapInPandas)
+    # 27. BPE tokenize: the Python stage (ArrowEvalPython/MapInPandas)
     # must sit on the DISTINCT-vocabulary branch, and the corpus joins
     # the piece dim without anything cartesian
     check(
         "bpe_python_on_vocab_only",
         allq["bpe_tokenize"](spark, SF_DIR),
         must=[r"MapInPandas|ArrowEvalPython", r"HashAggregate"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-        materialize=True,
-    )
-
-    # 34k. End-to-end pipeline flagship: the corpus crosses exactly ONE
-    # corpus-wide shuffle (the md5(norm) dedup window); the only other
-    # shuffle exchanges are the two bounded distincts (benchmark gram
-    # set, contaminated-id set).  The benchmark-gram probe broadcasts by
-    # hint (suite is capped at fixed size); the contaminated-id anti-join
-    # is UNHINTED (contamination rate is data-dependent) and AQE must
-    # convert it to a broadcast anti-join at this sf; nothing cartesian
-    check(
-        "llm_pipeline_one_corpus_exchange",
-        allq["llm_corpus_pipeline"](spark, SF_DIR),
-        must=[r"Window", r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin", r"CartesianProduct"],
-        max_exchanges=3,
-        materialize=True,
-    )
-
-    # 34j. Repeated-span scrub: the cut itself must be a map-side array
-    # filter over the collected span list — no per-position explode of
-    # the corpus, no cartesian; the only joins are doc_id-keyed
-    check(
-        "repeated_span_scrub_mapside_cut",
-        allq["repeated_span_scrub"](spark, SF_DIR),
-        must=[r"HashAggregate"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-        materialize=True,
-    )
-
-    # 34i. Source data card: ONE aggregate over the corpus (partial+
-    # final HashAggregate for the sums, two-phase for the distinct) —
-    # no join anywhere in the datasheet query
-    check(
-        "source_data_card_single_agg",
-        allq["source_data_card"](spark, SF_DIR),
-        must=[r"HashAggregate", r"Scan parquet"],
-        must_not=[r"Join", r"CartesianProduct", r"Window"],
-    )
-
-    # 34h. Incremental near-dup: candidates come from the (band, bkey)
-    # equi-join between the increment's and the corpus's band tables —
-    # never a cartesian or pure-inequality join over documents
-    check(
-        "incremental_neardup_bucket_join",
-        allq["incremental_dedup_neardup"](spark, SF_DIR),
-        must=[r"HashAggregate"],
-        must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-        materialize=True,
-    )
-
-    # 34g. Inverted index: the hot-token stop-posting guard must be a
-    # BROADCAST anti-join applied BEFORE list materialization (no hot
-    # posting list is ever buffered); nothing cartesian
-    check(
-        "inverted_index_df_cap_broadcast_anti",
-        allq["inverted_index"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin LeftAnti|BroadcastHashJoin.*LeftAnti"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 34f. Semantic decontamination: benchmark vectors are INLINED
-    # literals, so the corpus-side check is one scan with zero
-    # exchanges, zero joins, zero aggregates — pure map
-    check(
-        "decontam_semantic_map_only",
-        allq["decontam_semantic"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate"],
-    )
-
-    # 34e. Hybrid RRF fusion: both retrieval branches keep their heap
-    # top-k shape inside the fused plan (TakeOrderedAndProject twice);
-    # the fusion join runs on 2xk rows, nothing cartesian
-    check(
-        "hybrid_rrf_heap_branches",
-        allq["hybrid_search_rrf"](spark, SF_DIR),
-        must=[r"TakeOrderedAndProject[\s\S]*TakeOrderedAndProject"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 34d. BM25: global top-k must be TakeOrderedAndProject (per-
-    # partition heap + driver merge), never a corpus-wide Sort; the
-    # posting filter runs before aggregation; nothing cartesian
-    check(
-        "bm25_topk_take_ordered",
-        allq["bm25_search"](spark, SF_DIR),
-        must=[r"TakeOrderedAndProject", r"HashAggregate"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 34c. Temperature mix sampling: rates come from a bounded groupBy,
-    # the corpus-side filter pass joins the tiny rate dim by BROADCAST
-    # (the corpus must not shuffle for a sampling decision), nothing
-    # cartesian
-    check(
-        "temperature_mix_broadcast_rates",
-        allq["temperature_mix_sample"](spark, SF_DIR),
-        must=[r"BroadcastHashJoin", r"HashAggregate"],
-        must_not=[r"CartesianProduct", r"SortMergeJoin"],
-        materialize=True,
-    )
-
-    # 34b. TF-IDF keywords: tf is a map-combinable partial+final
-    # aggregate; the idf dim join must not go cartesian; the top-k window
-    # partitions by doc_id (no global single-partition window over the
-    # corpus)
-    check(
-        "tf_idf_keywords_shape",
-        allq["tf_idf_keywords"](spark, SF_DIR),
-        must=[r"HashAggregate", r"Window", r"Scan parquet"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 34a. Histogram-quantile sketch: the corpus reaches exactly one
-    # bounded-output aggregate (partial+final over bin ids); the window
-    # and every join downstream run on bin rows, so no corpus-sized sort
-    # or cartesian anywhere
-    check(
-        "histogram_quantiles_bounded_sketch",
-        allq["histogram_quantiles"](spark, SF_DIR),
-        must=[r"HashAggregate", r"Scan parquet"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 34. HyperLogLog sketch: ONE corpus-sized aggregate (partial+final
-    # HashAggregate over (source, register), bounded output); everything
-    # after it — merge, estimate, truth join — is sketch-sized; nothing
-    # cartesian and no corpus re-shuffle beyond the truth demo branch
-    check(
-        "hll_bounded_sketch_agg",
-        allq["hll_distinct_texts"](spark, SF_DIR),
-        must=[r"HashAggregate", r"Scan parquet"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
         materialize=True,
     )
@@ -1151,11 +726,6 @@ def main():
     BROADCAST_ALLOWLIST = {
         "readability_spark/spark/textops.py": [
             ("F.broadcast(q)", "ANN query set — user-supplied, small by contract"),
-            (
-                "F.broadcast(cb)",
-                "ivf_train per-iteration codebook collapsed to ONE row of K "
-                "structs — K is a contract constant, not data-dependent",
-            ),
         ],
         "readability_spark/spark/modelscore.py": [
             (
@@ -1175,8 +745,6 @@ def main():
             ),
         ],
         "__spark_entry__.py": [
-            ("F.broadcast(bench)", "benchmark suite — capped at doc_id < 500"),
-            ("F.broadcast(probe)", "CMS probe token list — fixed 31 rows"),
             ("F.broadcast(cuts)", "per-lang sampled quantile cutoffs — rows = |langs| x 2"),
             (
                 "F.broadcast(rules)",
@@ -1186,10 +754,7 @@ def main():
             ("F.broadcast(nrow)", "single-row corpus count"),
             ("F.broadcast(q)", "single ANN query vector"),
             ("F.broadcast(qv)", "ann_recall_report eval query vector — 1 row"),
-            ("F.broadcast(thr)", "single-row sketch-derived threshold"),
-            ("F.broadcast(hot)", "stop-token set — bounded by 1/df_cap tokens"),
             ("F.broadcast(best", "single-row argmax pair (LIMIT 1) per training round"),
-            ("F.broadcast(c)", "explicit dim-broadcast demo (join_customer_orders)"),
             (
                 "F.broadcast(s)",
                 "mixture_plan_report totals — a global aggregate's single "
