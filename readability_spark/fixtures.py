@@ -1135,19 +1135,6 @@ def spiceworks_forum_answer(i, rng):
     )
 
 
-def youth_onclick_chrome(i, rng):
-    """Reference youth/pixnet analog: inline event-handler attributes and
-    javascript: hrefs riding content elements — attributes must survive
-    serialization untouched while javascript: URIs never become text."""
-    return (
-        f"<html><body><div class='entry-body'>"
-        f"<p onclick=\"trk({i})\">{_words(rng, 13)}.</p>"
-        f'<p><a href="javascript:void(0)" onmouseover="pop()">{_words(rng, 3)}</a> '
-        f"{_words(rng, 10)}.</p>"
-        f"<p>{_words(rng, 11)}.</p></div></body></html>"
-    )
-
-
 def iab_consent_banner(i, rng):
     """Reference iab-1 analog: GDPR consent banner + cookie-notice fixed
     bars around the article — classic boilerplate the unlikely regex and

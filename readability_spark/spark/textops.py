@@ -693,89 +693,6 @@ def connected_components(
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-def semdedup(
-    emb: DataFrame,
-    centroids,
-    threshold=0.95,
-    id_col="vec_id",
-    vec_col="embedding",
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    deduplication over an embedding column — cluster the embedding space
-    with a coarse codebook, compare pairs only WITHIN a cluster, connect
-    above-threshold pairs into components, and keep one canonical member
-    (min id) per component.
-
-    Stages (all existing green primitives):
-      1. ``ivf_assign`` — max-cosine centroid per vector, codebook inlined,
-         pure narrow projection (no shuffle, no crossJoin blowup);
-      2. within-cluster pair generation — equi-join on centroid_id with
-         ``id_a < id_b``, cosine >= threshold (rounded to 4dp so the
-         DuckDB oracle replays the comparison exactly);
-      3. ``connected_components`` over the surviving pairs;
-      4. keep = unclustered, or the cluster's min-id member.
-
-    Returns (id_col, sem_cluster, keep) for EVERY input vector.
-
-    Scale: the pair join is quadratic only within a cluster — that is
-    SemDeDup's own design point: the codebook size C grows with the
-    corpus (the paper uses ~50k clusters for LAION-scale data) so
-    per-cluster populations stay bounded; the join shuffles on
-    centroid_id, pairs above threshold are rare, and the component graph
-    is tiny.  The final labeling is a left join of the cluster-label
-    frame back onto the vectors — unhinted, because the label frame's
-    size is data-dependent (the corpus' dup rate); AQE broadcasts it at
-    runtime only when its measured size is actually small.
-    """
-    assigned = ivf_assign(emb, centroids, id_col, vec_col)
-    normed = assigned.select(
-        F.col(id_col),
-        F.col(vec_col),
-        "centroid_id",
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("_norm"),
-    )
-    a = normed.alias("a")
-    b = normed.alias("b")
-    cos = _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / (
-        F.col("a._norm") * F.col("b._norm")
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(F.round(cos, 4) >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("vec_a"), F.col(f"b.{id_col}").alias("vec_b")
-        )
-    )
-    clusters = connected_components(pairs, a_col="vec_a", b_col="vec_b").select(
-        F.col("doc_id").alias(id_col), F.col("cluster_id")
-    )
-    # The cluster-label frame holds one row per NEAR-DUPLICATE vector —
-    # on real web corpora that is 30-50% of documents, so a forced
-    # F.broadcast() here is a driver OOM at 10^12 docs.  No hint: the
-    # join shuffles once and AQE converts it to a broadcast join at
-    # runtime when (and only when) the measured label-frame size is
-    # actually under the broadcast threshold (it sees the real exchange
-    # stats even though CC's output came through localCheckpoint).
-    return (
-        emb.select(id_col)
-        .join(clusters, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("cluster_id"), F.col(id_col))
-            .cast("long")
-            .alias("sem_cluster"),
-            (
-                F.col("cluster_id").isNull()
-                | (F.col("cluster_id") == F.col(id_col))
-            ).alias("keep"),
-        )
-    )
-
-
 # --------------------------------------------------------------- product
 # quantization (Jégou, Douze & Schmid, TPAMI 2011): the memory-compression
 # half of a FAISS-style IVF-PQ index.  IVF (ivf_assign/ann_ivf_topk) bounds
