@@ -15,7 +15,6 @@ class Options:
     """Defaults match ReadabilityOptions::default()
     (/root/reference/src/options.rs:36-50)."""
 
-    debug: bool = False
     keep_classes: bool = False
     link_density_bias: float = 0.0
     max_elements: int | None = None

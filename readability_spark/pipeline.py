@@ -32,24 +32,10 @@ DEFAULT_STAGES = (
 def run_pipeline(document, options=DEFAULT_OPTIONS, metadata=None):
     """Run the default stage sequence over a parsed document; returns the
     final Context.  Any stage error aborts the document
-    (/root/reference/src/pipeline.rs:20-26).  ``debug`` logs per-stage
-    timings to stderr (mozilla's debug flag analog; never alters output)."""
+    (/root/reference/src/pipeline.rs:20-26)."""
     ctx = Context(document=document, options=options)
     if metadata is not None:
         ctx.metadata = metadata
-    if options.debug:
-        import sys
-        import time as _time
-
-        for stage in DEFAULT_STAGES:
-            t0 = _time.perf_counter()
-            stage(ctx)
-            print(
-                f"readability_spark: {stage.__name__} "
-                f"{(_time.perf_counter() - t0) * 1000:.2f} ms",
-                file=sys.stderr,
-            )
-        return ctx
     for stage in DEFAULT_STAGES:
         stage(ctx)
     return ctx

@@ -26,7 +26,9 @@ from pyspark.sql.types import (
 
 from .session import prepare_python_worker
 
-#: fraction of rows assigned to the hot domain to exercise skew salting
+#: url host of every page with ``doc_id % 10 < 4`` (40% of rows); url
+#: hashing already spreads it over the logical partitions
+#: (test_hot_domain_spreads_across_partitions_and_salts)
 HOT_DOMAIN = "hot.example.com"
 
 PAGES_SCHEMA = StructType(

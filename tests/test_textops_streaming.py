@@ -1,16 +1,11 @@
-"""Tests for the dataset-level similarity/dedup operators (textops) and the
-multimodal binary-column plumbing (Structured Streaming extraction is
-tested in test_stream_extract.py).
+"""Tests for the multimodal binary-column plumbing
+(readability_spark/spark/multimodal.py).
 
 Correctness anchors:
-- MinHash/LSH: exact duplicates always collide; a verified pair's Jaccard
-  matches a hand-computed value; disjoint docs never survive the verify.
-- SimHash: identical docs -> identical fingerprints; fingerprint is a
-  bits-length bit-string; deterministic across runs.
-- ANN: IVF bucket probing returns the brute-force top-k whenever the true
-  neighbours share the query's bucket (verified on a planted cluster).
 - Multimodal: schema/batch plumbing real; corrupt payloads isolate as
   status='error'; features are the deterministic fake-decode closed form.
+- Decoder seam: the stub path runs for synthetic payloads; the real
+  decoders are taken only when their codecs are importable.
 """
 
 from __future__ import annotations
@@ -18,12 +13,10 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import pyspark.sql.functions as F
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from readability_spark.spark import textops
 from readability_spark.spark.multimodal import (
     MAGIC,
     attach_payloads,
@@ -36,7 +29,7 @@ from readability_spark.spark.session import get_spark
 
 @pytest.fixture(scope="module")
 def spark():
-    spark = get_spark(app_name="textops-tests", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="multimodal-tests", master="local[8]", shuffle_partitions=8)
     yield spark
     spark.stop()
 
@@ -53,111 +46,6 @@ def docs(spark):
     return spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string"
     )
-
-
-class TestMinHashLSH:
-    def test_exact_dups_always_collide(self, spark, docs):
-        pairs = textops.minhash_lsh_pairs(docs, threshold=0.99).collect()
-        assert {(r.doc_a, r.doc_b, r.jaccard) for r in pairs} == {(0, 1, 1.0)}
-
-    def test_near_dup_jaccard_value(self, spark, docs):
-        pairs = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in textops.minhash_lsh_pairs(docs, threshold=0.5).collect()
-        }
-        assert pairs[(0, 1)] == 1.0
-        # docs 0 and 2 share 5 of 7 distinct tokens -> 0.7143, IF banding
-        # happened to collide them; assert the value only when present
-        if (0, 2) in pairs:
-            assert pairs[(0, 2)] == pytest.approx(0.7143, abs=1e-4)
-        # disjoint docs can never survive the exact-Jaccard verify
-        assert all(a != 3 and b != 3 for a, b in pairs)
-
-    def test_signatures_deterministic(self, spark, docs):
-        tok = textops.tokens(docs)
-        s1 = sorted(map(tuple, textops.minhash_signatures(tok).collect()))
-        s2 = sorted(map(tuple, textops.minhash_signatures(tok).collect()))
-        assert s1 == s2 and len(s1) == 5 * 16
-
-
-class TestMaxDfGuard:
-    def test_stopword_tokens_dropped_bounds_candidates(self, spark):
-        """Structural skew guard: with max_df set, a stopword shared by every
-        document stops generating O(n^2) inverted-index join candidates."""
-        rows = [(i, f"the unique{i} word{i}", "en", "s") for i in range(20)]
-        docs = spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string"
-        )
-        unguarded = textops.tokens(docs)
-        guarded = textops.tokens(docs, max_df=5)
-        # 'the' appears in all 20 docs -> 20*19/2 = 190 candidate pairs unguarded
-        def pairs(tok):
-            a, b = tok.alias("a"), tok.alias("b")
-            return a.join(
-                b,
-                (F.col("a.token") == F.col("b.token"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).count()
-        assert pairs(unguarded) == 190
-        assert pairs(guarded) == 0
-        # rare tokens survive untouched
-        assert guarded.filter(F.col("token") == "unique3").count() == 1
-        assert guarded.filter(F.col("token") == "the").count() == 0
-
-    def test_max_df_none_is_identity(self, spark, docs):
-        assert (
-            textops.tokens(docs).count()
-            == textops.tokens(docs, max_df=None).count()
-        )
-
-
-class TestSimHash:
-    def test_identical_docs_same_fingerprint(self, spark, docs):
-        fp = {r.doc_id: r.simhash for r in textops.simhash(docs).collect()}
-        assert fp[0] == fp[1]
-        assert len(fp[0]) == 32 and set(fp[0]) <= {"0", "1"}
-        # near-dup closer in Hamming distance than a disjoint doc
-        ham = lambda a, b: sum(x != y for x, y in zip(a, b))
-        assert ham(fp[0], fp[2]) < ham(fp[0], fp[3])
-
-
-class TestANN:
-    @pytest.fixture(scope="class")
-    def emb(self, spark):
-        # two well-separated clusters; vec 0/1 are the centroids
-        base_a = [1.0, 0.0, 0.0, 0.0]
-        base_b = [0.0, 1.0, 0.0, 0.0]
-
-        def jitter(base, i):
-            return [v + (0.01 * ((i * 7 + j) % 5)) for j, v in enumerate(base)]
-
-        rows = [(0, base_a), (1, base_b)]
-        rows += [(i, jitter(base_a, i)) for i in range(2, 12)]
-        rows += [(i, jitter(base_b, i)) for i in range(12, 22)]
-        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def test_ivf_assign_partitions_clusters(self, spark, emb):
-        cents = emb.filter(F.col("vec_id") < 2)
-        assigned = {r.vec_id: r.centroid_id for r in textops.ivf_assign(emb, cents).collect()}
-        assert all(assigned[i] == 0 for i in range(2, 12))
-        assert all(assigned[i] == 1 for i in range(12, 22))
-
-    def test_ivf_topk_matches_bruteforce_in_bucket(self, spark, emb):
-        cents = emb.filter(F.col("vec_id") < 2)
-        query = emb.filter(F.col("vec_id") == 0)
-        got = [r.vec_id for r in textops.ann_ivf_topk(emb, cents, query, k=5).collect()]
-        # brute force within the true cluster
-        brute = textops.embedding_near_dup_pairs(
-            emb.filter(F.col("vec_id") < 12), threshold=-1.0
-        )
-        expected = [
-            r.vec_b
-            for r in brute.filter(F.col("vec_a") == 0)
-            .orderBy(F.col("cosine").desc(), F.col("vec_b").asc())
-            .limit(5)
-            .collect()
-        ]
-        assert got == expected
 
 
 class TestMultimodal:
@@ -241,57 +129,6 @@ class TestMultimodalTransforms:
         by_id = {r.doc_id: r for r in rows}
         assert set(by_id) == {1, 2}  # image row dropped
         assert by_id[1].status == "error" and by_id[2].status == "error"
-
-
-class TestWinnowing:
-    def test_shared_run_guarantees_shared_fingerprint(self, spark):
-        from readability_spark.spark.textops import winnow_fingerprints
-
-        shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens = k+w-1
-        docs = spark.createDataFrame(
-            [
-                (1, f"intro words here {shared} tail one"),
-                (2, f"completely different prefix {shared} other ending"),
-                (3, "no overlap with anything else at all in this row"),
-            ],
-            "doc_id long, text string",
-        )
-        fps = winnow_fingerprints(docs, k=5, w=4)
-        by_doc = {
-            r.doc_id: {x.fp for x in rows}
-            for r in fps.select("doc_id").distinct().collect()
-            for rows in [fps.filter(F.col("doc_id") == r.doc_id).collect()]
-        }
-        assert by_doc[1] & by_doc[2], "docs sharing an 8-token run must share a fingerprint"
-        assert not (by_doc[1] & by_doc[3])
-
-    def test_short_docs_excluded(self, spark):
-        from readability_spark.spark.textops import winnow_fingerprints
-
-        docs = spark.createDataFrame(
-            [(1, "only seven tokens in this short row")], "doc_id long, text string"
-        )
-        assert winnow_fingerprints(docs, k=5, w=4).count() == 0
-
-
-class TestSignLSH:
-    def test_same_bucket_for_identical_directions(self, spark):
-        from readability_spark.spark.textops import hyperplane_lsh_buckets, lsh_cosine_pairs
-
-        planes = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-        emb = spark.createDataFrame(
-            [
-                (1, [1.0, 1.0, 0.0]),
-                (2, [2.0, 2.0, 0.0]),   # same direction as 1
-                (3, [-1.0, -1.0, 0.0]), # opposite direction
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        buckets = {r.vec_id: r.bucket for r in hyperplane_lsh_buckets(emb, planes).collect()}
-        assert buckets[1] == buckets[2] == "11"
-        assert buckets[3] == "00"
-        pairs = lsh_cosine_pairs(emb, planes, threshold=0.9).collect()
-        assert [(p.vec_a, p.vec_b, p.cosine) for p in pairs] == [(1, 2, 1.0)]
 
 
 class TestMultimodalNullMetadata:
@@ -431,70 +268,3 @@ class TestDecoderSeam:
             mm.decode_media(b"x", "image/png")
         with pytest.raises(NotImplementedError):
             mm.decode_media(b"x", "video/mp4")
-
-
-class TestConnectedComponents:
-    """textops.connected_components: iterative min-label propagation
-    (the dedup-clustering step), pinned on multi-hop graphs."""
-
-    def test_chain_and_islands(self, spark):
-        from readability_spark.spark.textops import connected_components
-
-        # chain 1-2-3-4 (diameter 3, needs >1 round), pair 10-11,
-        # and edges listed in ONE direction only
-        edges = spark.createDataFrame(
-            [(2, 1), (2, 3), (3, 4), (10, 11)], "a long, b long"
-        )
-        got = {
-            r.doc_id: r.cluster_id for r in connected_components(edges).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-    def test_converges_within_iteration_bound(self, spark):
-        from readability_spark.spark.textops import connected_components
-
-        # a 12-node path graph: worst-case diameter for label propagation
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(11)], "a long, b long"
-        )
-        got = {r.doc_id: r.cluster_id for r in connected_components(edges).collect()}
-        assert set(got.values()) == {0}
-        assert len(got) == 12
-
-
-class TestFingerprintEdges:
-    """textops.fingerprint_edges: the df-capped edge-builder feeding
-    dedup clustering — the k^2 skew guard for hot boilerplate chunks."""
-
-    def test_hot_hash_capped_not_quadratic(self, spark):
-        from readability_spark.spark.textops import fingerprint_edges
-
-        # one boilerplate hash shared by ALL 100 docs (uncapped: 4950
-        # edges), plus one genuine near-dup pair sharing a rare hash
-        rows = [(i, "hot") for i in range(100)] + [(7, "rare"), (8, "rare")]
-        cd = spark.createDataFrame(rows, "doc_id long, h string")
-        capped = fingerprint_edges(cd, max_df=8).collect()
-        # the hot hash is dropped entirely; only the rare-hash edge remains
-        assert {(r.a, r.b) for r in capped} == {(7, 8)}
-
-        # uncapped: all-pairs bomb (the rare edge is a subset of it)
-        assert fingerprint_edges(cd, max_df=None).count() == 100 * 99 // 2
-
-    def test_cap_keeps_hashes_at_or_below_max_df(self, spark):
-        from readability_spark.spark.textops import fingerprint_edges
-
-        # df == max_df is KEPT (cap is "more than max_df documents")
-        rows = [(i, "h3") for i in range(3)]
-        cd = spark.createDataFrame(rows, "doc_id long, h string")
-        got = {(r.a, r.b) for r in fingerprint_edges(cd, max_df=3).collect()}
-        assert got == {(0, 1), (0, 2), (1, 2)}
-        assert fingerprint_edges(cd, max_df=2).count() == 0
-
-
-class TestConnectedComponentsBound:
-    def test_raises_on_non_convergence(self, spark):
-        from readability_spark.spark.textops import connected_components
-
-        edges = spark.createDataFrame([(i, i + 1) for i in range(6)], "a long, b long")
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(edges, max_iterations=1)

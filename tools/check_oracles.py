@@ -15,7 +15,7 @@ import duckdb
 import __spark_entry__ as entrymod
 from readability_spark.spark.session import get_spark
 
-TABLES = "documents embeddings".split()
+TABLES = ["documents"]
 
 
 def norm_cell(v):

@@ -1,16 +1,12 @@
-"""Physical-plan quality gate: assert that the plans Catalyst produces for
-the engine's headline queries are the plans we want at 100 TB.
+"""Physical-plan quality gate: assert that the scans the engine reads are
+pushed down and pruned, and audit its F.broadcast() hints.
 
-Checks (SURVEY.md section 4.2 / task brief):
-- filter pushdown reaches the parquet scan (PushedFilters non-empty where a
-  scan-level predicate exists);
-- column pruning reaches the scan (ReadSchema contains only needed cols —
-  in particular the fat `html`/`text` columns are absent when unused);
-- small-dim joins broadcast (BroadcastHashJoin, no SortMergeJoin);
-- resume anti-join broadcasts;
-- aggregations are partial+final hash aggs inside WholeStageCodegen;
-- shuffle budgets: queries that claim "exactly one exchange" (or <=N) in
-  their docstrings are held to it by exchange counts on the plan.
+Checks:
+- filter pushdown and column pruning reach the ``documents`` parquet scan
+  (PushedFilters present; ReadSchema without the fat ``text`` column when
+  it is unused);
+- the extraction pre-filter on a ``PAGES_SCHEMA`` table stays outside the
+  UDF and pushes to the parquet scan;
 - every source-level F.broadcast() call sits on an allowlisted,
   bounded-by-construction frame, and every allowlist entry still names a
   call site (``broadcast_audit``, also run by tests/test_broadcast_audit.py).
@@ -45,11 +41,7 @@ SF_DIR = "/root/testdata/sf0.01"
 # a new F.broadcast() call fails the audit until it is reviewed and added
 # here with its boundedness argument, and an entry whose site is gone
 # fails it until the entry is removed.
-BROADCAST_ALLOWLIST = {
-    "readability_spark/spark/textops.py": [
-        ("F.broadcast(q)", "ANN query set — user-supplied, small by contract"),
-    ],
-}
+BROADCAST_ALLOWLIST = {}
 AUDIT_GLOBS = ("readability_spark/**/*.py", "scripts/*.py", "__spark_entry__.py", "bench.py")
 # real call sites only: prose like "an F.broadcast() that" has empty parens
 _BROADCAST_CALL = re.compile(r"F\.broadcast\([^)]")
@@ -102,30 +94,8 @@ def main():
     sections = []
     failures = []
 
-    def check(
-        name,
-        df,
-        must=(),
-        must_not=(),
-        materialize=False,
-        exact_exchanges=None,
-        max_exchanges=None,
-    ):
-        """Record the (formatted) plan and assert regex/shuffle properties.
-
-        ``materialize`` runs the query first so AQE finalizes the adaptive
-        plan — required before asserting runtime decisions (broadcast
-        conversions).  It must execute THIS DataFrame's own queryExecution
-        (``collect()``): ``df.count()`` would build and run a different
-        plan tree and leave this one un-finalized — round 4's gates
-        silently asserted only the static plan because of exactly that.
-        ``exact_exchanges``/``max_exchanges`` bound the
-        number of shuffle ``Exchange`` nodes (BroadcastExchange does not
-        count) — the enforcement teeth behind every "one shuffle"/"<=N
-        exchanges" docstring claim."""
-        static_plan = plan_of(df)
-        if materialize:
-            df.collect()
+    def check(name, df, must=(), must_not=()):
+        """Record the (formatted) plan and assert regex properties on it."""
         plan = plan_of(df)
         sections.append((name, plan))
         for pat in must:
@@ -134,28 +104,8 @@ def main():
         for pat in must_not:
             if re.search(pat, plan):
                 failures.append(f"{name}: must NOT contain /{pat}/")
-        if exact_exchanges is not None or max_exchanges is not None:
-            # count shuffles on the STATIC plan: a shared shuffle prints
-            # once there (ReusedExchange elsewhere), which is the true
-            # shuffle budget; the finalized adaptive plan re-prints each
-            # reused exchange under every query stage that consumes it,
-            # double-counting real shuffles
-            n = len(re.findall(r"\(\d+\) Exchange", static_plan))
-            if exact_exchanges is not None and n != exact_exchanges:
-                failures.append(
-                    f"{name}: expected exactly {exact_exchanges} shuffle "
-                    f"Exchange(s), got {n}"
-                )
-            elif max_exchanges is not None and n > max_exchanges:
-                failures.append(
-                    f"{name}: expected <={max_exchanges} shuffle "
-                    f"Exchange(s), got {n}"
-                )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    customer = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
 
     # 1. scan-level predicate + projection pushdown: the fat `text` column
     # must not be read when only doc_id/lang are needed
@@ -169,43 +119,7 @@ def main():
         must_not=[r"ReadSchema: struct<.*text"],
     )
 
-    # 2. broadcast join for the small dimension (no sort-merge)
-    check(
-        "broadcast_join",
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n")),
-        must=[r"BroadcastHashJoin"],
-        must_not=[r"SortMergeJoin"],
-    )
-
-    # 3. resume anti-join broadcasts the (small) done-partitions side
-    done = spark.createDataFrame([(i,) for i in range(8)], "partition_id int")
-    pages = docs.withColumn(
-        "partition_id", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int")
-    )
-    check(
-        "resume_anti_join",
-        pages.join(F.broadcast(done), "partition_id", "left_anti"),
-        must=[r"BroadcastHashJoin.*LeftAnti"],
-        must_not=[r"SortMergeJoin"],
-    )
-
-    # 4. partial+final hash aggregation (map-side combine before the
-    # exchange; AQE formatted plans don't print codegen spans pre-execution,
-    # so assert the aggregate structure itself)
-    check(
-        "partial_agg",
-        lineitem.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("s")),
-        must=[
-            r"partial_sum\(l_quantity",
-            r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate",
-            r"ReadSchema: struct<l_quantity:[^,]+,l_returnflag:string>",
-        ],
-        must_not=[r"SortAggregate"],
-    )
-
-    # 5. extraction pre-filters stay OUTSIDE the UDF and push to the scan
+    # 2. extraction pre-filters stay OUTSIDE the UDF and push to the scan
     from readability_spark.spark.pages import PAGES_SCHEMA
 
     pages_tbl = spark.createDataFrame([], PAGES_SCHEMA)
@@ -217,199 +131,6 @@ def main():
             "url", "html"
         ),
         must=[r"PushedFilters: \[.*IsNotNull\(html\).*\]"],
-    )
-
-    # 6. IVF assignment is a map-only projection: centroid codebook inlined,
-    # NO exchange/join/aggregate anywhere in the plan
-    from readability_spark.spark.textops import ivf_assign, winnow_fingerprints
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = emb.filter(F.col("vec_id") < 4)
-    check(
-        "ivf_assign_map_only",
-        ivf_assign(emb, cents),
-        must=[r"Scan parquet"],
-        must_not=[r"Exchange", r"Join", r"HashAggregate"],
-    )
-
-    # 7. winnowing fingerprints: map-side array exprs feed the explode
-    # directly from the scan; the final distinct is the ONLY exchange
-    # (partial+final hash agg around it), no join anywhere
-    check(
-        "winnow_map_only_until_distinct",
-        winnow_fingerprints(docs, k=5, w=4),
-        must=[
-            r"Generate[\s\S]*Scan parquet",
-            r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate",
-        ],
-        must_not=[r"Join"],
-        exact_exchanges=1,
-    )
-
-    import __spark_entry__ as entrymod
-
-    allq = entrymod.queries()
-
-    # 8. minhash_lsh_pairs verify tier: the per-doc size aggregate is
-    # corpus-cardinality, so it must be semi-joined down to the LSH
-    # collision set BEFORE the jaccard lookup joins (LeftSemi in the
-    # plan) — the guard that replaced round 4's forced corpus-sized
-    # F.broadcast(sizes).  Initial (non-materialized) plan: the LeftSemi
-    # is a structural property, not an AQE decision.
-    check(
-        "minhash_verify_sizes_semijoin",
-        allq["minhash_lsh_pairs"](spark, SF_DIR),
-        must=[r"LeftSemi"],
-        must_not=[r"CartesianProduct"],
-    )
-
-    # 9. SimHash Hamming pairs: candidates from ONE equi-join on the
-    # (block, value) key — nothing all-pairs, nothing cartesian; the
-    # verify fingerprint lookup is semi-joined to the candidate set and
-    # unhinted (source audit); no Python, no global sort.
-    check(
-        "simhash_hamming_block_join_only",
-        allq["simhash_hamming_pairs"](spark, SF_DIR),
-        must=[r"HashAggregate"],
-        must_not=[
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"CartesianProduct",
-            r"Sort\b.*global=true",
-        ],
-        materialize=True,
-    )
-
-    # 10. Bigram-LM perplexity: the three model frames (bigram table,
-    # context counts, unigram probs) are vocabulary-bounded map-combined
-    # aggregates; the scoring joins are UNHINTED (vocabulary cardinality
-    # is data-dependent) and AQE converts them to broadcasts at this sf;
-    # one doc_id shuffle for the per-doc NLL; 5 static exchanges total
-    # (3 model aggs + the vocab-sized total window + the doc agg),
-    # nothing cartesian, no Python.
-    check(
-        "bigram_ppl_bounded_models_aqe_joins",
-        allq["bigram_perplexity_filter"](spark, SF_DIR),
-        must=[r"HashAggregate", r"BroadcastHashJoin"],
-        must_not=[
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"CartesianProduct",
-            r"Sort\b.*global=true",
-        ],
-        max_exchanges=5,
-        materialize=True,
-    )
-
-    # 11. LSH recall report: an EVALUATION harness — every frame
-    # descends from the bounded doc_id < 300 sample, so no exchange
-    # budget applies (the exact all-pairs truth join is the harness's
-    # point and is bounded by construction); what must hold is that
-    # nothing is cartesian (the 1-row metric crossJoins broadcast) and
-    # the counts are hash aggregates.
-    check(
-        "lsh_recall_report_bounded_harness",
-        allq["lsh_recall_report"](spark, SF_DIR),
-        must=[r"HashAggregate"],
-        must_not=[r"CartesianProduct"],
-        materialize=True,
-    )
-
-    # 12. Host reputation filter: the verdict join-back is UNHINTED
-    # (host cardinality is data-dependent — the source-level broadcast
-    # audit below guarantees no F.broadcast() here) and AQE must still
-    # convert it to a broadcast join at this sf; the rollup is one
-    # map-combined host aggregate; nothing cartesian, no corpus sort.
-    check(
-        "host_reputation_unhinted_aqe_join",
-        allq["host_reputation_filter"](spark, SF_DIR),
-        must=[r"HashAggregate", r"BroadcastHashJoin"],
-        must_not=[r"CartesianProduct", r"Sort\b.*global=true"],
-        max_exchanges=4,
-        materialize=True,
-    )
-
-    # pq_codes: PQ encoding is a pure narrow projection — codebooks ride
-    # as literals, so the corpus is never joined, shuffled, or handed to
-    # Python; zero exchanges at any corpus size
-    check(
-        "pq_codes_map_only",
-        allq["pq_codes"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[
-            r"Join",
-            r"HashAggregate",
-            r"Window",
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"Sort\b",
-        ],
-        exact_exchanges=0,
-    )
-
-    # ann_pq_topk: the ADC scan feeds a per-partition heap
-    # (TakeOrderedAndProject), the exact re-rank is a SECOND heap over the
-    # bounded shortlist — never a corpus Sort, never a join, zero
-    # exchanges; the self-exclusion filter reaches the parquet scan
-    check(
-        "ann_pq_topk_two_heaps_zero_exchange",
-        allq["ann_pq_topk"](spark, SF_DIR),
-        must=[
-            r"TakeOrderedAndProject[\s\S]*TakeOrderedAndProject",
-            r"PushedFilters: \[[^\]]*Not\(EqualTo\(vec_id,0\)\)",
-        ],
-        must_not=[r"Join", r"MapInPandas", r"ArrowEvalPython", r"Sort\b"],
-        exact_exchanges=0,
-    )
-
-    # ann_ivfpq_topk: the composed FAISS-style index keeps BOTH bounds in
-    # one plan — coarse probe filter and PQ/ADC all narrow (scan ->
-    # filter -> project), shortlist + re-rank as two per-partition heaps;
-    # zero exchanges, no joins, no Python at any corpus size
-    check(
-        "ann_ivfpq_topk_probe_filter_two_heaps",
-        allq["ann_ivfpq_topk"](spark, SF_DIR),
-        must=[
-            r"TakeOrderedAndProject[\s\S]*TakeOrderedAndProject",
-            r"Filter",
-        ],
-        must_not=[r"Join", r"MapInPandas", r"ArrowEvalPython", r"Sort\b"],
-        exact_exchanges=0,
-    )
-
-    # pq_residual_report: coarse assignment, the inlined centroid-vector
-    # lookup, the residual subtraction and BOTH encodes chain as narrow
-    # projections — zero exchanges, zero joins, no Python
-    check(
-        "pq_residual_map_only",
-        allq["pq_residual_report"](spark, SF_DIR),
-        must=[r"Scan parquet"],
-        must_not=[
-            r"Join",
-            r"HashAggregate",
-            r"Window",
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"Sort\b",
-        ],
-        exact_exchanges=0,
-    )
-
-    # image_ahash_neardup: same contract as the text SimHash gate — the
-    # decode+hash is narrow (no Python), candidates come from ONE
-    # equi-join on the (block, value) key, nothing all-pairs/cartesian,
-    # no global sort; verify lookup semi-joined and unhinted (source audit)
-    check(
-        "image_ahash_block_join_only",
-        allq["image_ahash_neardup"](spark, SF_DIR),
-        must=[r"HashAggregate"],
-        must_not=[
-            r"MapInPandas",
-            r"ArrowEvalPython",
-            r"CartesianProduct",
-            r"Sort\b.*global=true",
-        ],
-        materialize=True,
     )
 
     failures += broadcast_audit(REPO)
@@ -428,8 +149,8 @@ def main():
 
     out = ["# BENCH/PLANS.md — physical-plan audit", ""]
     out.append(
-        "Generated by `tools/check_plans.py` (asserts pushdown / pruning / "
-        "broadcast / partial-agg properties, then records the plans)."
+        "Generated by `tools/check_plans.py` (asserts scan pushdown / pruning "
+        "properties and audits broadcast hints, then records the plans)."
     )
     for name, plan in sections:
         out += ["", f"## {name}", "", "```", plan.strip(), "```"]
