@@ -24,7 +24,6 @@ this subset (FIXTURES.md section 2).
 
 from __future__ import annotations
 
-import os
 import re as _re
 from html import unescape as _unescape
 from html.parser import HTMLParser
@@ -313,8 +312,9 @@ _CDATA_CLOSE = {
     "style": _re.compile(r"</\s*style\s*>", _re.I),
 }
 
-# escape hatch for differential testing (tests/test_dom_tokenizer_diff.py)
-_USE_STDLIB_TOKENIZER = os.environ.get("READABILITY_STDLIB_TOKENIZER") == "1"
+# route parse_document through the stdlib HTMLParser tokenizer instead of
+# fast_feed; tests/test_dom_tokenizer_diff.py::_both flips it to compare the two
+_USE_STDLIB_TOKENIZER = False
 
 # Tag-name intern cache: one lowercase string object per distinct tag name,
 # so repeated tags skip the per-occurrence str.lower() allocation and later

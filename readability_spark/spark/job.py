@@ -104,14 +104,14 @@ _RESERVED = set(_ARTICLE_COL_NAMES) | {
 }
 
 
-def _passthrough_fields(input_schema, html_col, keep_html):
-    """Input columns carried through unchanged; names colliding with Article
-    output columns (e.g. the crawl's ``lang`` hint vs the extracted lang)
-    are dropped — the extracted value wins."""
+def _passthrough_fields(input_schema):
+    """Input columns carried through unchanged, except ``html`` and names
+    colliding with Article output columns (e.g. the crawl's ``lang`` hint vs
+    the extracted lang) — the extracted value wins."""
     return [
         f
         for f in input_schema.fields
-        if (keep_html or f.name != html_col) and f.name not in _RESERVED
+        if f.name != "html" and f.name not in _RESERVED
     ]
 
 
@@ -141,12 +141,8 @@ class MetricsAccumulatorParam(AccumulatorParam):
 def extract_articles(
     df: DataFrame,
     options=None,
-    html_col="html",
-    keep_html=False,
-    base_url_col=None,
     article_columns=None,
     metrics_acc=None,
-    partition_col="partition_id",
     html_codec=None,
 ) -> DataFrame:
     """Add the Article columns to a pages DataFrame.
@@ -156,8 +152,9 @@ def extract_articles(
     ``mapInPandas`` pass; per-row failures become status/error columns,
     never exceptions (a failed document must not kill the Arrow batch).
 
-    ``base_url_col`` (e.g. ``"url"``) supplies each row's document URI to
-    the opt-in fixRelativeUris pass (Options(fix_relative_uris=True)).
+    The ``html`` column is read and never passed through.  With
+    Options(fix_relative_uris=True) each row's ``url`` is its base URI for
+    the fixRelativeUris pass, so the frame must have a ``url`` column.
 
     ``article_columns`` is projection pushdown into the UDF: an iterable of
     Article column names to emit (default: all ten).  Catalyst prunes
@@ -168,7 +165,7 @@ def extract_articles(
     emitted.
 
     ``metrics_acc`` (an accumulator built with ``MetricsAccumulatorParam``)
-    collects per-``partition_col`` [docs, ok, failed, cpu_ms] as the pass
+    collects per-``partition_id`` [docs, ok, failed, cpu_ms] as the pass
     runs, so callers get per-partition throughput without re-scanning the
     output.
 
@@ -191,12 +188,15 @@ def extract_articles(
             raise ValueError(f"unknown article columns: {sorted(unknown)}")
     want_content = "content" in art_cols
     art_fields = [f for f in ARTICLE_FIELDS if f.name in art_cols]
-    passthrough = _passthrough_fields(df.schema, html_col, keep_html)
+    passthrough = _passthrough_fields(df.schema)
     out_schema = StructType(passthrough + art_fields + STATUS_FIELDS)
     pass_cols = [f.name for f in passthrough]
     out_cols = [f.name for f in out_schema.fields]
-    if metrics_acc is not None and partition_col not in df.columns:
-        raise ValueError(f"metrics_acc requires a {partition_col!r} column")
+    if metrics_acc is not None and "partition_id" not in df.columns:
+        raise ValueError("metrics_acc requires a 'partition_id' column")
+    fix_uris = options.fix_relative_uris
+    if fix_uris and "url" not in df.columns:
+        raise ValueError("fix_relative_uris requires a 'url' column")
     if html_codec not in (None, "gzip"):
         raise ValueError(f"unknown html_codec: {html_codec!r}")
 
@@ -207,8 +207,8 @@ def extract_articles(
         for pdf in batches:
             rows = {name: [] for name in art_cols}
             statuses, errors, timings = [], [], []
-            bases = pdf[base_url_col] if base_url_col is not None else None
-            for idx, raw in enumerate(pdf[html_col]):
+            bases = pdf["url"] if fix_uris else None
+            for idx, raw in enumerate(pdf["html"]):
                 t0 = time.perf_counter()
                 if html_codec == "gzip" and raw is not None:
                     try:
@@ -245,7 +245,7 @@ def extract_articles(
             out["extract_ms"] = timings
             if metrics_acc is not None:
                 local: dict = {}
-                pids = pdf[partition_col]
+                pids = pdf["partition_id"]
                 for idx, status in enumerate(statuses):
                     pid = int(pids.iloc[idx])
                     m = local.get(pid)
@@ -269,7 +269,7 @@ READERABLE_SCHEMA_FIELDS = [
 ]
 
 
-def readerable_flags(df: DataFrame, html_col="html", url_col="url") -> DataFrame:
+def readerable_flags(df: DataFrame) -> DataFrame:
     """mozilla isProbablyReaderable over a pages DataFrame: (url, readerable,
     readerable_score) per page, vectorized mapInPandas (no per-row Python at
     the Spark API level).  Semantics: readability_spark/readerable.py; the
@@ -277,15 +277,13 @@ def readerable_flags(df: DataFrame, html_col="html", url_col="url") -> DataFrame
     """
     from readability_spark.readerable import is_probably_readerable
 
-    out_schema = StructType(
-        [df.schema[url_col]] + READERABLE_SCHEMA_FIELDS
-    )
+    out_schema = StructType([df.schema["url"]] + READERABLE_SCHEMA_FIELDS)
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prepare_python_worker()
         for pdf in batches:
             flags, scores = [], []
-            for raw in pdf[html_col]:
+            for raw in pdf["html"]:
                 try:
                     ok, score = is_probably_readerable(raw)
                 except Exception:  # undecodable html: not readerable
@@ -294,21 +292,21 @@ def readerable_flags(df: DataFrame, html_col="html", url_col="url") -> DataFrame
                 scores.append(None if score is None else round(score, 4))
             yield pd.DataFrame(
                 {
-                    url_col: pdf[url_col],
+                    "url": pdf["url"],
                     "readerable": pd.array(flags, dtype="boolean"),
                     "readerable_score": pd.array(scores, dtype="Float64"),
                 }
             )
 
-    return df.select(url_col, html_col).mapInPandas(run_batches, schema=out_schema)
+    return df.select("url", "html").mapInPandas(run_batches, schema=out_schema)
 
 
-def with_partition_id(df: DataFrame, num_partitions: int, url_col="url") -> DataFrame:
+def with_partition_id(df: DataFrame, num_partitions: int) -> DataFrame:
     """Logical partition key: stable hash of url (north_rule: explicit hash
     partitioning on url)."""
     return df.withColumn(
         "partition_id",
-        F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_partitions)).cast("int"),
+        F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions)).cast("int"),
     )
 
 
@@ -482,8 +480,9 @@ def run_job(
     ``commit_groups`` commit units; each unit is extracted, appended to the
     output (parquet partitioned by partition_id), and recorded in the
     lineage table before the next unit starts.  A re-run with the same
-    run_id anti-joins the lineage table and processes only missing
-    partitions — resume without recompute (north_rule).  On an Iceberg
+    run_id reads the partition ids its lineage rows mark ``ok`` into a
+    driver-side set and filters the input to the rest — resume without
+    recompute (north_rule).  The write is at-least-once (module docstring).  On an Iceberg
     catalog each commit unit is one transactional append; the parquet
     layout here is the sandbox stand-in.
 
@@ -520,8 +519,6 @@ def run_job(
         extracted = extract_articles(
             subset.drop("salt"),
             options=options,
-            # fixRelativeUris resolves against each row's own url
-            base_url_col="url" if options is not None and options.fix_relative_uris else None,
             article_columns=article_columns,
             metrics_acc=acc,
             html_codec=html_codec,

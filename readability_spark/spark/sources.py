@@ -15,8 +15,10 @@ Spark docs):
   partition pruning on crawl date, url-bucket co-location for the
   extraction shuffle;
 - appends are transactional per commit group (``writeTo(t).append()``),
-  which is what makes the lineage-keyed resume exactly-once at table level;
-- the resume anti-join and golden compares are unchanged — they operate on
+  so a group's rows land whole or not at all; the output append and the
+  lineage append are still two commits, so resume is at-least-once (a
+  run that dies between them appends that group again, see spark/job.py);
+- resume filtering and golden compares are unchanged — they operate on
   DataFrames, not on the storage format.
 """
 

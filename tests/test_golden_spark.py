@@ -225,27 +225,42 @@ def test_scored_extraction_matches_local_golden(spark, pages_df, fixture_rows):
     assert not mismatches, f"{len(mismatches)} mismatches, first: {mismatches[:3]}"
 
 
-def test_fix_relative_uris_spark_plumbing(spark, pages_df, fixture_rows):
-    """extract_articles(base_url_col='url', fix_relative_uris=True) resolves
-    each row's URIs against that row's own url, byte-identical to the local
-    extractor given the same base."""
+def test_fix_relative_uris_spark_plumbing(spark, pages_df, fixture_rows, tmp_path):
+    """With Options(fix_relative_uris=True), extract_articles and run_job
+    resolve each row's URIs against that row's own ``url`` column,
+    byte-identical per url to the local extractor given the same base.
+    Some fixture rows change with a base URL, so a path that dropped the
+    base would fail here; a frame without ``url`` is rejected up front."""
     from readability_spark.options import Options
     from readability_spark.pipeline import extract_row
 
     opts = Options(fix_relative_uris=True)
-    got = {
+    want, changed = {}, 0
+    for r in fixture_rows:
+        want[r.url] = extract_row(r.html, options=opts, base_url=r.url)
+        article = want[r.url][0]
+        unfixed = extract_row(r.html, options=opts)[0]
+        if article is not None and article.content != unfixed.content:
+            changed += 1
+    assert changed > 0  # else this test could not see a missing base URL
+
+    got = {r.url: r for r in extract_articles(pages_df, options=opts).collect()}
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    run_job(spark, pages_df, out, lin, run_id="u", num_partitions=4, salt_n=1,
+            commit_groups=1, options=opts)
+    job = {
         r.url: r
-        for r in extract_articles(pages_df, options=opts, base_url_col="url").collect()
+        for r in spark.read.parquet(out).select("url", "status", "content").collect()
     }
-    checked = 0
-    for r in fixture_rows[:50]:
-        want_article, want_status, _ = extract_row(r.html, options=opts, base_url=r.url)
-        have = got[r.url]
-        assert have.status == want_status
-        if want_article is not None:
-            assert have.content == want_article.content
-            checked += 1
-    assert checked > 0
+    for rows in (got, job):
+        assert len(rows) == len(fixture_rows)
+        for url, (want_article, want_status, _) in want.items():
+            have = rows[url]
+            assert have.status == want_status, url
+            assert have.content == (want_article and want_article.content), url
+
+    with pytest.raises(ValueError, match="url"):
+        extract_articles(pages_df.drop("url"), options=opts)
 
 
 def test_readerable_flags_spark(spark, pages_df):
