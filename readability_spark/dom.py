@@ -149,16 +149,6 @@ class Node:
         other.parent = parent
         self.parent = None
 
-    def insert_before(self, other, reference):
-        """Insert ``other`` immediately before child ``reference``."""
-        global _REV
-        _REV += 1
-        if other.parent is not None:
-            other.parent.children.remove(other)
-        idx = self.children.index(reference)
-        self.children.insert(idx, other)
-        other.parent = self
-
     # ------------------------------------------------------------- structure
 
     def next_sibling(self):
@@ -177,9 +167,6 @@ class Node:
             if p.children[j].kind == ELEMENT:
                 return p.children[j]
         return None
-
-    def last_child(self):
-        return self.children[-1] if self.children else None
 
     def ancestors(self):
         """All ancestors from parent upward (excluding self)."""
@@ -255,16 +242,6 @@ class Node:
         global _REV
         _REV += 1
         self.name = name
-
-    # ----------------------------------------------------------------- preds
-
-    @property
-    def is_element(self):
-        return self.kind == ELEMENT
-
-    @property
-    def is_text(self):
-        return self.kind == TEXT
 
 
 def new_element(name, attrs=None):

@@ -143,7 +143,6 @@ def extract_articles(
     options=None,
     article_columns=None,
     metrics_acc=None,
-    html_codec=None,
 ) -> DataFrame:
     """Add the Article columns to a pages DataFrame.
 
@@ -168,15 +167,6 @@ def extract_articles(
     collects per-``partition_id`` [docs, ok, failed, cpu_ms] as the pass
     runs, so callers get per-partition throughput without re-scanning the
     output.
-
-    ``html_codec="gzip"`` declares the html column holds gzip-compressed
-    bytes, decompressed (zlib, C-speed) inside the UDF right next to the
-    parser.  This is the exchange-bandwidth lever for fat-row tables: the
-    ~10:1-compressible html then moves through the columnar scan batches,
-    the shuffle, AND the JVM->Python Arrow pipe at its compressed size —
-    the decomposition in BENCH/BASELINE.md shows those byte-moving stages
-    are the extraction job's non-scaling bandwidth floor.  A corrupt
-    member yields a status='error' row, never a dead batch.
     """
     options = options or DEFAULT_OPTIONS
     if article_columns is None:
@@ -197,29 +187,15 @@ def extract_articles(
     fix_uris = options.fix_relative_uris
     if fix_uris and "url" not in df.columns:
         raise ValueError("fix_relative_uris requires a 'url' column")
-    if html_codec not in (None, "gzip"):
-        raise ValueError(f"unknown html_codec: {html_codec!r}")
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prepare_python_worker()
-        import gzip as _gzip
-
         for pdf in batches:
             rows = {name: [] for name in art_cols}
             statuses, errors, timings = [], [], []
             bases = pdf["url"] if fix_uris else None
             for idx, raw in enumerate(pdf["html"]):
                 t0 = time.perf_counter()
-                if html_codec == "gzip" and raw is not None:
-                    try:
-                        raw = _gzip.decompress(bytes(raw))
-                    except Exception as exc:
-                        timings.append((time.perf_counter() - t0) * 1000.0)
-                        statuses.append("error")
-                        errors.append(f"gzip: {exc}")
-                        for name in art_cols:
-                            rows[name].append(None)
-                        continue
                 article, status, error = extract_row(
                     raw,
                     options=options,
@@ -472,7 +448,6 @@ def run_job(
     commit_groups: int = 4,
     options=None,
     article_columns=None,
-    html_codec=None,
 ) -> JobReport:
     """Resumable extraction job with per-partition lineage.
 
@@ -521,7 +496,6 @@ def run_job(
             options=options,
             article_columns=article_columns,
             metrics_acc=acc,
-            html_codec=html_codec,
         )
         append_ref(extracted, output_path, ("partition_id",))
         finished_at = pd.Timestamp.utcnow().tz_localize(None)

@@ -82,23 +82,32 @@ def synthesize_html(doc_id, text, lang):
     )
 
 
-def _synthesize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_python_worker()
-    for pdf in batches:
-        urls = [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])]
-        htmls = [
-            synthesize_html(i, t, l).encode("utf-8")
-            for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-        ]
-        yield pd.DataFrame(
-            {
-                "url": urls,
-                "warc_ts": pd.to_datetime(pdf["doc_id"] * 37, unit="s", origin="2026-01-01"),
-                "html": htmls,
-                "text": pdf["text"],
-                "lang": pdf["lang"],
-            }
-        )
+def _pages_from(documents_df, synthesize, *extra):
+    """documents -> PAGES_SCHEMA rows whose html is
+    ``synthesize(doc_id, text, lang, *extra)``: the one vectorized
+    (mapInPandas, Arrow batches) body behind every pages builder below."""
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "url": [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])],
+                    "warc_ts": pd.to_datetime(
+                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
+                    ),
+                    "html": [
+                        synthesize(i, t, l, *extra).encode("utf-8")
+                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
+                    ],
+                    "text": pdf["text"],
+                    "lang": pdf["lang"],
+                }
+            )
+
+    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
+        synth, schema=PAGES_SCHEMA
+    )
 
 
 def pages_from_documents(documents_df):
@@ -107,9 +116,7 @@ def pages_from_documents(documents_df):
     Vectorized (mapInPandas, Arrow batches) — no per-row Python UDF calls at
     the Spark API level, per the north_rule input_hint.
     """
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        _synthesize_batches, schema=PAGES_SCHEMA
-    )
+    return _pages_from(documents_df, synthesize_html)
 
 
 def synthesize_junk_html(doc_id, text, lang):
@@ -156,30 +163,7 @@ def synthesize_junk_html(doc_id, text, lang):
 def junk_pages_from_documents(documents_df):
     """documents -> junk-laden pages (same schema as pages_from_documents);
     input for the extract_prepped_text driver query."""
-
-    def synth(batches):
-        prepare_python_worker()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_junk_html(i, t, l).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
-    )
+    return _pages_from(documents_df, synthesize_junk_html)
 
 
 def synthesize_media_html(doc_id, text, lang):
@@ -225,30 +209,7 @@ def synthesize_media_html(doc_id, text, lang):
 def media_pages_from_documents(documents_df):
     """documents -> media-heavy pages (same schema as pages_from_documents);
     input for the extract_media_text driver query."""
-
-    def synth(batches):
-        prepare_python_worker()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_media_html(i, t, l).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
-    )
+    return _pages_from(documents_df, synthesize_media_html)
 
 
 def synthesize_bench_html(doc_id, text, lang, n_paragraphs=80, n_nav_links=20):
@@ -279,27 +240,8 @@ def synthesize_bench_html(doc_id, text, lang, n_paragraphs=80, n_nav_links=20):
 
 def bench_pages_from_documents(documents_df, n_paragraphs=80, n_nav_links=20):
     """documents -> heavy bench pages (same schema as pages_from_documents)."""
-
-    def synth(batches):
-        prepare_python_worker()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize_bench_html(i, t, l, n_paragraphs, n_nav_links).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
+    return _pages_from(
+        documents_df, synthesize_bench_html, n_paragraphs, n_nav_links
     )
 
 
@@ -308,25 +250,4 @@ def read_pages(spark, sf_dir):
     parquet (deterministic, in-memory; never writes outside the repo)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return pages_from_documents(docs)
-
-
-def gzip_html(pages_df):
-    """pages -> same schema with the html column gzip-compressed
-    (deterministic: mtime=0).  Production tables at 100 TB store html this
-    way so the compressible bytes ride the scan/shuffle/Arrow exchange at
-    ~1/10 size; extract_articles(html_codec='gzip') decompresses next to
-    the parser."""
-    import gzip as _gzip
-
-    def compress(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            out = pdf.copy()
-            out["html"] = [
-                None if b is None else _gzip.compress(bytes(b), 6, mtime=0)
-                for b in pdf["html"]
-            ]
-            yield out
-
-    return pages_df.mapInPandas(compress, schema=pages_df.schema)
 

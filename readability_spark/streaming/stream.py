@@ -32,12 +32,9 @@ def _await_or_stop(query, timeout_secs):
         )
 
 
-def read_pages_stream(spark, input_dir, max_files_per_trigger=None):
+def read_pages_stream(spark, input_dir):
     """File-source stream of pages parquet dropped into ``input_dir``."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return reader.parquet(input_dir)
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
 def stream_extract_to_parquet(

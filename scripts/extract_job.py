@@ -72,15 +72,6 @@ def parse_args(argv):
         "serializing/shipping/writing ~25 KB of HTML per row)",
     )
     p.add_argument(
-        "--html-codec",
-        default=None,
-        choices=["gzip"],
-        help="declare the html column gzip-compressed; decompressed inside "
-        "the UDF next to the parser, so the compressible bytes ride the "
-        "scan batches / shuffle / Arrow pipe at ~1/10 size (the job's "
-        "bandwidth floor — see BENCH/BASELINE.md decomposition)",
-    )
-    p.add_argument(
         "--warmup",
         action="store_true",
         help="run a small untimed extraction first so every Python worker has "
@@ -115,15 +106,6 @@ def main(argv=None):
 
     cores = spark.sparkContext.defaultParallelism
 
-    if args.warmup:
-        from pyspark.sql import functions as F
-        from readability_spark.spark.job import extract_articles
-
-        warm = read_ref(spark, args.input).limit(cores * 64).repartition(cores * 2)
-        extract_articles(warm, html_codec=args.html_codec).agg(
-            F.count(F.lit(1))
-        ).collect()
-
     options = None
     if args.content_extraction or args.fix_relative_uris or args.min_text_length is not None:
         from readability_spark.options import Options
@@ -135,6 +117,15 @@ def main(argv=None):
         if args.min_text_length is not None:
             kwargs["min_text_length"] = args.min_text_length
         options = Options(**kwargs)
+
+    if args.warmup:
+        from pyspark.sql import functions as F
+        from readability_spark.spark.job import extract_articles
+
+        # the job's own options, so the workers also import the passes
+        # (scoring, prep, urifix) that pipeline.extract loads lazily
+        warm = read_ref(spark, args.input).limit(cores * 64).repartition(cores * 2)
+        extract_articles(warm, options=options).agg(F.count(F.lit(1))).collect()
 
     t0 = time.time()
     pages = read_ref(spark, args.input)
@@ -157,7 +148,6 @@ def main(argv=None):
             if args.article_columns
             else None
         ),
-        html_codec=args.html_codec,
     )
     wall = time.time() - t0
 

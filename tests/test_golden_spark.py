@@ -362,32 +362,39 @@ def test_lineage_scheme_paths_not_treated_as_local(spark, tmp_path):
     assert _read_lineage(spark, f"file://{tmp_path}/missing") is None
 
 
-def test_html_codec_gzip_roundtrip(spark, pages_df, extracted):
-    """extract_articles(html_codec='gzip') over gzip-compressed html equals
-    the plain run row for row; a corrupt gzip member isolates as an error
-    row instead of killing the Arrow batch."""
-    from readability_spark.spark.pages import gzip_html
+@pytest.mark.parametrize(
+    "builder, synthesizer, kwargs",
+    [
+        ("pages_from_documents", "synthesize_html", {}),
+        ("junk_pages_from_documents", "synthesize_junk_html", {}),
+        ("media_pages_from_documents", "synthesize_media_html", {}),
+        (
+            "bench_pages_from_documents",
+            "synthesize_bench_html",
+            {"n_paragraphs": 3, "n_nav_links": 2},
+        ),
+    ],
+    ids=["contract", "junk", "media", "bench"],
+)
+def test_pages_builders_match_synthesizers(spark, builder, synthesizer, kwargs):
+    """Every pages builder emits, per document, page_url(...) and exactly
+    the bytes of its synthesize_* template; text and lang pass through."""
+    from readability_spark.spark import pages as p
 
-    gz = gzip_html(pages_df)
-    got = {r.url: r for r in extract_articles(gz, html_codec="gzip").collect()}
-    assert set(got) == set(extracted)
-    for url, row in extracted.items():
-        a = {k: v for k, v in row.asDict().items() if k != "extract_ms"}
-        b = {k: v for k, v in got[url].asDict().items() if k != "extract_ms"}
-        assert a == b, url
-
-    # corrupt member: valid gzip magic, truncated stream
-    bad = spark.createDataFrame(
-        [("u1", b"\x1f\x8b\x08\x00garbage"), ("u2", None)], "url string, html binary"
-    )
-    rows = {r.url: r for r in extract_articles(bad, html_codec="gzip").collect()}
-    assert rows["u1"].status == "error" and rows["u1"].error.startswith("gzip:")
-    assert rows["u2"].status == "error"
-
-    # unknown codec rejected loudly
-    with pytest.raises(ValueError):
-        extract_articles(pages_df, html_codec="zstd")
-
+    docs = [
+        (i, f"Story {i}: <b>prices</b> & \"wages\" rose", ("en", "de", "fr")[i % 3], f"s{i % 2}")
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string, lang string, source string")
+    out = getattr(p, builder)(df, **kwargs)
+    assert out.schema == p.PAGES_SCHEMA
+    got = {r.url: r for r in out.collect()}
+    assert len(got) == len(docs)
+    for i, text, lang, source in docs:
+        row = got[p.page_url(i, source)]
+        html = getattr(p, synthesizer)(i, text, lang, **kwargs)
+        assert bytes(row.html) == html.encode("utf-8")
+        assert (row.text, row.lang) == (text, lang)
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="zipimporter re-reads lazily on 3.13+")

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
 import sys
 from pathlib import Path
 
+import pandas as pd
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -35,6 +39,64 @@ class TestCli:
         )
         assert (args.num_partitions, args.salt_n, args.commit_groups) == (8, 2, 1)
         assert args.warmup and args.report_json == "/tmp/x.json"
+
+
+class TestSubmitRun:
+    """One real run of scripts/extract_job.py in a fresh Python process, as
+    spark-submit would start it: warm-up, content extraction, report line,
+    and a resume of the same run id."""
+
+    def _run(self, tmp_path, *flags):
+        repo = Path(__file__).resolve().parents[1]
+        env = dict(os.environ)
+        env["PYSPARK_SUBMIT_ARGS"] = "--master local[2] pyspark-shell"
+        env["PYTHONPATH"] = os.pathsep.join(
+            filter(None, [str(repo), env.get("PYTHONPATH")])
+        )
+        cmd = [sys.executable, str(repo / "scripts" / "extract_job.py"), *flags]
+        return subprocess.run(
+            cmd, cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+        )
+
+    def test_extract_and_resume(self, tmp_path):
+        from readability_spark.fixtures import build_rows
+
+        rows = build_rows(40)
+        (tmp_path / "pages").mkdir()
+        pd.DataFrame(
+            {
+                "url": [r.url for r in rows],
+                "warc_ts": [r.warc_ts for r in rows],
+                "html": [r.html for r in rows],
+                "text": [r.text for r in rows],
+                "lang": [r.lang for r in rows],
+            }
+        ).to_parquet(
+            tmp_path / "pages" / "part-0.parquet", index=False, coerce_timestamps="us"
+        )
+        job = [
+            "--input", str(tmp_path / "pages"), "--output", str(tmp_path / "out"),
+            "--lineage", str(tmp_path / "lineage"), "--run-id", "r1",
+            "--num-partitions", "4", "--salt-n", "1", "--commit-groups", "2",
+            "--content-extraction",
+        ]
+
+        first = self._run(
+            tmp_path, *job, "--warmup", "--report-json", str(tmp_path / "report.json")
+        )
+        assert first.returncode == 0, first.stderr[-3000:]
+        report = json.loads(first.stdout.strip().splitlines()[-1])
+        assert report["docs"] == len(rows)
+        assert json.loads((tmp_path / "report.json").read_text()) == report
+        out = pd.read_parquet(tmp_path / "out", columns=["url"])
+        assert sorted(out["url"]) == sorted(r.url for r in rows)
+
+        again = self._run(tmp_path, *job)
+        assert again.returncode == 0, again.stderr[-3000:]
+        assert json.loads(again.stdout.strip().splitlines()[-1])["partitions_processed"] == 0
+
+        # the removed html codec flag is a usage error, not a silent no-op
+        assert self._run(tmp_path, *job, "--html-codec", "gzip").returncode == 2
 
 
 class TestSources:

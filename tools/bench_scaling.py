@@ -25,8 +25,12 @@ clean coordination measurement) and 8->32 (full host — bandwidth-bound).
 Writes BENCH/BASELINE.md and BENCH/scaling.json.
 
 Run:  python tools/bench_scaling.py             (~12-15 min)
-Env:  PAIRS "lo:hi:replicate,..." (default "2:8:10,8:32:40"),
-      SF_DIR, PAGE_PARAGRAPHS (default 80)
+Env:  PAIRS "lo:hi:replicate,..." (default "2:8:20,8:32:120"),
+      REPEATS (runs per level, default 3), SF_DIR (the documents
+      scale-factor directory), PAGE_PARAGRAPHS (default 80),
+      EXTRA_SPARK_CONF (comma-separated k=v confs for both levels),
+      EXTRA_JOB_ARGS (extra extract_job.py flags for both levels),
+      OUT_SUFFIX (suffix of the written scaling/BASELINE file names)
 """
 
 from __future__ import annotations
@@ -118,9 +122,7 @@ def materialize_input(sf_dir, factor, n_paragraphs):
     sf = sf_dir.rstrip("/").split("sf")[-1]
     # synth-source tag: template edits invalidate the cache (see bench.py)
     tag = bench._synth_tag(bench_pages_from_documents)
-    codec = os.environ.get("INPUT_CODEC", "")
-    suffix = f"_{codec}" if codec else ""
-    path = WORK / "input" / f"pages_sf{sf}_r{factor}_p{n_paragraphs}_{tag}{suffix}"
+    path = WORK / "input" / f"pages_sf{sf}_r{factor}_p{n_paragraphs}_{tag}"
     spark = get_spark(
         app_name="scaling-materialize",
         master="local[32]",
@@ -129,10 +131,6 @@ def materialize_input(sf_dir, factor, n_paragraphs):
     if not (path / "_SUCCESS").exists():
         docs = bench.replicated_documents(spark, sf_dir, factor).repartition(64, "doc_id")
         pages = bench_pages_from_documents(docs, n_paragraphs=n_paragraphs)
-        if codec == "gzip":
-            from readability_spark.spark.pages import gzip_html
-
-            pages = gzip_html(pages)
         pages.write.mode("overwrite").parquet(str(path))
     n = spark.read.parquet(str(path)).count()
     spark.stop()
@@ -196,10 +194,6 @@ def run_level(cores, pages_path, tag):
     for kv in filter(None, os.environ.get("EXTRA_SPARK_CONF", "").split(",")):
         i = cmd.index("--py-files")
         cmd[i:i] = ["--conf", kv]
-    # INPUT_CODEC=gzip: the materialized input stores gzip-compressed html
-    # (see materialize_input) and the job decompresses in-UDF
-    if os.environ.get("INPUT_CODEC") == "gzip":
-        cmd += ["--html-codec", "gzip"]
     # EXTRA_JOB_ARGS: extra extract_job.py flags for supplementary runs
     # (e.g. "--content-extraction --min-text-length 0" to measure the
     # Arc90-scored pipeline); identical at both levels of a pair
