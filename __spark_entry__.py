@@ -14,17 +14,26 @@ byte-identical extracted text per url (the north_rule invariant).
 
 from __future__ import annotations
 
+import shutil
 import sys
 from collections.abc import Callable
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from readability_spark.spark.job import extract_articles, with_partition_id
-from readability_spark.spark.pages import read_pages
+from readability_spark.spark.pages import page_url, read_pages, synthesize_html
+from readability_spark.spark.warc import (
+    build_wat,
+    build_warc,
+    read_warc_pages,
+    read_wat_metadata,
+    read_wet_documents,
+)
 
 _Q = {}
 _O = {}
@@ -232,6 +241,33 @@ def readerable_flags_q(spark, sf_dir):
     return readerable_flags(read_pages(spark, sf_dir))
 
 
+# ------------------------------------------------------------ crawl archives
+_ARCHIVE_DATE = "2026-03-01T00:00:00Z"
+
+
+def _fresh_dir(kind, sf_dir, *sub):
+    """An empty ``/tmp/readability_<kind>/<sf>[/<sub>...]`` directory."""
+    base = Path(f"/tmp/readability_{kind}", Path(sf_dir).name, *sub)
+    shutil.rmtree(base, ignore_errors=True)
+    base.mkdir(parents=True)
+    return base
+
+
+def _write_archives(sf_dir, suffix, record, build=build_warc):
+    """Package ``documents`` as 4 gzipped archives ``crawl-<i>.<suffix>``,
+    archive i holding ``record(row)`` for the rows with ``doc_id % 4 == i``
+    (built by ``build``), in a fresh directory named after the archive kind;
+    return the directory."""
+    base = _fresh_dir(suffix.split(".")[-2], sf_dir)
+    docs = pd.read_parquet(
+        f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang", "source"]
+    )
+    for part in range(4):
+        records = [record(r) for r in docs[docs["doc_id"] % 4 == part].itertuples()]
+        (base / f"crawl-{part}.{suffix}").write_bytes(build(records, compress=True))
+    return str(base)
+
+
 @_q(
     "warc_extract_meta",
     f"""
@@ -248,34 +284,19 @@ def warc_extract_meta(spark, sf_dir):
     the binaryFile-source connector (one task per archive), exploded to
     pages, and run through the same extraction — oracle equality with the
     parquet-sourced path proves the connector end to end."""
-    import shutil
-    from pathlib import Path
-
-    import pandas as pd
-
-    from readability_spark.spark.pages import page_url, synthesize_html
-    from readability_spark.spark.warc import build_warc, read_warc_pages
-
-    sf = sf_dir.rstrip("/").split("/")[-1]
-    base = Path(f"/tmp/readability_warc/{sf}")
-    shutil.rmtree(base, ignore_errors=True)
-    base.mkdir(parents=True)
-    docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang", "source"])
-    n_files = 4
-    for part in range(n_files):
-        sub = docs[docs["doc_id"] % n_files == part]
-        records = [
-            (
-                "response",
-                page_url(r.doc_id, r.source),
-                "2026-03-01T00:00:00Z",
-                synthesize_html(r.doc_id, r.text, r.lang).encode("utf-8"),
-            )
-            for r in sub.itertuples()
-        ]
-        (base / f"crawl-{part}.warc.gz").write_bytes(build_warc(records, compress=True))
-    pages = read_warc_pages(spark, str(base))
-    return extract_articles(pages).select("url", "title", "byline", "status")
+    base = _write_archives(
+        sf_dir,
+        "warc.gz",
+        lambda r: (
+            "response",
+            page_url(r.doc_id, r.source),
+            _ARCHIVE_DATE,
+            synthesize_html(r.doc_id, r.text, r.lang).encode("utf-8"),
+        ),
+    )
+    return extract_articles(read_warc_pages(spark, base)).select(
+        "url", "title", "byline", "status"
+    )
 
 
 @_q(
@@ -293,39 +314,20 @@ def wet_text_stats(spark, sf_dir):
     back via the binaryFile connector and fed straight to the text-side
     stats — the no-HTML-parse fast path.  Oracle equality with the parquet
     documents proves the WET connector end to end."""
-    import shutil
-    from pathlib import Path
-
-    import pandas as pd
-
-    from readability_spark.spark.pages import page_url
-    from readability_spark.spark.warc import build_warc, read_wet_documents
-
-    sf = sf_dir.rstrip("/").split("/")[-1]
-    base = Path(f"/tmp/readability_wet/{sf}")
-    shutil.rmtree(base, ignore_errors=True)
-    base.mkdir(parents=True)
-    docs = pd.read_parquet(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang", "source"]
+    base = _write_archives(
+        sf_dir,
+        "warc.wet.gz",
+        lambda r: (
+            "conversion",
+            page_url(r.doc_id, r.source),
+            _ARCHIVE_DATE,
+            r.text.encode("utf-8"),
+            {"WARC-Identified-Content-Language": r.lang}
+            if isinstance(r.lang, str) and r.lang.strip()
+            else {},
+        ),
     )
-    n_files = 4
-    for part in range(n_files):
-        sub = docs[docs["doc_id"] % n_files == part]
-        records = [
-            (
-                "conversion",
-                page_url(r.doc_id, r.source),
-                "2026-03-01T00:00:00Z",
-                r.text.encode("utf-8"),
-                {"WARC-Identified-Content-Language": r.lang}
-                if isinstance(r.lang, str) and r.lang.strip()
-                else {},
-            )
-            for r in sub.itertuples()
-        ]
-        (base / f"crawl-{part}.warc.wet.gz").write_bytes(build_warc(records, compress=True))
-    wet = read_wet_documents(spark, str(base))
-    return wet.select(
+    return read_wet_documents(spark, base).select(
         "url",
         F.length("text").alias("n_chars"),
         F.nullif(F.trim(F.col("lang")), F.lit("")).alias("lang"),
@@ -348,42 +350,19 @@ def wat_link_meta(spark, sf_dir):
     Common-Crawl JSON envelope (parsed head title + outlink list), read
     back via the binaryFile connector and skimmed without touching any
     HTML.  Oracle equality proves the JSON-envelope parser end to end."""
-    import shutil
-    from pathlib import Path
-
-    import pandas as pd
-
-    from readability_spark.spark.pages import page_url
-    from readability_spark.spark.warc import build_wat, read_wat_metadata
-
-    sf = sf_dir.rstrip("/").split("/")[-1]
-    base = Path(f"/tmp/readability_wat/{sf}")
-    shutil.rmtree(base, ignore_errors=True)
-    base.mkdir(parents=True)
-    docs = pd.read_parquet(
-        f"{sf_dir}/documents.parquet", columns=["doc_id", "source"]
+    base = _write_archives(
+        sf_dir,
+        "warc.wat.gz",
+        lambda r: (
+            page_url(r.doc_id, r.source),
+            _ARCHIVE_DATE,
+            f"Daily Report Number {r.doc_id} Edition",
+            [f"/promo/{r.doc_id}/{j}" for j in range(1 + r.doc_id % 3)],
+        ),
+        build=build_wat,
     )
-    n_files = 4
-    for part in range(n_files):
-        sub = docs[docs["doc_id"] % n_files == part]
-        entries = [
-            (
-                page_url(r.doc_id, r.source),
-                "2026-03-01T00:00:00Z",
-                f"Daily Report Number {r.doc_id} Edition",
-                [f"/promo/{r.doc_id}/{j}" for j in range(1 + r.doc_id % 3)],
-            )
-            for r in sub.itertuples()
-        ]
-        (base / f"crawl-{part}.warc.wat.gz").write_bytes(
-            build_wat(entries, compress=True)
-        )
-    wat = read_wat_metadata(spark, str(base))
-    return wat.select(
-        "url",
-        "title",
-        "n_links",
-        F.element_at(F.col("links"), 1).alias("first_link"),
+    return read_wat_metadata(spark, base).select(
+        "url", "title", "n_links", F.element_at(F.col("links"), 1).alias("first_link")
     )
 
 
@@ -410,17 +389,6 @@ def pdf_extract_text(spark, sf_dir):
 # ---------------------------------------------------------------- streaming
 
 
-def _stream_workdir(sf_dir, name):
-    import shutil
-    from pathlib import Path
-
-    sf = sf_dir.rstrip("/").split("/")[-1]
-    base = Path(f"/tmp/readability_stream/{sf}/{name}")
-    shutil.rmtree(base, ignore_errors=True)
-    (base / "input").mkdir(parents=True)
-    return base
-
-
 @_q(
     "stream_extract_meta",
     f"""
@@ -440,7 +408,7 @@ def stream_extract_meta(spark, sf_dir):
     streaming and batch are the same engine."""
     from readability_spark.streaming import stream_extract_to_parquet
 
-    base = _stream_workdir(sf_dir, "extract")
+    base = _fresh_dir("stream", sf_dir, "extract")
     read_pages(spark, sf_dir).write.mode("overwrite").parquet(str(base / "input"))
     out = stream_extract_to_parquet(
         spark, str(base / "input"), str(base / "output"), str(base / "checkpoint")

@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 from ..options import DEFAULT_OPTIONS
 from ..pipeline import extract_row
 from .session import prepare_python_worker
-from .sources import append_ref, read_ref
+from .sources import append_ref, local_path, read_ref
 
 ARTICLE_FIELDS = [
     StructField("byline", StringType(), True),
@@ -322,20 +322,8 @@ def _read_lineage(spark, lineage_path):
     None) from "lineage exists but is unreadable" (corrupt →
     LineageCorruptError).  Silently treating corrupt lineage as fresh would
     re-append already-committed partitions."""
-    import re as _re
-
-    from .sources import is_table_ref
-
-    # a path is local only when it carries NO URI scheme at all (or the
-    # file: scheme): Hadoop normalizes to single-slash forms like
-    # dbfs:/x or file:/x, so matching on '://' would misroute those to
-    # os.listdir and silently treat existing remote lineage as a fresh run
-    scheme = _re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", lineage_path)
-    local = not is_table_ref(lineage_path) and (
-        scheme is None or scheme.group(1).lower() == "file"
-    )
-    if local:
-        fs_path = _re.sub(r"^file:(//)?", "", lineage_path)
+    fs_path = local_path(lineage_path)
+    if fs_path is not None:
         try:
             entries = os.listdir(fs_path)
         except FileNotFoundError:
@@ -376,11 +364,11 @@ def _append_lineage(spark, lineage_rows, lineage_path):
     (one row per logical partition per commit group); a path sink writes
     them directly with pyarrow — spinning up a Spark job to persist 64 tiny
     rows costs ~1.5 s of fixed overhead per commit group, which at small
-    commit units is pure scaling-efficiency loss.  Table refs (Iceberg)
-    still go through the engine so the append is transactional."""
-    from .sources import is_table_ref
-
-    if is_table_ref(lineage_path):
+    commit units is pure scaling-efficiency loss.  Table refs (Iceberg) and
+    remote paths still go through the engine, which owns their file
+    systems; a table append is transactional."""
+    fs_path = local_path(lineage_path)
+    if fs_path is None:
         append_ref(spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA), lineage_path)
         return
     import uuid
@@ -405,15 +393,15 @@ def _append_lineage(spark, lineage_rows, lineage_path):
         [pa.array(col, type=field.type) for col, field in zip(cols, schema)],
         schema=schema,
     )
-    os.makedirs(lineage_path, exist_ok=True)
+    os.makedirs(fs_path, exist_ok=True)
     # crash-safe commit: write to a dot-prefixed temp name (Spark/Hadoop
     # readers skip '.'/'_' files) then atomically rename into place, so a
     # crash mid-write (OOM/preemption — exactly the resume scenario lineage
     # exists for) can never leave a truncated parquet the resume path reads
     name = f"lineage-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(lineage_path, f".{name}.tmp")
+    tmp = os.path.join(fs_path, f".{name}.tmp")
     pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(lineage_path, name))
+    os.rename(tmp, os.path.join(fs_path, name))
 
 
 def completed_partitions(spark, lineage_path, run_id):
@@ -466,8 +454,16 @@ def run_job(
     scan of the data; nothing is read back.  ``article_columns`` prunes the
     emitted Article columns (see extract_articles): a text-corpus job that
     never consumes the content HTML should pass e.g.
-    ``("title", "text_content", "length", "lang")``.
+    ``("title", "text_content", "length", "lang")``.  ``num_partitions``,
+    ``salt_n`` and ``commit_groups`` below 1 raise ValueError.
     """
+    for name, value in (
+        ("num_partitions", num_partitions),
+        ("salt_n", salt_n),
+        ("commit_groups", commit_groups),
+    ):
+        if value < 1:
+            raise ValueError(f"{name} must be >= 1, got {value}")
     t_start = time.time()
     pages = with_partition_id(pages_df, num_partitions)
 

@@ -24,6 +24,8 @@ Spark docs):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 TABLE_PREFIX = "table:"
@@ -31,6 +33,20 @@ TABLE_PREFIX = "table:"
 
 def is_table_ref(ref: str) -> bool:
     return ref.startswith(TABLE_PREFIX)
+
+
+def local_path(ref: str) -> str | None:
+    """The filesystem path a ref names when it is local — no URI scheme, or
+    ``file:`` (``file:/x`` and ``file:///x`` both give ``/x``) — else None
+    (``table:`` refs and remote URIs).  Hadoop normalizes URIs to
+    single-slash forms like ``dbfs:/x``, so a test for ``://`` would take
+    those for local paths."""
+    scheme = re.match(r"([A-Za-z][A-Za-z0-9+.-]*):", ref)
+    if scheme is None:
+        return ref
+    if scheme.group(1).lower() == "file":
+        return re.sub(r"^file:(//)?", "", ref, flags=re.IGNORECASE)
+    return None
 
 
 def read_ref(spark, ref: str) -> DataFrame:

@@ -18,6 +18,7 @@ driver-side.
 from __future__ import annotations
 
 import io
+import json
 import zlib
 from typing import Iterator
 
@@ -111,48 +112,63 @@ def _http_body(payload: bytes) -> bytes:
     return payload
 
 
-def warc_to_page_rows(data: bytes):
-    """(url, warc_ts, html, text, lang) tuples for every response record."""
-    rows = []
+def _records(data: bytes, warc_type: str):
+    """Yield (url, warc_ts, payload, headers) for every ``warc_type``
+    record that names a target url."""
     for headers, payload in parse_warc(data):
-        if headers.get("warc-type") != "response":
+        if headers.get("warc-type") != warc_type:
             continue
         url = headers.get("warc-target-uri")
         if not url:
             continue
         ts = headers.get("warc-date")
-        rows.append(
-            (
-                url,
-                pd.to_datetime(ts).tz_localize(None) if ts else None,
-                _http_body(payload),
-                None,
-                None,
-            )
+        yield (
+            url,
+            pd.to_datetime(ts).tz_localize(None) if ts else None,
+            payload,
+            headers,
         )
-    return rows
 
 
-def read_warc_pages(spark, path) -> DataFrame:
-    """WARC file(s) -> pages DataFrame (url, warc_ts, html, text, lang).
+def _read_archives(spark, path, to_rows, schema) -> DataFrame:
+    """Archive file(s) -> one DataFrame row per tuple ``to_rows`` returns.
 
     ``path`` accepts the globs the binaryFile source accepts; each file is
-    one input row -> one parse task, exploded to one output row per
-    response record.
-    """
+    one input row -> one parse task, its records exploded in mapInPandas."""
     files = spark.read.format("binaryFile").load(path).select("content")
+    columns = schema.fieldNames()
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prepare_python_worker()
         for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rows.extend(warc_to_page_rows(bytes(blob)))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+            rows = [row for blob in pdf["content"] for row in to_rows(bytes(blob))]
+            yield pd.DataFrame(rows, columns=columns)
 
-    return files.mapInPandas(explode, schema=PAGES_SCHEMA)
+    return files.mapInPandas(explode, schema=schema)
+
+
+def warc_to_page_rows(data: bytes):
+    """(url, warc_ts, html, text, lang) tuples for every response record."""
+    return [
+        (url, ts, _http_body(payload), None, None)
+        for url, ts, payload, _ in _records(data, "response")
+    ]
+
+
+def read_warc_pages(spark, path) -> DataFrame:
+    """WARC file(s) -> pages DataFrame (url, warc_ts, html, text, lang),
+    one row per response record."""
+    return _read_archives(spark, path, warc_to_page_rows, PAGES_SCHEMA)
+
+
+WET_SCHEMA = StructType(
+    [
+        StructField("url", StringType(), False),
+        StructField("warc_ts", TimestampType(), True),
+        StructField("text", StringType(), True),
+        StructField("lang", StringType(), True),
+    ]
+)
 
 
 def wet_to_document_rows(data: bytes):
@@ -163,18 +179,12 @@ def wet_to_document_rows(data: bytes):
     envelope); ``WARC-Identified-Content-Language`` carries a
     comma-separated language list — the primary one is kept."""
     rows = []
-    for headers, payload in parse_warc(data):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        ts = headers.get("warc-date")
+    for url, ts, payload, headers in _records(data, "conversion"):
         langs = headers.get("warc-identified-content-language")
         rows.append(
             (
                 url,
-                pd.to_datetime(ts).tz_localize(None) if ts else None,
+                ts,
                 payload.decode("utf-8", errors="replace"),
                 langs.split(",")[0].strip() if langs else None,
             )
@@ -183,37 +193,10 @@ def wet_to_document_rows(data: bytes):
 
 
 def read_wet_documents(spark, path) -> DataFrame:
-    """WET file(s) -> (url, warc_ts, text, lang) DataFrame.
-
-    Same distribution model as read_warc_pages: one binaryFile row per
-    archive -> one parse task, records exploded in mapInPandas.  This is
-    the text-tier ingest: when the crawl's own extraction suffices, the
-    HTML parse is skipped entirely and the text feeds the dedup/quality/
-    lang-id operators directly."""
-    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
-
-    schema = StructType(
-        [
-            StructField("url", StringType(), False),
-            StructField("warc_ts", TimestampType(), True),
-            StructField("text", StringType(), True),
-            StructField("lang", StringType(), True),
-        ]
-    )
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rows.extend(wet_to_document_rows(bytes(blob)))
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "text", "lang"])
-
-    return files.mapInPandas(explode, schema=schema)
-
-
-# ------------------------------------------------------------- test support
+    """WET file(s) -> (url, warc_ts, text, lang) DataFrame: the text-tier
+    ingest, which reads the crawl's own extracted text and skips the HTML
+    parse entirely."""
+    return _read_archives(spark, path, wet_to_document_rows, WET_SCHEMA)
 
 
 WAT_SCHEMA = StructType(
@@ -234,16 +217,8 @@ def wat_to_metadata_rows(data: bytes):
     title and outlink list live under Envelope → Payload-Metadata →
     HTTP-Response-Metadata → HTML-Metadata.  Malformed JSON skips the one
     record, never the archive."""
-    import json
-
     rows = []
-    for headers, payload in parse_warc(data):
-        if headers.get("warc-type") != "metadata":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        ts = headers.get("warc-date")
+    for url, ts, payload, _ in _records(data, "metadata"):
         try:
             env = json.loads(payload.decode("utf-8", errors="replace"))
         except Exception:
@@ -260,46 +235,23 @@ def wat_to_metadata_rows(data: bytes):
             for l in (html_md.get("Links") or [])
             if isinstance(l, dict) and l.get("url")
         ]
-        rows.append(
-            (
-                url,
-                pd.to_datetime(ts).tz_localize(None) if ts else None,
-                title,
-                len(links),
-                links,
-            )
-        )
+        rows.append((url, ts, title, len(links), links))
     return rows
 
 
 def read_wat_metadata(spark, path) -> DataFrame:
-    """WAT file(s) -> (url, warc_ts, title, n_links, links) DataFrame.
+    """WAT file(s) -> (url, warc_ts, title, n_links, links) DataFrame: the
+    metadata-tier ingest, which reads the crawl-parsed titles and outlinks
+    without touching the raw HTML."""
+    return _read_archives(spark, path, wat_to_metadata_rows, WAT_SCHEMA)
 
-    The metadata-tier ingest (crawl-parsed titles + link graph without
-    touching the raw HTML): same distribution model as read_warc_pages —
-    one binaryFile row per archive -> one parse task, records exploded in
-    mapInPandas.  Feeding the link column to the url-dedup / link-graph
-    queries replaces a full HTML parse with a JSON skim."""
-    files = spark.read.format("binaryFile").load(path).select("content")
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rows.extend(wat_to_metadata_rows(bytes(blob)))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "title", "n_links", "links"]
-            )
-
-    return files.mapInPandas(explode, schema=WAT_SCHEMA)
+# ------------------------------------------------------------- test support
 
 
 def build_wat(entries, compress=False) -> bytes:
     """Build a WAT file for tests: entries = [(url, date, title, links)].
     Payloads follow the public Common-Crawl WAT JSON envelope shape."""
-    import json
-
     records = []
     for url, date, title, links in entries:
         env = {

@@ -30,15 +30,22 @@ import time
 from pyspark.sql import SparkSession
 
 
+def positive_int(value):
+    n = int(value)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def parse_args(argv):
     p = argparse.ArgumentParser(description="readability_spark extraction job")
     p.add_argument("--input", required=True, help="pages parquet path (url, warc_ts, html, text, lang)")
     p.add_argument("--output", required=True, help="articles output parquet path")
     p.add_argument("--lineage", required=True, help="lineage parquet path")
     p.add_argument("--run-id", required=True)
-    p.add_argument("--num-partitions", type=int, default=64)
-    p.add_argument("--salt-n", type=int, default=4)
-    p.add_argument("--commit-groups", type=int, default=2)
+    p.add_argument("--num-partitions", type=positive_int, default=64)
+    p.add_argument("--salt-n", type=positive_int, default=4)
+    p.add_argument("--commit-groups", type=positive_int, default=2)
     p.add_argument("--report-json", default=None, help="also write the report to this file")
     p.add_argument(
         "--content-extraction",

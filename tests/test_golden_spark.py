@@ -150,6 +150,32 @@ def test_resume_without_recompute(spark, pages_df, tmp_path):
     assert clean == resumed
 
 
+def test_file_uri_lineage_resumes(spark, pages_df, tmp_path, monkeypatch):
+    """A ``file:`` lineage ref is written where it is read: the second run
+    resumes instead of failing after its first output append, and no
+    literal ``file:`` directory appears in the working directory."""
+    monkeypatch.chdir(tmp_path)
+    out, lin = str(tmp_path / "a"), f"file:{tmp_path}/lin"
+    for expected in (4, 0):
+        rep = run_job(spark, pages_df, out, lin, run_id="f", num_partitions=4, salt_n=1, commit_groups=2)
+        assert rep.partitions_processed == expected
+    per_url = spark.read.parquet(out).groupBy("url").count()
+    assert per_url.count() == N_ROWS
+    assert per_url.filter("count != 1").count() == 0
+    assert not [p.name for p in tmp_path.iterdir() if p.name.startswith("file:")]
+
+
+@pytest.mark.parametrize("param", ["num_partitions", "salt_n", "commit_groups"])
+def test_run_job_rejects_counts_below_one(spark, pages_df, tmp_path, param):
+    """A count below 1 is an error, not a successful run that processes
+    nothing and writes no lineage."""
+    out, lin = tmp_path / "a", tmp_path / "l"
+    counts = {"num_partitions": 4, "salt_n": 2, "commit_groups": 2, param: 0}
+    with pytest.raises(ValueError, match=param):
+        run_job(spark, pages_df, str(out), str(lin), run_id="v", **counts)
+    assert not out.exists() and not lin.exists()
+
+
 def test_corrupt_lineage_fails_loudly(spark, pages_df, tmp_path):
     """A truncated lineage parquet (crash mid-write before the atomic rename
     existed) must NOT be silently treated as a fresh run — that would

@@ -41,6 +41,18 @@ class TestCli:
         assert args.warmup and args.report_json == "/tmp/x.json"
 
 
+    @pytest.mark.parametrize("value", ["0", "-1"])
+    @pytest.mark.parametrize("flag", ["--num-partitions", "--salt-n", "--commit-groups"])
+    def test_counts_below_one_are_usage_errors(self, flag, value, capsys):
+        with pytest.raises(SystemExit) as exc:
+            parse_args(
+                ["--input", "i", "--output", "o", "--lineage", "l", "--run-id", "r",
+                 flag, value]
+            )
+        assert exc.value.code == 2
+        assert flag in capsys.readouterr().err
+
+
 class TestSubmitRun:
     """One real run of scripts/extract_job.py in a fresh Python process, as
     spark-submit would start it: warm-up, content extraction, report line,

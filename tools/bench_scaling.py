@@ -110,18 +110,49 @@ def hardware_ceiling(lo, hi, docs_per_proc=300):
 # --------------------------------------------------------------- spark runs
 
 
+def replicated_documents(spark, sf_dir, factor):
+    """Deterministic replication: doc_id offset per replica keeps urls unique
+    and content deterministic (no wall clock, no randomness)."""
+    import pyspark.sql.functions as F
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text", "lang", "source"
+    )
+    if factor <= 1:
+        return docs
+    reps = spark.range(factor).select(F.col("id").alias("rep"))
+    return docs.crossJoin(reps).select(
+        (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
+        "text",
+        "lang",
+        "source",
+    )
+
+
+def _synth_tag(synth):
+    """Cache-key component derived from the synthesizer's source (and the
+    page-template module it calls into), so an edit to any synthesize_*
+    function invalidates the /tmp materialization instead of silently
+    benchmarking stale pages."""
+    import hashlib
+    import inspect
+
+    from readability_spark.spark import pages as pages_mod
+
+    blob = inspect.getsource(synth) + inspect.getsource(pages_mod)
+    return hashlib.md5(blob.encode()).hexdigest()[:8]
+
+
 def materialize_input(sf_dir, factor, n_paragraphs):
     """One untimed pages-parquet build per replicate (identical input bytes
     for every level of a pair).  Heavy bench pages (~25 KB, ~200 elements)
     approximate real Common-Crawl page weight so the measured job is
     compute-dominated, as a production run is."""
-    import bench
     from readability_spark.spark.pages import bench_pages_from_documents
     from readability_spark.spark.session import get_spark
 
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # synth-source tag: template edits invalidate the cache (see bench.py)
-    tag = bench._synth_tag(bench_pages_from_documents)
+    tag = _synth_tag(bench_pages_from_documents)
     path = WORK / "input" / f"pages_sf{sf}_r{factor}_p{n_paragraphs}_{tag}"
     spark = get_spark(
         app_name="scaling-materialize",
@@ -129,7 +160,7 @@ def materialize_input(sf_dir, factor, n_paragraphs):
         conf={"spark.driver.memory": "8g"},
     )
     if not (path / "_SUCCESS").exists():
-        docs = bench.replicated_documents(spark, sf_dir, factor).repartition(64, "doc_id")
+        docs = replicated_documents(spark, sf_dir, factor).repartition(64, "doc_id")
         pages = bench_pages_from_documents(docs, n_paragraphs=n_paragraphs)
         pages.write.mode("overwrite").parquet(str(path))
     n = spark.read.parquet(str(path)).count()
@@ -459,8 +490,8 @@ def write_baseline_md(path, results, sf_dir, n_paragraphs):
         "rows is the synthesis cost moving out of the timed path, not an",
         "engine change).",
         "",
-        "Raw JSON: `BENCH/scaling.json`.  Headline per-query bench: `bench.py`",
-        "(driver-run, `BENCH_r{N}.json`).",
+        "Raw JSON: `BENCH/scaling.json`.  Headline per-query records:",
+        "`BENCH_r{N}.json`.",
         "",
     ]
     path.write_text("\n".join(lines))

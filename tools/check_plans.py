@@ -42,7 +42,7 @@ SF_DIR = "/root/testdata/sf0.01"
 # here with its boundedness argument, and an entry whose site is gone
 # fails it until the entry is removed.
 BROADCAST_ALLOWLIST = {}
-AUDIT_GLOBS = ("readability_spark/**/*.py", "scripts/*.py", "__spark_entry__.py", "bench.py")
+AUDIT_GLOBS = ("readability_spark/**/*.py", "scripts/*.py", "__spark_entry__.py")
 # real call sites only: prose like "an F.broadcast() that" has empty parens
 _BROADCAST_CALL = re.compile(r"F\.broadcast\([^)]")
 
