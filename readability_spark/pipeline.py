@@ -29,13 +29,11 @@ DEFAULT_STAGES = (
 )
 
 
-def run_pipeline(document, options=DEFAULT_OPTIONS, metadata=None):
+def run_pipeline(document, options=DEFAULT_OPTIONS):
     """Run the default stage sequence over a parsed document; returns the
     final Context.  Any stage error aborts the document
     (/root/reference/src/pipeline.rs:20-26)."""
     ctx = Context(document=document, options=options)
-    if metadata is not None:
-        ctx.metadata = metadata
     for stage in DEFAULT_STAGES:
         stage(ctx)
     return ctx

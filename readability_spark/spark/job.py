@@ -74,7 +74,7 @@ STATUS_FIELDS = [
 
 # docs/ok/failed/docs_per_sec are *at-least-once* metrics: they come from an
 # accumulator, so a retried task re-adds its partition's counts (speculation
-# is disabled in ENGINE_CONF; task retries after executor loss can still
+# is off by Spark's default; task retries after executor loss can still
 # inflate them).  Which partitions committed — the resume contract — depends
 # only on the (run_id, partition_id, status) rows, never on these counts;
 # exact counts are always derivable from the output table itself.
@@ -375,19 +375,11 @@ def _append_lineage(spark, lineage_rows, lineage_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    # derive the arrow schema from LINEAGE_SCHEMA so the two write paths
-    # cannot drift when a lineage field is added or reordered
-    _pa_types = {
-        StringType(): pa.string(),
-        IntegerType(): pa.int32(),
-        LongType(): pa.int64(),
-        TimestampType(): pa.timestamp("us"),
-        DoubleType(): pa.float64(),
-    }
-    schema = pa.schema(
-        [(f.name, _pa_types[f.dataType]) for f in LINEAGE_SCHEMA.fields]
-    )
+    # derived from LINEAGE_SCHEMA, so the two write paths cannot drift: a
+    # Spark timestamp is a UTC-adjusted arrow timestamp, not timestamp_ntz
+    schema = to_arrow_schema(LINEAGE_SCHEMA)
     cols = list(zip(*lineage_rows))
     table = pa.Table.from_arrays(
         [pa.array(col, type=field.type) for col, field in zip(cols, schema)],

@@ -1,10 +1,11 @@
-"""SparkSession factory with the engine's tuned configuration.
+"""SparkSession factory with the engine's configuration.
 
-The conf encodes the north_rule requirements (AQE-tuned shuffle, skew join
-handling) plus Arrow-batch sizing for fat HTML rows (SURVEY.md section 4.2):
-html bodies are KB-MB, so the default 10k-record Arrow batches would balloon
+``ENGINE_CONF`` holds only settings that differ from Spark's defaults.  html
+bodies are KB-MB, so the default 10k-record Arrow batches would balloon
 Python-worker memory; 512 rows per batch keeps a batch in the tens of MB at
-Common-Crawl page sizes while still amortizing the Arrow transfer.
+Common-Crawl page sizes while still amortizing the Arrow transfer (SURVEY.md
+section 4.2).  AQE, Python worker reuse and no speculation are Spark's
+defaults and are not repeated.
 """
 
 from __future__ import annotations
@@ -17,24 +18,7 @@ import zipimport
 from pyspark.sql import SparkSession
 
 ENGINE_CONF = {
-    # AQE: runtime shuffle re-planning, partition coalescing, skew-join split
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
-    # Arrow exchange for pandas UDFs / mapInPandas (the only JVM<->Python copy)
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # keep Python workers alive across tasks: without this every task forks a
-    # fresh worker and pays the pandas/pyarrow import (~0.6-2s per task —
-    # measured 25s -> 2.6s for a 64-task mapInPandas stage on local[8]).
-    # Reuse saves the import, but each task still starts with PySpark's
-    # importlib.invalidate_caches(), which before Python 3.13 re-parses
-    # every zip on the worker's sys.path (~200 ms per task);
-    # prepare_python_worker() below is what makes that call cheap
-    "spark.python.worker.reuse": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-    # fat binary rows: keep scan partitions moderate
-    "spark.sql.files.maxPartitionBytes": "128m",
     # fat rows also blow up the vectorized parquet reader: the default
     # 4096-row column batch at ~25-100 KB/row is 100 MB-400 MB PER TASK
     # (observed heap OOM at 32 concurrent scan tasks); 512 rows keeps a
@@ -48,31 +32,38 @@ ENGINE_CONF = {
     # collapse throughput (measured 82s -> 56s on the 200k-page extraction
     # job at local[32], and catastrophically worse at large heaps).
     # NOTE: takes effect only when the driver JVM starts AFTER this conf is
-    # set (plain-python sessions); spark-submit callers must pass it as
+    # set (get_spark in plain Python); spark-submit callers must pass it as
     # --conf spark.driver.extraJavaOptions=-XX:+UseParallelGC
     "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
-    # lineage metrics ride an accumulator off the extraction pass; a
-    # speculative duplicate task would double-count its partition's
-    # docs/ok/failed/cpu_ms, so speculation stays off for extraction jobs
-    # (lineage *correctness* — which partitions committed — never depends on
-    # accumulator values, but the reported counts should be exact)
-    "spark.speculation": "false",
 }
 
 
-def get_spark(app_name="readability-spark", master=None, conf=None, shuffle_partitions=None):
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    builder = SparkSession.builder.appName(app_name).master(master)
-    merged = dict(ENGINE_CONF)
-    if shuffle_partitions is not None:
-        merged["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if conf:
-        merged.update(conf)
-    for key, value in merged.items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+def apply_engine_conf(spark, keep=()):
+    """Set on ``spark`` each ``spark.sql.*`` entry of ``ENGINE_CONF`` that
+    ``keep`` does not name and its SparkContext's conf does not hold.  That
+    conf holds the submitted values (spark-submit or ``PYSPARK_SUBMIT_ARGS``
+    ``--conf``, spark-defaults.conf), so they win.  Logs at WARN; returns
+    ``spark``."""
+    submitted = {key for key, _ in spark.sparkContext.getConf().getAll()}
+    for key, value in ENGINE_CONF.items():
+        if key.startswith("spark.sql.") and key not in submitted and key not in keep:
+            spark.conf.set(key, value)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def get_spark(app_name="readability-spark", master=None, conf=None):
+    """Get or start a session on ``master`` with the engine's settings.
+    ``conf`` entries win over ``ENGINE_CONF``'s.  The call that launches the
+    JVM passes ``conf`` as its submitted conf, so a later session in the
+    same process keeps those values where it sets no others."""
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    conf = conf or {}
+    # only the JVM options must reach the builder: apply_engine_conf sets
+    # the spark.sql.* entries once the session exists
+    jvm = {k: v for k, v in ENGINE_CONF.items() if not k.startswith("spark.sql.")}
+    builder = SparkSession.builder.appName(app_name).master(master)
+    return apply_engine_conf(builder.config(map={**jvm, **conf}).getOrCreate(), keep=conf)
 
 
 def prepare_python_worker():

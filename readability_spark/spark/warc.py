@@ -114,7 +114,8 @@ def _http_body(payload: bytes) -> bytes:
 
 def _records(data: bytes, warc_type: str):
     """Yield (url, warc_ts, payload, headers) for every ``warc_type``
-    record that names a target url."""
+    record that names a target url.  An unparseable ``WARC-Date`` gives a
+    null ``warc_ts``: one bad record must not fail its archive's task."""
     for headers, payload in parse_warc(data):
         if headers.get("warc-type") != warc_type:
             continue
@@ -124,7 +125,7 @@ def _records(data: bytes, warc_type: str):
         ts = headers.get("warc-date")
         yield (
             url,
-            pd.to_datetime(ts).tz_localize(None) if ts else None,
+            pd.to_datetime(ts, errors="coerce").tz_localize(None) if ts else None,
             payload,
             headers,
         )

@@ -53,12 +53,6 @@ def parse_args(argv):
         help="enable the Arc90 candidate-scoring pass (Options(content_extraction=True))",
     )
     p.add_argument(
-        "--fix-relative-uris",
-        action="store_true",
-        help="resolve link/media URIs against each row's url "
-        "(Options(fix_relative_uris=True), mozilla fixRelativeUris semantics)",
-    )
-    p.add_argument(
         "--min-text-length", type=int, default=None,
         help="scoring-pass minimum candidate text length (default: reference's 500)",
     )
@@ -92,35 +86,23 @@ def parse_args(argv):
 def main(argv=None):
     args = parse_args(argv)
 
-    # getOrCreate picks up spark-submit's --master / --conf; only engine
-    # defaults that spark-submit did not set are applied here.
-    from readability_spark.spark.session import ENGINE_CONF
     from readability_spark.spark.job import run_job
+    from readability_spark.spark.session import apply_engine_conf
     from readability_spark.spark.sources import read_ref
 
-    # builder.config would OVERRIDE spark-submit's --conf; read the
-    # submitted conf (spark-submit exports it as JVM system properties)
-    # and apply only the engine defaults the submitter did not set
-    from pyspark import SparkConf
-
-    submitted = {k for k, _ in SparkConf().getAll()}
-    builder = SparkSession.builder.appName(f"readability-extract-{args.run_id}")
-    for key, value in ENGINE_CONF.items():
-        if key not in submitted:
-            builder = builder.config(key, value)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # getOrCreate picks up spark-submit's --master / --conf, which win over
+    # the engine's settings
+    spark = apply_engine_conf(
+        SparkSession.builder.appName(f"readability-extract-{args.run_id}").getOrCreate()
+    )
 
     cores = spark.sparkContext.defaultParallelism
 
     options = None
-    if args.content_extraction or args.fix_relative_uris or args.min_text_length is not None:
+    if args.content_extraction or args.min_text_length is not None:
         from readability_spark.options import Options
 
-        kwargs = {
-            "content_extraction": args.content_extraction,
-            "fix_relative_uris": args.fix_relative_uris,
-        }
+        kwargs = {"content_extraction": args.content_extraction}
         if args.min_text_length is not None:
             kwargs["min_text_length"] = args.min_text_length
         options = Options(**kwargs)

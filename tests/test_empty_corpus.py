@@ -37,7 +37,7 @@ CATALOG = Path(__file__).resolve().parents[1] / "QUERIES.md"
 
 @pytest.fixture(scope="module")
 def spark():
-    s = get_spark(app_name="empty-corpus-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="empty-corpus-tests", master="local[8]", conf={"spark.sql.shuffle.partitions": "8"})
     yield s
 
 

@@ -33,7 +33,7 @@ N_ROWS = 660
 
 @pytest.fixture(scope="module")
 def spark():
-    spark = get_spark(app_name="golden-tests", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="golden-tests", master="local[8]", conf={"spark.sql.shuffle.partitions": "8"})
     yield spark
     spark.stop()
 
@@ -225,6 +225,43 @@ def test_lineage_schema_and_metrics(spark, pages_df, tmp_path):
     assert sum(r.docs for r in rows) == N_ROWS
     assert sum(r.failed for r in rows) > 0  # malformed family rows recorded
     assert all(r.docs_per_sec is None or r.docs_per_sec > 0 for r in rows)
+    # path lineage reads back with LINEAGE_SCHEMA's types (timestamp, not
+    # timestamp_ntz), as table lineage does
+    from readability_spark.spark.job import LINEAGE_SCHEMA
+
+    assert [(f.name, f.dataType) for f in lineage.schema.fields] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA.fields
+    ]
+
+
+def test_resume_over_mixed_lineage_timestamp_types(spark, tmp_path):
+    """A lineage directory holding one file with timezone-naive timestamps
+    (written before path lineage used LINEAGE_SCHEMA's arrow types) and one
+    written now still resumes: both partitions count as committed."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from readability_spark.spark.job import _append_lineage, completed_partitions
+
+    lin = tmp_path / "lineage"
+    lin.mkdir()
+    now = datetime.datetime(2026, 3, 1, 0, 0, 1)
+    naive = pa.schema(
+        [("run_id", pa.string()), ("partition_id", pa.int32()), ("status", pa.string()),
+         ("docs", pa.int64()), ("ok", pa.int64()), ("failed", pa.int64()),
+         ("started_at", pa.timestamp("us")), ("finished_at", pa.timestamp("us")),
+         ("docs_per_sec", pa.float64())]
+    )
+    old_row = ["r", 0, "ok", 1, 1, 0, now, now, 1.0]
+    pq.write_table(
+        pa.Table.from_pylist([dict(zip(naive.names, old_row))], schema=naive),
+        lin / "lineage-old.parquet",
+    )
+    _append_lineage(spark, [("r", 1, "ok", 1, 1, 0, now, now, 1.0)], str(lin))
+    assert len(list(lin.glob("*.parquet"))) == 2
+    assert completed_partitions(spark, str(lin), "r") == {0, 1}
 
 
 def test_scored_extraction_matches_local_golden(spark, pages_df, fixture_rows):

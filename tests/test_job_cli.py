@@ -56,19 +56,23 @@ class TestCli:
 class TestSubmitRun:
     """One real run of scripts/extract_job.py in a fresh Python process, as
     spark-submit would start it: warm-up, content extraction, report line,
-    and a resume of the same run id."""
+    and a resume of the same run id; and the submitted conf of its session."""
 
-    def _run(self, tmp_path, *flags):
+    def _run(self, tmp_path, *flags, submit_args="--master local[2] pyspark-shell"):
         repo = Path(__file__).resolve().parents[1]
         env = dict(os.environ)
-        env["PYSPARK_SUBMIT_ARGS"] = "--master local[2] pyspark-shell"
+        env["PYSPARK_SUBMIT_ARGS"] = submit_args
         env["PYTHONPATH"] = os.pathsep.join(
             filter(None, [str(repo), env.get("PYTHONPATH")])
         )
-        cmd = [sys.executable, str(repo / "scripts" / "extract_job.py"), *flags]
+        cmd = [sys.executable, *flags]
         return subprocess.run(
             cmd, cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
         )
+
+    def _job(self, tmp_path, *flags):
+        repo = Path(__file__).resolve().parents[1]
+        return self._run(tmp_path, str(repo / "scripts" / "extract_job.py"), *flags)
 
     def test_extract_and_resume(self, tmp_path):
         from readability_spark.fixtures import build_rows
@@ -93,7 +97,7 @@ class TestSubmitRun:
             "--content-extraction",
         ]
 
-        first = self._run(
+        first = self._job(
             tmp_path, *job, "--warmup", "--report-json", str(tmp_path / "report.json")
         )
         assert first.returncode == 0, first.stderr[-3000:]
@@ -103,18 +107,130 @@ class TestSubmitRun:
         out = pd.read_parquet(tmp_path / "out", columns=["url"])
         assert sorted(out["url"]) == sorted(r.url for r in rows)
 
-        again = self._run(tmp_path, *job)
+        again = self._job(tmp_path, *job)
         assert again.returncode == 0, again.stderr[-3000:]
         assert json.loads(again.stdout.strip().splitlines()[-1])["partitions_processed"] == 0
 
         # the removed html codec flag is a usage error, not a silent no-op
-        assert self._run(tmp_path, *job, "--html-codec", "gzip").returncode == 2
+        assert self._job(tmp_path, *job, "--html-codec", "gzip").returncode == 2
+
+    def test_submitted_conf_wins_over_engine_conf(self, tmp_path):
+        """The session scripts/extract_job.py builds keeps every submitted
+        --conf and fills in only the engine settings that were not
+        submitted."""
+        keys = (
+            "spark.sql.shuffle.partitions",
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+            "spark.sql.parquet.columnarReaderBatchSize",
+            "spark.sql.session.timeZone",
+        )
+        script = (
+            "import json\n"
+            "from pyspark.sql import SparkSession\n"
+            "from readability_spark.spark.session import apply_engine_conf\n"
+            "spark = apply_engine_conf(SparkSession.builder.appName('conf-test').getOrCreate())\n"
+            f"print(json.dumps({{k: spark.conf.get(k) for k in {keys!r}}}))\n"
+            "spark.stop()\n"
+        )
+        proc = self._run(
+            tmp_path, "-c", script,
+            submit_args="--master local[1] --conf spark.sql.shuffle.partitions=7 "
+            "--conf spark.sql.execution.arrow.maxRecordsPerBatch=64 pyspark-shell",
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        got = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert got == {
+            "spark.sql.shuffle.partitions": "7",
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "64",
+            "spark.sql.parquet.columnarReaderBatchSize": "512",
+            "spark.sql.session.timeZone": "UTC",
+        }
+
+
+class TestEngineConf:
+    """A get_spark session reads, for each of the 13 settings the engine
+    once set explicitly, the value that explicit setting gave."""
+
+    EARLIER_ENGINE_CONF = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.python.worker.reuse": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.sql.parquet.columnarReaderBatchSize": "512",
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.speculation": "false",
+    }
+    BYTE_SIZES = ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "spark.sql.files.maxPartitionBytes")
+    # Spark's own defaults: the context conf does not hold these keys
+    CORE_DEFAULTS = ("spark.python.worker.reuse", "spark.speculation")
+    # read only by toPandas and pandas-input createDataFrame, neither of
+    # which the repository calls (mapInPandas always exchanges Arrow)
+    UNREAD = ("spark.sql.execution.arrow.pyspark.enabled",)
+
+    @pytest.fixture(scope="class")
+    def spark(self):
+        # the JVM keeps the conf of the call that launched it as system
+        # properties, which later sessions read as submitted: read the
+        # settings in a JVM this session launches, as a fresh process does
+        from pyspark import SparkContext
+
+        gateway = SparkContext._gateway
+        if gateway is not None:
+            if SparkContext._active_spark_context is not None:
+                SparkContext._active_spark_context.stop()
+            gateway.shutdown()
+            SparkContext._gateway = SparkContext._jvm = None
+            gateway.proc.stdin.close()  # the gateway JVM exits at EOF on its stdin
+            gateway.proc.wait(timeout=60)
+        spark = get_spark(app_name="engine-conf-tests", master="local[1]")
+        yield spark
+        spark.stop()
+
+    def test_engine_conf_is_the_five_settings_that_change_something(self):
+        from readability_spark.spark.session import ENGINE_CONF
+
+        assert set(ENGINE_CONF) == {
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+            "spark.sql.parquet.columnarReaderBatchSize",
+            "spark.sql.shuffle.partitions",
+            "spark.sql.session.timeZone",
+            "spark.driver.extraJavaOptions",
+        }
+
+    def test_effective_values_unchanged(self, spark):
+        as_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+        context = dict(spark.sparkContext.getConf().getAll())
+        for key, want in self.EARLIER_ENGINE_CONF.items():
+            if key in self.UNREAD:
+                continue
+            if key in self.CORE_DEFAULTS:
+                assert key not in context, key
+            elif key in self.BYTE_SIZES:
+                assert as_bytes(spark.conf.get(key)) == as_bytes(want), key
+            else:
+                assert spark.conf.get(key) == want, key
+
+    def test_unread_setting_has_no_reader(self):
+        repo = Path(__file__).resolve().parents[1]
+        sources = [
+            p for d in ("readability_spark", "scripts", "tools", "perfbench")
+            for p in (repo / d).rglob("*.py")
+        ] + [repo / "__spark_entry__.py"]
+        for path in sources:
+            text = path.read_text(encoding="utf-8")
+            assert "toPandas(" not in text and "createDataFrame(pd" not in text, path
 
 
 class TestSources:
     @pytest.fixture(scope="class")
     def spark(self):
-        spark = get_spark(app_name="sources-tests", master="local[2]", shuffle_partitions=2)
+        spark = get_spark(app_name="sources-tests", master="local[2]", conf={"spark.sql.shuffle.partitions": "2"})
         yield spark
         spark.stop()
 
@@ -180,7 +296,7 @@ class TestTableRefJob:
     @pytest.fixture(scope="class")
     def spark(self):
         spark = get_spark(
-            app_name="tableref-tests", master="local[2]", shuffle_partitions=2
+            app_name="tableref-tests", master="local[2]", conf={"spark.sql.shuffle.partitions": "2"}
         )
         yield spark
 

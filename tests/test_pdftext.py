@@ -82,7 +82,7 @@ class TestSparkPdf:
     def spark(self):
         from readability_spark.spark.session import get_spark
 
-        spark = get_spark(app_name="pdf-tests", master="local[2]", shuffle_partitions=2)
+        spark = get_spark(app_name="pdf-tests", master="local[2]", conf={"spark.sql.shuffle.partitions": "2"})
         yield spark
         spark.stop()
 

@@ -25,7 +25,7 @@ from readability_spark.streaming import stream_extract_to_parquet
 
 @pytest.fixture(scope="module")
 def spark():
-    spark = get_spark(app_name="stream-tests", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="stream-tests", master="local[8]", conf={"spark.sql.shuffle.partitions": "8"})
     yield spark
     spark.stop()
 

@@ -88,7 +88,7 @@ class TestSparkWarc:
     def spark(self):
         from readability_spark.spark.session import get_spark
 
-        spark = get_spark(app_name="warc-tests", master="local[2]", shuffle_partitions=2)
+        spark = get_spark(app_name="warc-tests", master="local[2]", conf={"spark.sql.shuffle.partitions": "2"})
         yield spark
         spark.stop()
 
@@ -152,12 +152,35 @@ def test_wet_rows_local():
     assert rows[1][3] is None
 
 
+def test_unparseable_warc_date_keeps_its_row():
+    """A bad WARC-Date nulls that record's warc_ts; it neither drops the
+    row nor raises, which would fail the whole archive's Spark task."""
+    import pandas as pd
+
+    from readability_spark.spark.warc import wet_to_document_rows
+
+    data = build_warc(
+        [
+            ("conversion", "https://a.example.com/1", "2026-03-01T00:00:01Z", b"One."),
+            ("conversion", "https://a.example.com/2", "not-a-date", b"Two."),
+            ("conversion", "https://a.example.com/3", "2026-03-01T00:00:03Z", b"Three."),
+        ],
+        compress=True,
+    )
+    rows = wet_to_document_rows(data)
+    assert [r[0] for r in rows] == [f"https://a.example.com/{i}" for i in (1, 2, 3)]
+    assert [r[2] for r in rows] == ["One.", "Two.", "Three."]
+    assert str(rows[0][1]) == "2026-03-01 00:00:01"
+    assert pd.isna(rows[1][1])
+    assert str(rows[2][1]) == "2026-03-01 00:00:03"
+
+
 class TestWetSpark:
     def test_read_wet_documents(self, tmp_path_factory):
         from readability_spark.spark.session import get_spark
         from readability_spark.spark.warc import read_wet_documents
 
-        spark = get_spark(app_name="wet-tests", master="local[2]", shuffle_partitions=2)
+        spark = get_spark(app_name="wet-tests", master="local[2]", conf={"spark.sql.shuffle.partitions": "2"})
         try:
             d = tmp_path_factory.mktemp("wet")
             (d / "part-0.warc.wet.gz").write_bytes(

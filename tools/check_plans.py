@@ -90,7 +90,7 @@ def plan_of(df):
 
 
 def main():
-    spark = get_spark(app_name="plan-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="plan-check", master="local[8]", conf={"spark.sql.shuffle.partitions": "8"})
     sections = []
     failures = []
 
