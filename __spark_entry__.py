@@ -7,7 +7,7 @@ DataFrame callables; ``oracle_sql()`` gives the DuckDB equivalent of each.
 The extraction queries are genuinely end-to-end: pages are synthesized
 deterministically from the ``documents`` table
 (readability_spark/spark/pages.py), the full 16-stage DOM pipeline runs in
-a vectorized mapInPandas pass, and the DuckDB oracle recomputes the
+a vectorized mapInArrow pass, and the DuckDB oracle recomputes the
 expected Article fields in closed form — so a value-hash match certifies
 byte-identical extracted text per url (the north_rule invariant).
 """
@@ -377,7 +377,7 @@ def pdf_extract_text(spark, sf_dir):
     """PDF text extraction end to end (readability_spark/pdftext.py): each
     document becomes a real one-page PDF (FlateDecode-compressed for odd
     doc_ids), parsed back by the pure-Python content-stream extractor in a
-    vectorized mapInPandas pass.  Round-trip equality with the source text
+    vectorized mapInArrow pass.  Round-trip equality with the source text
     is the oracle."""
     from readability_spark.spark.pdf import extract_pdf_pages, synthesize_pdfs
 

@@ -3,7 +3,7 @@
 A brand-new implementation (not a port) of the extraction semantics of
 terror/readability (reference at /root/reference), designed Spark-first:
 the per-document 16-stage DOM pipeline runs as pure Python inside
-Arrow-vectorized ``mapInPandas`` batches, while everything dataset-level
+Arrow-vectorized ``mapInArrow`` batches, while everything dataset-level
 (scan, partitioning, skew salting, resume filtering, metrics aggregation)
 is declarative DataFrame API left to Catalyst + AQE.
 

@@ -5,12 +5,13 @@ Design (SURVEY.md sections 3.4 / 2.5):
 
 - dataset level is pure declarative DataFrame API (Catalyst optimizes scans,
   filters push down, AQE re-plans shuffles);
-- the per-document 16-stage DOM pipeline runs inside ONE ``mapInPandas``
-  invocation per row batch (Arrow exchange is the only JVM<->Python copy;
-  no stage-per-UDF chaining, no driver-side loops over rows);
-- every ``mapInPandas`` body calls ``prepare_python_worker()`` first, so
-  PySpark's per-task ``importlib.invalidate_caches()`` stops re-parsing the
-  zips on the worker's ``sys.path``;
+- the per-document 16-stage DOM pipeline runs inside ONE ``map_batches``
+  (``mapInArrow``) invocation per row batch: Arrow exchange is the only
+  JVM<->Python copy, with no pandas conversion on either side; no
+  stage-per-UDF chaining, no driver-side loops over rows;
+- ``map_batches`` calls ``prepare_python_worker()`` first in every task,
+  so PySpark's per-task ``importlib.invalidate_caches()`` stops re-parsing
+  the zips on the worker's ``sys.path``;
 - partition attribution is logical: ``partition_id = pmod(xxhash64(url), N)``
   — stable across cluster sizes, so lineage written at N executors resumes
   correctly at 4N;
@@ -31,9 +32,8 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
-from typing import Iterator
+from datetime import datetime, timezone
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
@@ -50,7 +50,7 @@ from pyspark.sql.types import (
 
 from ..options import DEFAULT_OPTIONS
 from ..pipeline import extract_row
-from .session import prepare_python_worker
+from .session import map_batches
 from .sources import append_ref, local_path, read_ref
 
 ARTICLE_FIELDS = [
@@ -148,7 +148,7 @@ def extract_articles(
 
     Library surface mirroring Readability::parse at dataset scale
     (/root/reference/src/readability.rs:38-63): one vectorized
-    ``mapInPandas`` pass; per-row failures become status/error columns,
+    ``map_batches`` pass; per-row failures become status/error columns,
     never exceptions (a failed document must not kill the Arrow batch).
 
     The ``html`` column is read and never passed through.  With
@@ -181,62 +181,47 @@ def extract_articles(
     passthrough = _passthrough_fields(df.schema)
     out_schema = StructType(passthrough + art_fields + STATUS_FIELDS)
     pass_cols = [f.name for f in passthrough]
-    out_cols = [f.name for f in out_schema.fields]
     if metrics_acc is not None and "partition_id" not in df.columns:
         raise ValueError("metrics_acc requires a 'partition_id' column")
     fix_uris = options.fix_relative_uris
     if fix_uris and "url" not in df.columns:
         raise ValueError("fix_relative_uris requires a 'url' column")
 
-    def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            rows = {name: [] for name in art_cols}
-            statuses, errors, timings = [], [], []
-            bases = pdf["url"] if fix_uris else None
-            for idx, raw in enumerate(pdf["html"]):
-                t0 = time.perf_counter()
-                article, status, error = extract_row(
-                    raw,
-                    options=options,
-                    base_url=None if bases is None else bases.iloc[idx],
-                    want_content=want_content,
-                )
-                timings.append((time.perf_counter() - t0) * 1000.0)
-                statuses.append(status)
-                errors.append(error)
-                if article is None:
-                    for name in art_cols:
-                        rows[name].append(None)
-                else:
-                    for name in art_cols:
-                        rows[name].append(getattr(article, name))
-            out = pdf[pass_cols].copy() if pass_cols else pd.DataFrame(index=pdf.index)
+    def columns_of(batch):
+        rows = {name: [] for name in art_cols}
+        statuses, errors, timings = [], [], []
+        bases = batch.column("url").to_pylist() if fix_uris else None
+        for idx, raw in enumerate(batch.column("html").to_pylist()):
+            t0 = time.perf_counter()
+            article, status, error = extract_row(
+                raw,
+                options=options,
+                base_url=None if bases is None else bases[idx],
+                want_content=want_content,
+            )
+            timings.append((time.perf_counter() - t0) * 1000.0)
+            statuses.append(status)
+            errors.append(error)
             for name in art_cols:
-                out[name] = rows[name]
-            if "length" in rows:
-                out["length"] = pd.array(rows["length"], dtype="Int64")
-            out["status"] = statuses
-            out["error"] = errors
-            out["extract_ms"] = timings
-            if metrics_acc is not None:
-                local: dict = {}
-                pids = pdf["partition_id"]
-                for idx, status in enumerate(statuses):
-                    pid = int(pids.iloc[idx])
-                    m = local.get(pid)
-                    if m is None:
-                        m = local[pid] = [0, 0, 0, 0.0]
-                    m[0] += 1
-                    if status == "ok":
-                        m[1] += 1
-                    else:
-                        m[2] += 1
-                    m[3] += timings[idx]
-                metrics_acc.add(local)
-            yield out[out_cols]
+                rows[name].append(None if article is None else getattr(article, name))
+        if metrics_acc is not None:
+            local: dict = {}
+            pids = batch.column("partition_id").to_pylist()
+            for pid, status, ms in zip(pids, statuses, timings):
+                m = local.get(pid)
+                if m is None:
+                    m = local[pid] = [0, 0, 0, 0.0]
+                m[0] += 1
+                if status == "ok":
+                    m[1] += 1
+                else:
+                    m[2] += 1
+                m[3] += ms
+            metrics_acc.add(local)
+        passed = [batch.column(name) for name in pass_cols]
+        return passed + [rows[name] for name in art_cols] + [statuses, errors, timings]
 
-    return df.mapInPandas(run_batches, schema=out_schema)
+    return map_batches(df, out_schema, columns_of)
 
 
 READERABLE_SCHEMA_FIELDS = [
@@ -247,7 +232,7 @@ READERABLE_SCHEMA_FIELDS = [
 
 def readerable_flags(df: DataFrame) -> DataFrame:
     """mozilla isProbablyReaderable over a pages DataFrame: (url, readerable,
-    readerable_score) per page, vectorized mapInPandas (no per-row Python at
+    readerable_score) per page, vectorized map_batches (no per-row Python at
     the Spark API level).  Semantics: readability_spark/readerable.py; the
     score is the early-exit accumulated value, rounded to 4 for portability.
     """
@@ -255,26 +240,18 @@ def readerable_flags(df: DataFrame) -> DataFrame:
 
     out_schema = StructType([df.schema["url"]] + READERABLE_SCHEMA_FIELDS)
 
-    def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            flags, scores = [], []
-            for raw in pdf["html"]:
-                try:
-                    ok, score = is_probably_readerable(raw)
-                except Exception:  # undecodable html: not readerable
-                    ok, score = None, None
-                flags.append(ok)
-                scores.append(None if score is None else round(score, 4))
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "readerable": pd.array(flags, dtype="boolean"),
-                    "readerable_score": pd.array(scores, dtype="Float64"),
-                }
-            )
+    def columns_of(batch):
+        flags, scores = [], []
+        for raw in batch.column("html").to_pylist():
+            try:
+                ok, score = is_probably_readerable(raw)
+            except Exception:  # undecodable html: not readerable
+                ok, score = None, None
+            flags.append(ok)
+            scores.append(None if score is None else round(score, 4))
+        return [batch.column("url"), flags, scores]
 
-    return df.select("url", "html").mapInPandas(run_batches, schema=out_schema)
+    return map_batches(df.select("url", "html"), out_schema, columns_of)
 
 
 def with_partition_id(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -289,7 +266,7 @@ def with_partition_id(df: DataFrame, num_partitions: int) -> DataFrame:
 def with_salt(df: DataFrame, salt_n: int, url_col="url") -> DataFrame:
     """Deterministic skew salt: a second, finer url hash.  Combined with the
     partition id in repartition(), it spreads a hot domain's rows across
-    salt_n reducers (AQE cannot fix skew inside mapInPandas inputs, so this
+    salt_n reducers (AQE cannot fix skew inside mapInArrow inputs, so this
     is explicit — SURVEY.md section 4.2)."""
     return df.withColumn(
         "salt",
@@ -471,7 +448,7 @@ def run_job(
     processed = 0
 
     for group in groups:
-        started_at = pd.Timestamp.utcnow().tz_localize(None)
+        started_at = datetime.now(timezone.utc).replace(tzinfo=None)
         subset = pages.filter(F.col("partition_id").isin(group))
         subset = with_salt(subset, salt_n)
         # physical partitioning: one shuffle, keyed by (logical partition,
@@ -486,7 +463,7 @@ def run_job(
             metrics_acc=acc,
         )
         append_ref(extracted, output_path, ("partition_id",))
-        finished_at = pd.Timestamp.utcnow().tz_localize(None)
+        finished_at = datetime.now(timezone.utc).replace(tzinfo=None)
 
         by_pid = acc.value
         lineage_rows = []
@@ -500,8 +477,8 @@ def run_job(
                     docs,
                     ok,
                     failed,
-                    started_at.to_pydatetime(),
-                    finished_at.to_pydatetime(),
+                    started_at,
+                    finished_at,
                     (docs / (cpu_ms / 1000.0)) if cpu_ms > 0 else None,
                 )
             )

@@ -13,9 +13,8 @@ driver's correctness gate.
 from __future__ import annotations
 
 import html as _htmlmod
-from typing import Iterator
+from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -24,7 +23,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .session import prepare_python_worker
+from .session import map_batches
 
 #: url host of every page with ``doc_id % 10 < 4`` (40% of rows); url
 #: hashing already spreads it over the logical partitions
@@ -85,36 +84,35 @@ def synthesize_html(doc_id, text, lang):
 def _pages_from(documents_df, synthesize, *extra):
     """documents -> PAGES_SCHEMA rows whose html is
     ``synthesize(doc_id, text, lang, *extra)``: the one vectorized
-    (mapInPandas, Arrow batches) body behind every pages builder below."""
+    (``map_batches``, Arrow batches) body behind every pages builder below.
+    ``warc_ts`` is 2026-01-01 UTC plus 37 s per doc_id."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [page_url(i, s) for i, s in zip(pdf["doc_id"], pdf["source"])],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"] * 37, unit="s", origin="2026-01-01"
-                    ),
-                    "html": [
-                        synthesize(i, t, l, *extra).encode("utf-8")
-                        for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
+    def columns_of(batch):
+        doc_ids = batch.column("doc_id").to_pylist()
+        texts = batch.column("text").to_pylist()
+        langs = batch.column("lang").to_pylist()
+        sources = batch.column("source").to_pylist()
+        return [
+            [page_url(i, s) for i, s in zip(doc_ids, sources)],
+            [datetime(2026, 1, 1) + timedelta(seconds=37 * i) for i in doc_ids],
+            [
+                synthesize(i, t, l, *extra).encode("utf-8")
+                for i, t, l in zip(doc_ids, texts, langs)
+            ],
+            batch.column("text"),
+            batch.column("lang"),
+        ]
 
-    return documents_df.select("doc_id", "text", "lang", "source").mapInPandas(
-        synth, schema=PAGES_SCHEMA
+    return map_batches(
+        documents_df.select("doc_id", "text", "lang", "source"), PAGES_SCHEMA, columns_of
     )
 
 
 def pages_from_documents(documents_df):
     """documents(doc_id,text,lang,source,...) -> pages(url,warc_ts,html,text,lang).
 
-    Vectorized (mapInPandas, Arrow batches) — no per-row Python UDF calls at
-    the Spark API level, per the north_rule input_hint.
+    Vectorized (``map_batches``, Arrow batches) — no per-row Python UDF
+    calls at the Spark API level, per the north_rule input_hint.
     """
     return _pages_from(documents_df, synthesize_html)
 

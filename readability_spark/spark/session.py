@@ -1,4 +1,4 @@
-"""SparkSession factory with the engine's configuration.
+"""SparkSession factory with the engine's configuration, and ``map_batches``.
 
 ``ENGINE_CONF`` holds only settings that differ from Spark's defaults.  html
 bodies are KB-MB, so the default 10k-record Arrow batches would balloon
@@ -15,7 +15,9 @@ import os
 import sys
 import zipimport
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 ENGINE_CONF = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
@@ -81,7 +83,7 @@ def prepare_python_worker():
     and calls the original otherwise.  Idempotent; a no-op on 3.13+, whose
     zipimporter re-reads lazily.
 
-    Call it first in every ``mapInPandas`` body.  The first task of a fresh
+    ``map_batches`` calls it first in every task.  The first task of a fresh
     worker still pays once: ``setup_spark_files`` runs before the UDF is
     unpickled.
     """
@@ -113,3 +115,22 @@ def prepare_python_worker():
         stamps[self.archive] = now
 
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def map_batches(df, schema, columns_of):
+    """``df.mapInArrow`` with output ``schema``: the engine's one Python UDF
+    pass, which never converts a batch to pandas.  Each task calls
+    ``prepare_python_worker()`` first.  Each output batch is
+    ``columns_of(input_batch)``, one column per field in order, which
+    ``pa.RecordBatch.from_arrays`` takes as it comes: a ``pa.Array`` by
+    reference, cast where its type differs (Spark sends timestamps in the
+    session time zone), and a list through ``pa.array``, which reads a naive
+    datetime as UTC."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        prepare_python_worker()
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(columns_of(batch), schema=arrow_schema)
+
+    return df.mapInArrow(run, schema)

@@ -9,9 +9,9 @@ members transparently.
 
 Distribution model: one Spark task per WARC file via the built-in
 ``binaryFile`` source (Common Crawl ships ~1 GB files — one file is a
-sensible task), records exploded inside ``mapInPandas``.  At 100 TB the
-listing parallelizes over the file manifest and the extraction shuffle
-downstream re-partitions by url hash as usual; nothing here is
+sensible task), records exploded inside one ``map_batches`` pass.  At
+100 TB the listing parallelizes over the file manifest and the extraction
+shuffle downstream re-partitions by url hash as usual; nothing here is
 driver-side.
 """
 
@@ -20,9 +20,8 @@ from __future__ import annotations
 import io
 import json
 import zlib
-from typing import Iterator
+from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -34,7 +33,7 @@ from pyspark.sql.types import (
 )
 
 from .pages import PAGES_SCHEMA
-from .session import prepare_python_worker
+from .session import map_batches
 
 _GZIP_MAGIC = b"\x1f\x8b"
 
@@ -112,6 +111,18 @@ def _http_body(payload: bytes) -> bytes:
     return payload
 
 
+def _warc_date(value):
+    """A ``WARC-Date`` as a naive UTC datetime (no offset means UTC); None
+    when it is missing or not ISO 8601."""
+    try:
+        ts = datetime.fromisoformat(value)
+    except (TypeError, ValueError):
+        return None
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    return ts
+
+
 def _records(data: bytes, warc_type: str):
     """Yield (url, warc_ts, payload, headers) for every ``warc_type``
     record that names a target url.  An unparseable ``WARC-Date`` gives a
@@ -122,30 +133,22 @@ def _records(data: bytes, warc_type: str):
         url = headers.get("warc-target-uri")
         if not url:
             continue
-        ts = headers.get("warc-date")
-        yield (
-            url,
-            pd.to_datetime(ts, errors="coerce").tz_localize(None) if ts else None,
-            payload,
-            headers,
-        )
+        yield url, _warc_date(headers.get("warc-date")), payload, headers
 
 
 def _read_archives(spark, path, to_rows, schema) -> DataFrame:
     """Archive file(s) -> one DataFrame row per tuple ``to_rows`` returns.
 
     ``path`` accepts the globs the binaryFile source accepts; each file is
-    one input row -> one parse task, its records exploded in mapInPandas."""
+    one input row -> one parse task, its records exploded in one
+    ``map_batches`` pass."""
     files = spark.read.format("binaryFile").load(path).select("content")
-    columns = schema.fieldNames()
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_python_worker()
-        for pdf in batches:
-            rows = [row for blob in pdf["content"] for row in to_rows(bytes(blob))]
-            yield pd.DataFrame(rows, columns=columns)
+    def columns_of(batch):
+        rows = [row for blob in batch.column("content").to_pylist() for row in to_rows(blob)]
+        return list(zip(*rows)) or [()] * len(schema)
 
-    return files.mapInPandas(explode, schema=schema)
+    return map_batches(files, schema, columns_of)
 
 
 def warc_to_page_rows(data: bytes):

@@ -4,13 +4,13 @@ The reference is strictly batch (single document, SURVEY.md section 2.4
 "Streaming: absent"), so this is engine capability beyond parity: a crawl
 landing zone consumed as a file stream, the SAME vectorized
 ``extract_articles`` transform applied to the unbounded DataFrame
-(mapInPandas composes with streaming), and checkpointed exactly-once
+(mapInArrow composes with streaming), and checkpointed exactly-once
 parquet output.
 
 At scale: the file source lists incrementally (maxFilesPerTrigger bounds a
-micro-batch) and the parquet/Iceberg sink commits per micro-batch — the
-batch job's partitioning/salting applies unchanged inside ``foreachBatch``
-when per-partition lineage is wanted.
+micro-batch) and the parquet/Iceberg sink commits per micro-batch.  Streams
+get no logical partitions, salting or per-partition lineage: ``run_job``'s
+batch path is the only one that builds them.
 """
 
 from __future__ import annotations

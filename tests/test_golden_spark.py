@@ -18,12 +18,13 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from readability_spark.fixtures import build_rows, golden_for
 from readability_spark.spark.job import extract_articles, run_job
-from readability_spark.spark.session import get_spark, prepare_python_worker
+from readability_spark.spark.session import get_spark, map_batches, prepare_python_worker
 
 # 97 families: 9/20 of rows cycle the 96 non-plain families, so the >=3-
 # per-family invariant needs N_ROWS*9/20 >= 3*96 = 288; 660 gives 297
@@ -461,18 +462,19 @@ def test_pages_builders_match_synthesizers(spark, builder, synthesizer, kwargs):
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="zipimporter re-reads lazily on 3.13+")
-def test_worker_invalidate_caches_keeps_zip_directories(spark):
+@pytest.mark.parametrize("via", ["map_batches", "mapInPandas"])
+def test_worker_invalidate_caches_keeps_zip_directories(spark, via):
     """On the real worker sys.path (pyspark.zip, py4j, the spark-core jar)
     PySpark's per-task importlib.invalidate_caches() re-reads no unchanged
-    archive once prepare_python_worker has run, on every task."""
+    archive once prepare_python_worker has run, on every task.  The
+    map_batches case never calls it itself: map_batches must.  It runs
+    before the mapInPandas case, whose body patches its worker itself, so
+    in this module only map_batches can have patched the workers."""
 
-    def count_reads(batches):
+    def reads_and_importers():
         import importlib
         import zipimport
 
-        import pandas as pd
-
-        prepare_python_worker()
         reads = []
         read = zipimport._read_directory
 
@@ -485,18 +487,34 @@ def test_worker_invalidate_caches_keeps_zip_directories(spark):
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = read
-        for _ in batches:
-            pass
         importers = sum(
             isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
         )
-        yield pd.DataFrame({"reads": [len(reads)], "importers": [importers]})
+        return len(reads), importers
 
-    rows = (
-        spark.range(8, numPartitions=8)
-        .mapInPandas(count_reads, "reads long, importers long")
-        .collect()
-    )
+    def count_reads(batches):
+        import pandas as pd
+
+        prepare_python_worker()
+        n_reads, importers = reads_and_importers()
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [n_reads], "importers": [importers]})
+
+    def columns_of(batch):
+        n_reads, importers = reads_and_importers()
+        return [[n_reads] * batch.num_rows, [importers] * batch.num_rows]
+
+    ids = spark.range(8, numPartitions=8)
+    if via == "mapInPandas":
+        counted = ids.mapInPandas(count_reads, "reads long, importers long")
+    else:
+        counted = map_batches(
+            ids,
+            StructType([StructField("reads", LongType()), StructField("importers", LongType())]),
+            columns_of,
+        )
+    rows = counted.collect()
     assert len(rows) == 8
     assert all(r.importers > 0 for r in rows)
     assert [r.reads for r in rows] == [0] * 8

@@ -170,7 +170,7 @@ class TestEngineConf:
     # Spark's own defaults: the context conf does not hold these keys
     CORE_DEFAULTS = ("spark.python.worker.reuse", "spark.speculation")
     # read only by toPandas and pandas-input createDataFrame, neither of
-    # which the repository calls (mapInPandas always exchanges Arrow)
+    # which the repository calls (its mapInArrow pass never reads it)
     UNREAD = ("spark.sql.execution.arrow.pyspark.enabled",)
 
     @pytest.fixture(scope="class")

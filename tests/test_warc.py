@@ -118,6 +118,40 @@ class TestSparkWarc:
         assert out["https://c.example.com/z.html"].title == "C"
         assert all(r.status == "ok" for r in out.values())
 
+    def test_warc_ts_is_utc_in_any_session_time_zone(self, spark, tmp_path_factory):
+        """warc_ts is the record's UTC instant whatever
+        spark.sql.session.timeZone says: the naive times the readers build
+        are UTC, never read as session-local, and extract_articles passes
+        the column through unchanged."""
+        from readability_spark.spark.job import extract_articles
+        from readability_spark.spark.pages import pages_from_documents
+
+        d = tmp_path_factory.mktemp("warc_tz")
+        (d / "crawl.warc").write_bytes(
+            build_warc(
+                [("response", "https://a.example.com/x.html", "2024-01-01T10:00:00Z", b"<p>x</p>")]
+            )
+        )
+        docs = spark.createDataFrame(
+            [(0, "Zero.", "en", "cc")], "doc_id long, text string, lang string, source string"
+        )
+        before = spark.conf.get("spark.sql.session.timeZone")
+        try:
+            for tz in ("UTC", "America/New_York"):
+                spark.conf.set("spark.sql.session.timeZone", tz)
+                pages = read_warc_pages(spark, str(d))
+                [warc] = pages.selectExpr("unix_timestamp(warc_ts) AS ts").collect()
+                [page] = pages_from_documents(docs).selectExpr(
+                    "unix_timestamp(warc_ts) AS ts"
+                ).collect()
+                [article] = extract_articles(pages).selectExpr(
+                    "unix_timestamp(warc_ts) AS ts"
+                ).collect()
+                # 2024-01-01T10:00:00Z and doc 0's 2026-01-01T00:00:00Z
+                assert (warc.ts, page.ts, article.ts) == (1704103200, 1767225600, 1704103200), tz
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", before)
+
 
 def test_wet_rows_local():
     from readability_spark.spark.warc import wet_to_document_rows
@@ -244,3 +278,19 @@ def test_wat_rows_local():
     assert env["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"][
         "HTML-Metadata"
     ]["Head"]["Title"] == "t"
+
+
+def test_warc_date_offset_converts_to_utc():
+    """A WARC-Date with an offset is that instant in UTC, not its wall
+    clock read as UTC; a date that is not ISO 8601 gives a null warc_ts."""
+    from datetime import datetime
+
+    rows = warc_to_page_rows(
+        build_warc(
+            [
+                ("response", "https://a.example.com/1", "2024-01-01T10:00:00+02:00", b"<p>1</p>"),
+                ("response", "https://a.example.com/2", "2024/01/02 10:00", b"<p>2</p>"),
+            ]
+        )
+    )
+    assert [r[1] for r in rows] == [datetime(2024, 1, 1, 8, 0), None]
