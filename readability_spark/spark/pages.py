@@ -81,9 +81,9 @@ def synthesize_html(doc_id, text, lang):
     )
 
 
-def _pages_from(documents_df, synthesize, *extra):
+def _pages_from(documents_df, synthesize):
     """documents -> PAGES_SCHEMA rows whose html is
-    ``synthesize(doc_id, text, lang, *extra)``: the one vectorized
+    ``synthesize(doc_id, text, lang)``: the one vectorized
     (``map_batches``, Arrow batches) body behind every pages builder below.
     ``warc_ts`` is 2026-01-01 UTC plus 37 s per doc_id."""
 
@@ -96,7 +96,7 @@ def _pages_from(documents_df, synthesize, *extra):
             [page_url(i, s) for i, s in zip(doc_ids, sources)],
             [datetime(2026, 1, 1) + timedelta(seconds=37 * i) for i in doc_ids],
             [
-                synthesize(i, t, l, *extra).encode("utf-8")
+                synthesize(i, t, l).encode("utf-8")
                 for i, t, l in zip(doc_ids, texts, langs)
             ],
             batch.column("text"),
@@ -210,17 +210,21 @@ def media_pages_from_documents(documents_df):
     return _pages_from(documents_df, synthesize_media_html)
 
 
-def synthesize_bench_html(doc_id, text, lang, n_paragraphs=80, n_nav_links=20):
-    """Deterministic HEAVY page for throughput/scaling benchmarks: many
-    paragraph elements and a link-dense nav, approximating real Common-Crawl
-    page node counts (~25 KB, ~200 elements at the defaults) where the
-    contract page (synthesize_html) is a minimal ~1 KB fixture.  Not
-    oracle-checked — bench input only."""
-    navs = "".join(f'<li><a href="/s/{j}">Section {j}</a></li>' for j in range(n_nav_links))
+#: paragraphs and nav links of every synthesize_bench_html page
+BENCH_PARAGRAPHS = 80
+BENCH_NAV_LINKS = 20
+
+
+def synthesize_bench_html(doc_id, text, lang):
+    """Deterministic HEAVY page for the benchmark: many paragraph elements
+    and a link-dense nav, approximating real Common-Crawl page node counts
+    (~25 KB, ~200 elements) where the contract page (synthesize_html) is a
+    minimal ~1 KB fixture.  Not oracle-checked — bench input only."""
+    navs = "".join(f'<li><a href="/s/{j}">Section {j}</a></li>' for j in range(BENCH_NAV_LINKS))
     body_text = _htmlmod.escape(text, quote=False)
     paras = "".join(
         f"<p>Paragraph {j} of report {doc_id}: {body_text}</p>"
-        for j in range(n_paragraphs)
+        for j in range(BENCH_PARAGRAPHS)
     )
     return (
         f'<html lang="{lang}"><head>'
@@ -233,13 +237,6 @@ def synthesize_bench_html(doc_id, text, lang, n_paragraphs=80, n_nav_links=20):
         f'<div style="display:none">hidden tracking pixel</div>'
         f"<script>var t=1;</script>"
         f"</body></html>"
-    )
-
-
-def bench_pages_from_documents(documents_df, n_paragraphs=80, n_nav_links=20):
-    """documents -> heavy bench pages (same schema as pages_from_documents)."""
-    return _pages_from(
-        documents_df, synthesize_bench_html, n_paragraphs, n_nav_links
     )
 
 

@@ -15,9 +15,8 @@ Usage:
       --report-json /tmp/report.json
 
 The master comes from spark-submit (or the SparkSession default); the job
-never hardcodes a parallelism level — that is what makes the N vs 4N
-scaling measurement honest (same code, same input, same partitioning
-config, only the core count differs).
+never hardcodes a parallelism level, so one submission runs unchanged on
+any core count.
 """
 
 from __future__ import annotations
@@ -55,14 +54,6 @@ def parse_args(argv):
     p.add_argument(
         "--min-text-length", type=int, default=None,
         help="scoring-pass minimum candidate text length (default: reference's 500)",
-    )
-    p.add_argument(
-        "--input-columns",
-        default=None,
-        help="comma-separated input columns to read (source column pruning: "
-        "the parquet/Iceberg scan then skips every other column's pages — "
-        "e.g. 'url,warc_ts,html' drops the crawl's raw text column, which "
-        "extraction never reads, before it is shuffled)",
     )
     p.add_argument(
         "--article-columns",
@@ -118,10 +109,6 @@ def main(argv=None):
 
     t0 = time.time()
     pages = read_ref(spark, args.input)
-    if args.input_columns:
-        pages = pages.select(
-            *[c.strip() for c in args.input_columns.split(",") if c.strip()]
-        )
     report = run_job(
         spark,
         pages,

@@ -427,20 +427,15 @@ def test_lineage_scheme_paths_not_treated_as_local(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "builder, synthesizer, kwargs",
+    "builder, synthesizer",
     [
-        ("pages_from_documents", "synthesize_html", {}),
-        ("junk_pages_from_documents", "synthesize_junk_html", {}),
-        ("media_pages_from_documents", "synthesize_media_html", {}),
-        (
-            "bench_pages_from_documents",
-            "synthesize_bench_html",
-            {"n_paragraphs": 3, "n_nav_links": 2},
-        ),
+        ("pages_from_documents", "synthesize_html"),
+        ("junk_pages_from_documents", "synthesize_junk_html"),
+        ("media_pages_from_documents", "synthesize_media_html"),
     ],
-    ids=["contract", "junk", "media", "bench"],
+    ids=["contract", "junk", "media"],
 )
-def test_pages_builders_match_synthesizers(spark, builder, synthesizer, kwargs):
+def test_pages_builders_match_synthesizers(spark, builder, synthesizer):
     """Every pages builder emits, per document, page_url(...) and exactly
     the bytes of its synthesize_* template; text and lang pass through."""
     from readability_spark.spark import pages as p
@@ -450,13 +445,13 @@ def test_pages_builders_match_synthesizers(spark, builder, synthesizer, kwargs):
         for i in range(20)
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string, source string")
-    out = getattr(p, builder)(df, **kwargs)
+    out = getattr(p, builder)(df)
     assert out.schema == p.PAGES_SCHEMA
     got = {r.url: r for r in out.collect()}
     assert len(got) == len(docs)
     for i, text, lang, source in docs:
         row = got[p.page_url(i, source)]
-        html = getattr(p, synthesizer)(i, text, lang, **kwargs)
+        html = getattr(p, synthesizer)(i, text, lang)
         assert bytes(row.html) == html.encode("utf-8")
         assert (row.text, row.lang) == (text, lang)
 
