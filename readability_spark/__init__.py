@@ -4,7 +4,7 @@ A brand-new implementation (not a port) of the extraction semantics of
 terror/readability (reference at /root/reference), designed Spark-first:
 the per-document 16-stage DOM pipeline runs as pure Python inside
 Arrow-vectorized ``mapInArrow`` batches, while everything dataset-level
-(scan, partitioning, skew salting, resume filtering, metrics aggregation)
+(scan, url-hash partitioning and salting, resume filtering, metrics aggregation)
 is declarative DataFrame API left to Catalyst + AQE.
 
 Public surface (SURVEY.md section 7.5):

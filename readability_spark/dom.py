@@ -72,7 +72,7 @@ _TABLE_PARTS = frozenset(
 
 
 # Global structural-revision counter: bumped by every tree/attr mutation so
-# the per-document flat-element cache (see select()) knows when to rebuild.
+# the flat-element cache (see _elements()) knows when to rebuild.
 # A module global is correct here because each Spark Python worker process
 # extracts documents sequentially; over-invalidation (another document's
 # mutation bumping it) only costs a rebuild, never staleness.
@@ -899,12 +899,19 @@ def matches(node, selector):
 # only ~8 of the 16 stages, so sharing one walk across the read-only spans
 # roughly halves tree-walk cost.  Callers always receive a fresh filtered
 # list, so snapshot-then-mutate iteration semantics are unchanged.
-_doc_cache = (None, -1, None)
+_elements_cache = (None, -1, None)
+_ALL = ((None, "*", None),)  # compiled "*": select() copies the walk as is
 
 
-def _document_elements(root):
-    global _doc_cache
-    croot, crev, celems = _doc_cache
+def _elements(root):
+    """Every element under ``root`` (excluding ``root``) in document order:
+    the one element walk behind select() and element_count().  The cache is
+    keyed on (root, _REV), so it is correct only while every structural
+    change after parsing goes through a Node method that bumps _REV; no
+    module but this one touches ``.children`` or ``.parent`` directly
+    (tests/test_dom_walk.py audits that)."""
+    global _elements_cache
+    croot, crev, celems = _elements_cache
     if croot is root and crev == _REV:
         return celems
     elems = []
@@ -929,64 +936,21 @@ def _document_elements(root):
                 elems.append(n)
             if n.children:
                 stack.extend(reversed(n.children))
-    _doc_cache = (root, _REV, elems)
+    _elements_cache = (root, _REV, elems)
     return elems
-
-
-def _collect_fast(children, append, fast_tags):
-    for n in children:
-        if n.kind == ELEMENT and n.name in fast_tags:
-            append(n)
-        if n.children:
-            _collect_fast(n.children, append, fast_tags)
-
-
-def _collect_match(children, append, alts):
-    for n in children:
-        if n.kind == ELEMENT and _matches_compiled(n, alts):
-            append(n)
-        if n.children:
-            _collect_match(n.children, append, alts)
 
 
 def select(root, selector):
     """All descendant elements of ``root`` matching ``selector``, in document
-    order (dom_query Document/Selection::select).  Document-level selects
-    filter the cached flat element list; subtree selects use the recursive
-    preorder walk (same 2x-over-explicit-stack win as _document_elements)
-    with an iterative fallback for pathologically deep DOMs."""
+    order (dom_query Document/Selection::select): a filter over the cached
+    element walk."""
     alts, fast_tags = compile_selector(selector)
-    if root.kind == DOCUMENT:
-        elems = _document_elements(root)
-        if fast_tags is not None:
-            return [n for n in elems if n.name in fast_tags]
-        return [n for n in elems if _matches_compiled(n, alts)]
-    out = []
-    try:
-        if fast_tags is not None:
-            _collect_fast(root.children, out.append, fast_tags)
-        else:
-            _collect_match(root.children, out.append, alts)
-        return out
-    except RecursionError:
-        pass
-    out.clear()
-    stack = list(reversed(root.children))
+    elems = _elements(root)
     if fast_tags is not None:
-        while stack:
-            n = stack.pop()
-            if n.kind == ELEMENT and n.name in fast_tags:
-                out.append(n)
-            if n.children:
-                stack.extend(reversed(n.children))
-        return out
-    while stack:
-        n = stack.pop()
-        if n.kind == ELEMENT and _matches_compiled(n, alts):
-            out.append(n)
-        if n.children:
-            stack.extend(reversed(n.children))
-    return out
+        return [n for n in elems if n.name in fast_tags]
+    if alts == _ALL:
+        return elems[:]
+    return [n for n in elems if _matches_compiled(n, alts)]
 
 
 def select_first_attr(root, selector, name):
@@ -1001,6 +965,4 @@ def select_first_attr(root, selector, name):
 def element_count(root):
     """Count of element nodes (reference Document::element_count,
     /root/reference/src/document.rs:18-26)."""
-    if root.kind == DOCUMENT:
-        return len(_document_elements(root))
-    return sum(1 for n in root.descendants() if n.kind == ELEMENT)
+    return len(_elements(root))

@@ -98,38 +98,25 @@ def clean(root, tag):
 
 def clean_styles(root):
     """mozilla _cleanStyles: strip presentational attributes (and deprecated
-    width/height on table-ish elements).  One top-down walk that declines to
-    descend into svg subtrees — O(n), no per-node ancestor scans (the per-
-    document hot path of the scored pipeline)."""
-
-    def strip(node):
+    width/height on table-ish elements) from ``root`` and every element
+    under it, skipping svg subtrees.  Each outermost svg's elements are
+    listed once, so nested svg stays O(n) with no per-node ancestor scans
+    (the per-document hot path of the scored pipeline)."""
+    if root.name == "svg":
+        return
+    nodes = [root] if root.kind == dom.ELEMENT else []
+    nodes += dom.select(root, "*")
+    in_svg = set()
+    for svg in dom.select(root, "svg"):
+        if svg not in in_svg:  # a nested svg is already covered by its outer one
+            in_svg.add(svg)
+            in_svg.update(dom.select(svg, "*"))
+    for node in nodes:
+        if node in in_svg:
+            continue
         node.remove_attrs(PRESENTATIONAL_ATTRIBUTES)
         if node.name in DEPRECATED_SIZE_ATTRIBUTE_ELEMS:
             node.remove_attrs(("width", "height"))
-
-    def rec(children):
-        for n in children:
-            if n.kind != dom.ELEMENT or n.name == "svg":
-                continue
-            strip(n)
-            if n.children:
-                rec(n.children)
-
-    if root.kind == dom.ELEMENT:
-        if root.name == "svg":
-            return
-        strip(root)
-    try:
-        rec(root.children)
-    except RecursionError:  # pathologically deep DOM: iterative fallback
-        stack = list(root.children)
-        while stack:
-            n = stack.pop()
-            if n.kind != dom.ELEMENT or n.name == "svg":
-                continue
-            strip(n)
-            if n.children:
-                stack.extend(n.children)
 
 
 # -------------------------------------------------------------- lazy images

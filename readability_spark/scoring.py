@@ -120,9 +120,7 @@ def score_candidates(document):
     like mozilla _getNodeAncestors(node, 5)). Returns {node: score}
     BEFORE link-density scaling."""
     scores = {}
-    for node in document.descendants():
-        if node.kind != dom.ELEMENT:
-            continue
+    for node in dom.select(document, "*"):
         if not (node.name in TAGS_TO_SCORE or _is_paragraph_like_div(node)):
             continue
         text = _inner_text(node)
@@ -154,7 +152,7 @@ def top_candidate(document, options):
     scores = score_candidates(document)
     if not scores:
         return None, {}
-    order = {n: i for i, n in enumerate(document.descendants())}
+    order = {n: i for i, n in enumerate(dom.select(document, "*"))}
     final = {}
     for node, score in scores.items():
         density = max(0.0, link_density(node) - options.link_density_bias)
@@ -248,7 +246,7 @@ def clean_classes(root, options):
         return
     preserved = set(options.preserved_classes)
     nodes = [root] if root.kind == dom.ELEMENT else []
-    nodes += [n for n in root.descendants() if n.kind == dom.ELEMENT]
+    nodes += dom.select(root, "*")
     for node in nodes:
         cls = node.attr("class")
         if cls is None:

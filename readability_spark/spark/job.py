@@ -1,5 +1,5 @@
-"""The Spark execution layer: vectorized extraction, explicit partitioning,
-domain-skew salting, per-partition lineage/metrics, resumable runs.
+"""The Spark execution layer: vectorized extraction, explicit url-hash
+partitioning and salting, per-partition lineage/metrics, resumable runs.
 
 Design (SURVEY.md sections 3.4 / 2.5):
 
@@ -15,9 +15,12 @@ Design (SURVEY.md sections 3.4 / 2.5):
 - partition attribution is logical: ``partition_id = pmod(xxhash64(url), N)``
   — stable across cluster sizes, so lineage written at N executors resumes
   correctly at 4N;
-- skew salting is hash-based (deterministic), never ``rand()``:
-  ``salt = pmod(xxhash64(url), salt_n)`` spreads a hot domain over salt_n
-  reducers while keeping the logical partition key intact.
+- the salt is a second url hash (deterministic, never ``rand()``):
+  ``salt = pmod(xxhash64(url, 1), salt_n)``.  ``partition_id`` is already
+  a url hash, so no domain can make a logical partition hot; the salt only
+  splits each logical partition into ``salt_n`` shuffle buckets, keeping
+  the logical partition key intact.  The buckets are hashed, so they can
+  collide: 8 logical partitions with ``salt_n=1`` run as 6 tasks.
 
 At 100 TB the same plan holds: the parquet/Iceberg scan prunes on the
 partition transform and the repartition is the only shuffle.  The write
@@ -51,7 +54,7 @@ from pyspark.sql.types import (
 from ..options import DEFAULT_OPTIONS
 from ..pipeline import extract_row
 from .session import map_batches
-from .sources import append_ref, local_path, read_ref
+from .sources import append_ref, is_table_ref, local_path, read_ref
 
 ARTICLE_FIELDS = [
     StructField("byline", StringType(), True),
@@ -264,10 +267,10 @@ def with_partition_id(df: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def with_salt(df: DataFrame, salt_n: int, url_col="url") -> DataFrame:
-    """Deterministic skew salt: a second, finer url hash.  Combined with the
-    partition id in repartition(), it spreads a hot domain's rows across
-    salt_n reducers (AQE cannot fix skew inside mapInArrow inputs, so this
-    is explicit — SURVEY.md section 4.2)."""
+    """Deterministic salt: a second url hash.  Combined with the partition
+    id in repartition(), it splits each logical partition into salt_n hash
+    buckets.  It fixes no domain skew, because ``partition_id`` is already
+    a url hash; the buckets can collide (module docstring)."""
     return df.withColumn(
         "salt",
         F.pmod(F.xxhash64(F.col(url_col), F.lit(1)), F.lit(salt_n)).cast("int"),
@@ -298,35 +301,17 @@ def _read_lineage(spark, lineage_path):
     """Read the lineage table, distinguishing "no lineage yet" (fresh run →
     None) from "lineage exists but is unreadable" (corrupt →
     LineageCorruptError).  Silently treating corrupt lineage as fresh would
-    re-append already-committed partitions."""
-    fs_path = local_path(lineage_path)
-    if fs_path is not None:
-        try:
-            entries = os.listdir(fs_path)
-        except FileNotFoundError:
-            return None
-        except NotADirectoryError as exc:
-            raise LineageCorruptError(
-                f"lineage path {lineage_path!r} exists but is not a directory"
-            ) from exc
-        if not any(
-            e.endswith(".parquet") and not e.startswith((".", "_")) for e in entries
-        ):
-            return None
-        try:
-            return read_ref(spark, lineage_path)
-        except Exception as exc:
-            raise LineageCorruptError(
-                f"lineage table at {lineage_path!r} exists but is unreadable; "
-                "refusing to resume (would duplicate committed partitions): "
-                f"{exc}"
-            ) from exc
+    re-append already-committed partitions.  A path is read with
+    LINEAGE_SCHEMA, so an empty directory reads as 0 rows; a file that
+    cannot be scanned fails later, at the scan (completed_partitions)."""
     try:
-        return read_ref(spark, lineage_path)
+        if is_table_ref(lineage_path):
+            return read_ref(spark, lineage_path)
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     except Exception as exc:
-        # remote path / table ref: missing ↔ corrupt is classified from the
-        # engine's error class (PATH_NOT_FOUND / TABLE_OR_VIEW_NOT_FOUND →
-        # fresh run); anything else is a real read failure
+        # missing ↔ corrupt is classified from the engine's error class
+        # (PATH_NOT_FOUND / TABLE_OR_VIEW_NOT_FOUND → fresh run); anything
+        # else is a real read failure
         msg = str(exc)
         if "PATH_NOT_FOUND" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg:
             return None
@@ -452,7 +437,8 @@ def run_job(
         subset = pages.filter(F.col("partition_id").isin(group))
         subset = with_salt(subset, salt_n)
         # physical partitioning: one shuffle, keyed by (logical partition,
-        # salt) so hot domains spread while attribution stays logical
+        # salt): salt_n hash buckets per logical partition, while
+        # attribution stays logical
         subset = subset.repartition(len(group) * salt_n, "partition_id", "salt")
         # metrics ride the extraction pass itself (no output readback scan)
         acc = spark.sparkContext.accumulator({}, MetricsAccumulatorParam())

@@ -650,9 +650,7 @@ def extract_byline(ctx):
         if not text or len(text.encode("utf-8")) >= BYLINE_MAX_LENGTH:
             continue
         byline = text
-        for desc in node.descendants():
-            if desc.kind != dom.ELEMENT:
-                continue
+        for desc in dom.select(node, "*"):
             ip = desc.attrs.get("itemprop")
             if ip is not None and "name" in ip and desc.text().strip():
                 byline = desc.text().strip()

@@ -409,9 +409,10 @@ def test_want_content_skips_serialization():
 
 
 def test_lineage_scheme_paths_not_treated_as_local(spark, tmp_path):
-    """Single-slash scheme URIs (dbfs:/x) must not be routed to os.listdir
-    (which would silently report a fresh run for existing remote lineage);
-    file:-scheme paths ARE local and resolve to the filesystem path."""
+    """Single-slash scheme URIs (dbfs:/x) must not be taken for a missing
+    local path (which would silently report a fresh run for existing remote
+    lineage); file:-scheme paths ARE local and resolve to the filesystem
+    path."""
     from readability_spark.spark.job import _read_lineage
 
     # dbfs:/... -> remote branch -> spark read fails with a non-PATH_NOT_FOUND
