@@ -192,33 +192,27 @@ class Node:
 
     def text(self):
         """Concatenated text of all descendant (or self) text nodes, document
-        order, no normalization (dom_query Node::text semantics).  Recursive
-        walk (2x the iterative stack's speed — no reversed-copy churn) with
-        an iterative fallback for DOMs deeper than the recursion limit."""
+        order, no normalization (dom_query Node::text semantics).  One
+        preorder loop over child iterators, valid at any depth: ``stack``
+        holds only the suspended iterators of the open ancestors."""
         if self.kind == TEXT:
             return self.data
         parts = []
         append = parts.append
-
-        def rec(children):
-            for n in children:
+        stack = []
+        it = iter(self.children)
+        while True:
+            for n in it:
                 if n.kind == TEXT:
                     append(n.data)
                 elif n.children:
-                    rec(n.children)
-
-        try:
-            rec(self.children)
-        except RecursionError:
-            parts.clear()
-            stack = list(reversed(self.children))
-            while stack:
-                n = stack.pop()
-                if n.kind == TEXT:
-                    parts.append(n.data)
-                elif n.children:
-                    stack.extend(reversed(n.children))
-        return "".join(parts)
+                    stack.append(it)
+                    it = iter(n.children)
+                    break
+            else:
+                if not stack:
+                    return "".join(parts)
+                it = stack.pop()
 
     # ----------------------------------------------------------------- attrs
 
@@ -905,37 +899,32 @@ _ALL = ((None, "*", None),)  # compiled "*": select() copies the walk as is
 
 def _elements(root):
     """Every element under ``root`` (excluding ``root``) in document order:
-    the one element walk behind select() and element_count().  The cache is
-    keyed on (root, _REV), so it is correct only while every structural
-    change after parsing goes through a Node method that bumps _REV; no
-    module but this one touches ``.children`` or ``.parent`` directly
-    (tests/test_dom_walk.py audits that)."""
+    the one element walk behind select() and element_count(), the same
+    loop over child iterators as Node.text(), valid at any depth.  The
+    cache is keyed on (root, _REV), so it is correct only while every
+    structural change after parsing goes through a Node method that bumps
+    _REV; no module but this one touches ``.children`` or ``.parent``
+    directly (tests/test_dom_walk.py audits that)."""
     global _elements_cache
     croot, crev, celems = _elements_cache
     if croot is root and crev == _REV:
         return celems
     elems = []
     append = elems.append
-
-    def rec(children):
-        # recursive preorder: no reversed-copy churn, ~2x the stack walk
-        for n in children:
+    stack = []
+    it = iter(root.children)
+    while True:
+        for n in it:
             if n.kind == ELEMENT:
                 append(n)
                 if n.children:
-                    rec(n.children)
-
-    try:
-        rec(root.children)
-    except RecursionError:  # pathologically deep DOM: iterative fallback
-        elems.clear()
-        stack = list(reversed(root.children))
-        while stack:
-            n = stack.pop()
-            if n.kind == ELEMENT:
-                elems.append(n)
-            if n.children:
-                stack.extend(reversed(n.children))
+                    stack.append(it)
+                    it = iter(n.children)
+                    break
+        else:
+            if not stack:
+                break
+            it = stack.pop()
     _elements_cache = (root, _REV, elems)
     return elems
 

@@ -26,9 +26,10 @@ class Options:
     #: pass (scoring.py). Off by default so the default output stays
     #: byte-identical to the reference's whole-document behavior
     #: (/root/reference/src/readability.rs:53-60). When on, the scoring pass
-    #: finally consumes link_density_bias / min_text_length /
-    #: n_top_candidates / preserved_classes, which the reference declares but
-    #: never reads (SURVEY.md section 0).
+    #: consumes link_density_bias / min_text_length / preserved_classes,
+    #: which the reference declares but never reads (SURVEY.md section 0).
+    #: n_top_candidates stays unread here too (kept for options.rs parity):
+    #: mozilla uses it only for a promotion step scoring.py does not port.
     content_extraction: bool = False
     #: our extension: run the mozilla _prepArticle / _cleanConditionally
     #: cleanup (prep.py) on the scored selection — strips forms, fieldsets,

@@ -8,8 +8,10 @@ The reference anticipates this pass but never implements it: the options
 goal. This module implements the public Arc90/mozilla-readability
 semantics — score paragraph-like candidates by text length, comma count,
 tag weight and class/id signals; propagate to ancestors; penalize link
-density; pick the best of ``n_top_candidates``; merge qualifying siblings —
-and finally consumes those options. Because the reference has no scoring
+density; pick the best-scoring candidate; merge qualifying siblings — and
+consumes all of those options but ``n_top_candidates``. mozilla reads that
+one only for its alternative-ancestor promotion, which is not ported here,
+so it never changes the result. Because the reference has no scoring
 output to match, the golden outputs for this pass are our own frozen run
 (SURVEY.md section 7.1 step 6); the pass is opt-in via
 ``Options.content_extraction`` and the default pipeline output remains
@@ -146,9 +148,10 @@ def score_candidates(document):
 
 def top_candidate(document, options):
     """Scale by link density (biased by ``options.link_density_bias``:
-    density below the bias is forgiven), then return the best of
-    ``options.n_top_candidates`` — deterministic tie-break on document
-    order. None when nothing scored."""
+    density below the bias is forgiven), then return the best-scoring
+    candidate — deterministic tie-break on document order. None when
+    nothing scored. ``options.n_top_candidates`` is not read: mozilla uses
+    it only for the alternative-ancestor promotion, not ported here."""
     scores = score_candidates(document)
     if not scores:
         return None, {}
@@ -157,9 +160,7 @@ def top_candidate(document, options):
     for node, score in scores.items():
         density = max(0.0, link_density(node) - options.link_density_bias)
         final[node] = score * (1.0 - density)
-    ranked = sorted(final.items(), key=lambda kv: (-kv[1], order[kv[0]]))
-    top_n = ranked[: max(1, options.n_top_candidates)]
-    return top_n[0][0], final
+    return min(final, key=lambda n: (-final[n], order[n])), final
 
 
 def _preserved(node, options):

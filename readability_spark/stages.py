@@ -246,7 +246,7 @@ def extract_json_ld(ctx):
         text = text.strip()
         try:
             value = json.loads(text)
-        except ValueError:
+        except (ValueError, RecursionError):  # too deep to parse: skip it too
             continue
         article = _find_article(value)
         if article is None:
@@ -429,12 +429,16 @@ EMPTY_CONTAINER_TAGS = ("DIV", "SECTION", "HEADER", "H1", "H2", "H3", "H4", "H5"
 
 
 def _is_without_content(node):
-    if node.text().strip():
-        return False
+    # decided from the children alone: when every element child is a br or
+    # hr, node.text() is its text children plus theirs (comments add none),
+    # so no walk of the whole subtree is needed
     for child in node.children:
-        if child.kind == dom.ELEMENT and child.name.upper() not in ("BR", "HR"):
-            return False
-        # text children: already covered by the text() check above
+        if child.kind == dom.TEXT:
+            if child.data.strip():
+                return False
+        elif child.kind == dom.ELEMENT:
+            if child.name.upper() not in ("BR", "HR") or child.text().strip():
+                return False
     return True
 
 

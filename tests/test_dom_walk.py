@@ -1,6 +1,8 @@
-"""The shared element walk behind ``dom.select`` and ``dom.element_count``:
-results on DOMs deeper than the recursion limit, cache invalidation after
-every tree mutation, and the source invariant the cache relies on."""
+"""The tree walks: the shared element walk behind ``dom.select`` and
+``dom.element_count`` and the text walk of ``Node.text``, on DOMs deeper than
+the recursion limit; cache invalidation after every tree mutation; the
+source invariant the cache relies on; and ``remove_empty_containers``
+deciding from a node's children without walking its subtree."""
 
 import re
 import sys
@@ -13,13 +15,13 @@ from readability_spark import dom
 DEPTH = 3000
 
 
-def reference_elements(root):
-    """Plain iterative preorder walk: every element under ``root``."""
+def reference_nodes(root, kind=dom.ELEMENT):
+    """Plain iterative preorder walk: every ``kind`` node under ``root``."""
     out = []
     stack = list(reversed(root.children))
     while stack:
         n = stack.pop()
-        if n.kind == dom.ELEMENT:
+        if n.kind == kind:
             out.append(n)
         stack.extend(reversed(n.children))
     return out
@@ -34,7 +36,7 @@ REFERENCE_MATCH = {
 
 @pytest.fixture(scope="module")
 def deep_doc():
-    assert sys.getrecursionlimit() < DEPTH  # so the iterative fallback runs
+    assert sys.getrecursionlimit() < DEPTH  # deeper than the recursion limit
     return dom.parse_document("<html><body>" + "<div><a>x</a>" * DEPTH)
 
 
@@ -42,12 +44,36 @@ def deep_doc():
 @pytest.mark.parametrize("root_at", ["document", "inner element"])
 def test_deep_select_matches_reference_walk(deep_doc, selector, root_at):
     root = deep_doc if root_at == "document" else dom.select(deep_doc, "div")[5]
-    want = [n for n in reference_elements(root) if REFERENCE_MATCH[selector](n)]
+    want = [n for n in reference_nodes(root) if REFERENCE_MATCH[selector](n)]
     assert len(want) > DEPTH // 2
     got = dom.select(root, selector)
     assert len(got) == len(want)
     assert all(g is w for g, w in zip(got, want))
-    assert dom.element_count(root) == len(reference_elements(root))
+    assert dom.element_count(root) == len(reference_nodes(root))
+
+
+@pytest.mark.parametrize("root_at", ["document", "inner element"])
+def test_deep_text_matches_reference_join(deep_doc, root_at):
+    root = deep_doc if root_at == "document" else dom.select(deep_doc, "div")[5]
+    want = "".join(n.data for n in reference_nodes(root, dom.TEXT))
+    assert len(want) > DEPTH // 2
+    assert root.text() == want
+
+
+def test_remove_empty_containers_walks_no_text(monkeypatch):
+    # a 2 000-deep <div>x chain: every div has a text child, so each is kept
+    # without a subtree text() walk (one per div would cost nodes x depth)
+    from readability_spark import stages
+    from readability_spark.model import Context
+    from readability_spark.options import DEFAULT_OPTIONS
+
+    doc = dom.parse_document("<html><body>" + "<div>x" * 2000)
+    calls = []
+    text = dom.Node.text
+    monkeypatch.setattr(dom.Node, "text", lambda self: calls.append(1) or text(self))
+    stages.remove_empty_containers(Context(document=doc, options=DEFAULT_OPTIONS))
+    assert calls == []
+    assert len(dom.select(doc, "div")) == 2000
 
 
 def parse_list():

@@ -164,11 +164,17 @@ class TestEndToEnd:
         # metadata pipeline unaffected by the scoring pass
         assert a.title == "T"
 
-    def test_n_top_candidates_consumed(self):
-        # with n_top_candidates=1 the ranking still returns the best node
-        doc = parse_body(f"<div id='a'><p>{LONG}</p></div>")
-        top, _ = scoring.top_candidate(doc, Options(n_top_candidates=1))
-        assert top.attrs.get("id") == "a"
+    def test_n_top_candidates_does_not_change_the_pick(self):
+        # mozilla reads n_top_candidates only for its alternative-ancestor
+        # promotion, which is not ported: any value picks the same node
+        doc = parse_body(
+            f"<div id='a'><p>{LONG}</p><p>{LONG}</p></div>"
+            f"<div id='b'><p>{LONG}</p></div><div id='c'><p>short, text</p></div>"
+        )
+        one, _ = scoring.top_candidate(doc, Options(n_top_candidates=1))
+        five, _ = scoring.top_candidate(doc, Options(n_top_candidates=5))
+        assert one is five
+        assert one.attrs.get("id") == "a"
 
 
 def test_use_json_ld_gate():

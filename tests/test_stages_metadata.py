@@ -475,6 +475,23 @@ def test_jsonld_invalid_json_skipped():
     )
 
 
+def test_jsonld_too_deep_to_parse_skipped():
+    # json.loads raises RecursionError, not ValueError, on deep nesting; the
+    # script is skipped like any other unparseable one, and the row survives
+    from readability_spark.pipeline import extract_row
+
+    deep = "[" * 5000 + "]" * 5000
+    html = (
+        '<html><head><script type="application/ld+json">'
+        '{"@context":"https://schema.org","@type":"Article","name":"LD","x":'
+        + deep
+        + "}</script><title>Doc Title</title></head><body><p>text</p></body></html>"
+    )
+    article, status, error = extract_row(html)
+    assert (status, error) == ("ok", None)
+    assert article.title == "Doc Title"
+
+
 def test_jsonld_multiple_authors():
     run_stage_test(
         extract_json_ld,
