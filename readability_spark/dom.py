@@ -25,6 +25,7 @@ this subset (FIXTURES.md section 2).
 from __future__ import annotations
 
 import re as _re
+from functools import lru_cache as _lru_cache
 from html import unescape as _unescape
 from html.parser import HTMLParser
 
@@ -64,6 +65,25 @@ _LIST_ITEM_SCOPE_STOP = frozenset(
     "html body table td th caption template ul ol applet marquee object".split()
 )
 
+_TABLE_SCOPE_STOP = frozenset(("table", "html"))
+_SELECT_SCOPE_STOP = frozenset(("select", "html", "body"))
+_END_TAG_SCOPE_STOP = frozenset(("html", "body"))
+
+# Start tag -> (open tags it implicitly closes, scope stops): the HTML5
+# "in body" implied-end rules, one per tag (P_CLOSERS is disjoint from the
+# list-item, table-cell and option tags).
+_P = ("p",)
+_IMPLIED_CLOSES = {tag: (_P, _BUTTON_SCOPE_STOP) for tag in P_CLOSERS}
+_IMPLIED_CLOSES.update(
+    li=(("li",), _LIST_ITEM_SCOPE_STOP),
+    dd=(("dd", "dt"), _LIST_ITEM_SCOPE_STOP),
+    dt=(("dd", "dt"), _LIST_ITEM_SCOPE_STOP),
+    td=(("td", "th"), _TABLE_SCOPE_STOP),
+    th=(("td", "th"), _TABLE_SCOPE_STOP),
+    tr=(("tr",), _TABLE_SCOPE_STOP),
+    option=(("option",), _SELECT_SCOPE_STOP),
+)
+
 _TABLE_SECTIONS = frozenset(("tbody", "thead", "tfoot"))
 _FOSTER_CONTEXTS = frozenset(("table", "tbody", "thead", "tfoot", "tr"))
 _TABLE_PARTS = frozenset(
@@ -71,7 +91,8 @@ _TABLE_PARTS = frozenset(
 )
 
 
-# Global structural-revision counter: bumped by every tree/attr mutation so
+# Global structural-revision counter: bumped by every tree mutation and tag
+# rename (selects match on tag names only, never on attributes) so
 # the flat-element cache (see _elements()) knows when to rebuild.
 # A module global is correct here because each Spark Python worker process
 # extracts documents sequentially; over-invalidation (another document's
@@ -220,14 +241,9 @@ class Node:
         return self.attrs.get(name)
 
     def set_attr(self, name, value):
-        # attr selectors (tag[attr='v']) depend on attrs -> bump revision
-        global _REV
-        _REV += 1
         self.attrs[name] = value
 
     def remove_attrs(self, names):
-        global _REV
-        _REV += 1
         for name in names:
             self.attrs.pop(name, None)
 
@@ -319,6 +335,9 @@ class _TreeBuilder(HTMLParser):
         # phase: 0 initial, 1 in_head, 2 after_head, 3 in_body
         self.phase = 0
         self.stack = []  # open elements, excluding html/head/body bookkeeping
+        # <p> elements on the stack; while none is open, a start tag's
+        # p-scope scan is skipped (every pop goes through _pop_to)
+        self.open_p = 0
 
     # -------------------------------------------------------------- plumbing
 
@@ -476,7 +495,7 @@ class _TreeBuilder(HTMLParser):
         if self.phase <= 1:
             self._ensure_head()
             if self.stack and self.stack[-1] is self.head:
-                self.stack.pop()
+                self._pop_to(len(self.stack) - 1)
             self.phase = 2
 
     def _ensure_body(self, attrs=None):
@@ -534,20 +553,21 @@ class _TreeBuilder(HTMLParser):
         else:
             self._insert(new_text(data))
 
-    def _close_p_in_button_scope(self):
-        for i in range(len(self.stack) - 1, -1, -1):
-            name = self.stack[i].name
-            if name == "p":
-                del self.stack[i:]
-                return
-            if name in _BUTTON_SCOPE_STOP:
-                return
+    def _pop_to(self, i):
+        """Truncate the open-element stack to its first ``i`` entries."""
+        stack = self.stack
+        if self.open_p:
+            self.open_p -= [n.name for n in stack[i:]].count("p")
+        del stack[i:]
 
     def _close_in_scope(self, tags, stop):
-        for i in range(len(self.stack) - 1, -1, -1):
-            name = self.stack[i].name
+        if not self.open_p and tags == _P:
+            return
+        stack = self.stack
+        for i in range(len(stack) - 1, -1, -1):
+            name = stack[i].name
             if name in tags:
-                del self.stack[i:]
+                self._pop_to(i)
                 return
             if name in stop:
                 return
@@ -617,19 +637,9 @@ class _TreeBuilder(HTMLParser):
         if self.phase < 3:
             self._ensure_body()
 
-        # implicit closes
-        if tag in P_CLOSERS:
-            self._close_p_in_button_scope()
-        if tag == "li":
-            self._close_in_scope(("li",), _LIST_ITEM_SCOPE_STOP)
-        if tag in ("dd", "dt"):
-            self._close_in_scope(("dd", "dt"), _LIST_ITEM_SCOPE_STOP)
-        if tag in ("td", "th"):
-            self._close_in_scope(("td", "th"), frozenset(("table", "html")))
-        if tag == "tr":
-            self._close_in_scope(("tr",), frozenset(("table", "html")))
-        if tag == "option":
-            self._close_in_scope(("option",), frozenset(("select", "html", "body")))
+        closes = _IMPLIED_CLOSES.get(tag)
+        if closes is not None:
+            self._close_in_scope(*closes)
 
         cur = self._current()
         # table section synthesis
@@ -652,7 +662,7 @@ class _TreeBuilder(HTMLParser):
             self.stack.append(tr)
             cur = tr
         elif tag in _TABLE_SECTIONS and cur is not None and cur.name in _TABLE_SECTIONS:
-            self.stack.pop()
+            self._pop_to(len(self.stack) - 1)
 
         node = Node(ELEMENT, name=tag, attrs=attrd)
         if cur is not None and cur.name not in _FOSTER_CONTEXTS:
@@ -661,6 +671,8 @@ class _TreeBuilder(HTMLParser):
             self._insert(node)
         if tag not in VOID_ELEMENTS:
             self.stack.append(node)
+            if tag == "p":
+                self.open_p += 1
 
     def handle_endtag(self, tag):
         if tag == "html":
@@ -671,21 +683,18 @@ class _TreeBuilder(HTMLParser):
         if tag == "body":
             # leave body open; trailing content still lands in body
             if self.body is not None:
-                while self.stack and self.stack[-1] is not self.body:
-                    self.stack.pop()
+                i = len(self.stack)
+                while i and self.stack[i - 1] is not self.body:
+                    i -= 1
+                self._pop_to(i)
             return
         if tag == "br":
             # </br> is treated as <br> by html5
             self.handle_starttag("br", [])
             return
-        for i in range(len(self.stack) - 1, -1, -1):
-            n = self.stack[i]
-            if n.name == tag:
-                del self.stack[i:]
-                return
-            if n in (self.html, self.body):
-                return
-        # unmatched end tag: ignored
+        # only self.html and self.body carry those names on the stack;
+        # an unmatched end tag is ignored
+        self._close_in_scope((tag,), _END_TAG_SCOPE_STOP)
 
     def handle_data(self, data):
         if not data:
@@ -826,66 +835,26 @@ def inner_html(node):
 
 # ================================================================= selectors
 
-# The engine needs only this selector subset (see SURVEY.md section 2):
-#   tag | * | tag[attr='v'] | parent > tag/* | comma lists
-
-
-def _compile_one(sel):
-    sel = sel.strip()
-    parent = None
-    if ">" in sel:
-        left, right = sel.split(">", 1)
-        parent = left.strip()
-        sel = right.strip()
-    attr = None
-    if "[" in sel:
-        tag, rest = sel.split("[", 1)
-        body = rest.rstrip("]")
-        name, value = body.split("=", 1)
-        attr = (name.strip(), value.strip().strip("'\""))
-        sel = tag.strip()
-    tag = sel or "*"
-    return (parent, tag, attr)
-
-
-from functools import lru_cache as _lru_cache
+# The engine's one selector form (SURVEY.md section 7.1): a comma list of
+# lowercase tag names ("h1, h2"), or "*" for every element.
+_TAG_NAME = _re.compile(r"[a-z][a-z0-9]*")
 
 
 @_lru_cache(maxsize=256)
-def compile_selector(selector):
-    """Compiled alternatives, cached per selector string (stages pass the
-    same literal selectors for every document).  Also precomputes the
-    bare-tag fast path: when every alternative is a plain tag name, the
-    match is a set lookup instead of the general loop."""
-    alts = tuple(_compile_one(part) for part in selector.split(","))
-    fast_tags = None
-    if all(p is None and a is None and t != "*" for p, t, a in alts):
-        fast_tags = frozenset(t for _, t, _ in alts)
-    return (alts, fast_tags)
-
-
-def _matches_compiled(node, alts):
-    if node.kind != ELEMENT:
-        return False
-    for parent, tag, attr in alts:
-        if tag != "*" and node.name != tag:
-            continue
-        if attr is not None:
-            if node.attrs.get(attr[0]) != attr[1]:
-                continue
-        if parent is not None:
-            p = node.parent
-            if p is None or p.kind != ELEMENT:
-                continue
-            if parent != "*" and p.name != parent:
-                continue
-        return True
-    return False
-
-
-def matches(node, selector):
-    """dom_query Node::is(selector)."""
-    return _matches_compiled(node, compile_selector(selector)[0])
+def _tag_set(selector):
+    """The frozenset of tag names ``selector`` lists, or None for "*";
+    cached per selector string (stages pass the same literals for every
+    document).  Any other selector raises ValueError rather than silently
+    matching nothing."""
+    if selector == "*":
+        return None
+    names = [part.strip() for part in selector.split(",")]
+    if not all(_TAG_NAME.fullmatch(name) for name in names):
+        raise ValueError(
+            f"unsupported selector {selector!r}: expected a comma list of "
+            "lowercase tag names, or '*'"
+        )
+    return frozenset(names)
 
 
 # Single-entry flat-element cache: (root, rev, elements-in-document-order).
@@ -894,7 +863,6 @@ def matches(node, selector):
 # roughly halves tree-walk cost.  Callers always receive a fresh filtered
 # list, so snapshot-then-mutate iteration semantics are unchanged.
 _elements_cache = (None, -1, None)
-_ALL = ((None, "*", None),)  # compiled "*": select() copies the walk as is
 
 
 def _elements(root):
@@ -930,16 +898,14 @@ def _elements(root):
 
 
 def select(root, selector):
-    """All descendant elements of ``root`` matching ``selector``, in document
-    order (dom_query Document/Selection::select): a filter over the cached
-    element walk."""
-    alts, fast_tags = compile_selector(selector)
+    """All descendant elements of ``root`` whose tag ``selector`` lists, in
+    document order (dom_query Document/Selection::select): a filter over
+    the cached element walk, or a copy of it for "*"."""
+    tags = _tag_set(selector)
     elems = _elements(root)
-    if fast_tags is not None:
-        return [n for n in elems if n.name in fast_tags]
-    if alts == _ALL:
+    if tags is None:
         return elems[:]
-    return [n for n in elems if _matches_compiled(n, alts)]
+    return [n for n in elems if n.name in tags]
 
 
 def select_first_attr(root, selector, name):

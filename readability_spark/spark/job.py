@@ -23,11 +23,14 @@ Design (SURVEY.md sections 3.4 / 2.5):
   collide: 8 logical partitions with ``salt_n=1`` run as 6 tasks.
 
 At 100 TB the same plan holds: the parquet/Iceberg scan prunes on the
-partition transform and the repartition is the only shuffle.  The write
-is an at-least-once append per commit group, not an idempotent one: a
-group is appended to the output first and recorded in the lineage table
-second, so a run that dies between the two appends that group again on
-resume, and its urls then have duplicate output rows.
+partition transform and the repartition is the only shuffle.  Each commit
+group's output write replaces that group's own ``partition_id``
+partitions (``sources.replace_partitions``), and only then is the group
+recorded in the lineage table.  A run that dies between the two re-runs
+the group on resume, and the rewrite replaces what the first write left,
+so every url keeps exactly one output row.  A ``table:`` output must
+therefore be partitioned by ``partition_id``; ``run_job`` checks that
+before extracting anything.
 """
 
 from __future__ import annotations
@@ -54,7 +57,14 @@ from pyspark.sql.types import (
 from ..options import DEFAULT_OPTIONS
 from ..pipeline import extract_row
 from .session import map_batches
-from .sources import append_ref, is_table_ref, local_path, read_ref
+from .sources import (
+    append_ref,
+    is_table_ref,
+    local_path,
+    read_ref,
+    replace_partitions,
+    require_partitioned_by,
+)
 
 ARTICLE_FIELDS = [
     StructField("byline", StringType(), True),
@@ -279,6 +289,10 @@ def with_salt(df: DataFrame, salt_n: int, url_col="url") -> DataFrame:
 
 @dataclass
 class JobReport:
+    """One ``run_job`` call.  ``docs``/``ok``/``failed`` (and so
+    ``docs_per_sec``) are at-least-once accumulator counts: a retried task
+    adds its rows again.  Exact counts come from the output itself."""
+
     run_id: str
     partitions_total: int
     partitions_done_previously: int
@@ -292,16 +306,16 @@ class JobReport:
 
 class LineageCorruptError(RuntimeError):
     """The lineage table exists but cannot be read.  Raised instead of
-    silently treating the run as fresh: recomputing over corrupt lineage
-    would re-append partitions that were already committed (duplicate
-    output rows), which is worse than failing loudly."""
+    silently treating the run as fresh: that would re-extract and rewrite
+    every partition already committed, and unreadable lineage is worth a
+    loud failure first."""
 
 
 def _read_lineage(spark, lineage_path):
     """Read the lineage table, distinguishing "no lineage yet" (fresh run →
     None) from "lineage exists but is unreadable" (corrupt →
     LineageCorruptError).  Silently treating corrupt lineage as fresh would
-    re-append already-committed partitions.  A path is read with
+    recompute already-committed partitions.  A path is read with
     LINEAGE_SCHEMA, so an empty directory reads as 0 rows; a file that
     cannot be scanned fails later, at the scan (completed_partitions)."""
     try:
@@ -374,7 +388,7 @@ def completed_partitions(spark, lineage_path, run_id):
         # scan — same contract as _read_lineage, refuse to resume blind
         raise LineageCorruptError(
             f"lineage at {lineage_path!r} exists but failed to scan; refusing "
-            f"to resume (would duplicate committed partitions): {exc}"
+            f"to resume (would recompute committed partitions): {exc}"
         ) from exc
     return {r.partition_id for r in rows}
 
@@ -394,14 +408,18 @@ def run_job(
     """Resumable extraction job with per-partition lineage.
 
     The logical partition space [0, num_partitions) is split into
-    ``commit_groups`` commit units; each unit is extracted, appended to the
-    output (parquet partitioned by partition_id), and recorded in the
-    lineage table before the next unit starts.  A re-run with the same
-    run_id reads the partition ids its lineage rows mark ``ok`` into a
-    driver-side set and filters the input to the rest — resume without
-    recompute (north_rule).  The write is at-least-once (module docstring).  On an Iceberg
-    catalog each commit unit is one transactional append; the parquet
-    layout here is the sandbox stand-in.
+    ``commit_groups`` commit units; each unit is extracted, written to the
+    output (parquet partitioned by partition_id) replacing its own
+    partitions, and recorded in the lineage table before the next unit
+    starts.  A re-run with the same run_id reads the partition ids its
+    lineage rows mark ``ok`` into a driver-side set and filters the input
+    to the rest — resume without recompute (north_rule); a unit re-run
+    after a crash before its lineage replaces what it wrote, so each url
+    has one output row.  A ``table:`` output must be partitioned by
+    ``partition_id`` (else ValueError before any extraction).  On an
+    Iceberg catalog each commit unit is one transactional
+    ``overwritePartitions``; a parquet path stands in for it where no
+    Iceberg runtime is installed.
 
     Per-partition metrics (docs, ok, failed, docs/sec) come from a metrics
     accumulator fed by the extraction pass itself — the write is the only
@@ -409,7 +427,9 @@ def run_job(
     emitted Article columns (see extract_articles): a text-corpus job that
     never consumes the content HTML should pass e.g.
     ``("title", "text_content", "length", "lang")``.  ``num_partitions``,
-    ``salt_n`` and ``commit_groups`` below 1 raise ValueError.
+    ``salt_n`` and ``commit_groups`` below 1 raise ValueError.  The
+    report's ``docs``, ``ok`` and ``failed`` are at-least-once counts
+    (``JobReport``).
     """
     for name, value in (
         ("num_partitions", num_partitions),
@@ -418,6 +438,8 @@ def run_job(
     ):
         if value < 1:
             raise ValueError(f"{name} must be >= 1, got {value}")
+    if is_table_ref(output_path):
+        require_partitioned_by(spark, output_path, "partition_id")
     t_start = time.time()
     pages = with_partition_id(pages_df, num_partitions)
 
@@ -448,7 +470,7 @@ def run_job(
             article_columns=article_columns,
             metrics_acc=acc,
         )
-        append_ref(extracted, output_path, ("partition_id",))
+        replace_partitions(extracted, output_path, "partition_id")
         finished_at = datetime.now(timezone.utc).replace(tzinfo=None)
 
         by_pid = acc.value

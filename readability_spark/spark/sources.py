@@ -14,10 +14,11 @@ Spark docs):
 - pages table layout: ``PARTITIONED BY (days(warc_ts), bucket(64, url))`` —
   partition pruning on crawl date, url-bucket co-location for the
   extraction shuffle;
-- appends are transactional per commit group (``writeTo(t).append()``),
-  so a group's rows land whole or not at all; the output append and the
-  lineage append are still two commits, so resume is at-least-once (a
-  run that dies between them appends that group again, see spark/job.py);
+- each commit group's output write replaces that group's own
+  ``partition_id`` partitions (``writeTo(t).overwritePartitions()``,
+  transactional), so a group re-run after a crash between the output
+  write and the lineage append leaves one row per url; the output table
+  must be partitioned by ``partition_id`` (spark/job.py);
 - resume filtering and golden compares are unchanged — they operate on
   DataFrames, not on the storage format.
 """
@@ -57,13 +58,22 @@ def read_ref(spark, ref: str) -> DataFrame:
     return spark.read.parquet(ref)
 
 
-def append_ref(df: DataFrame, ref: str, partition_cols=()) -> None:
+def _is_v1_write_error(exc) -> bool:
+    """Whether a V2 ``writeTo`` write failed because the table is a v1
+    session-catalog table.  Decided on the stable error class (message
+    wording varies by Spark version), with the message as a second signal."""
+    # getCondition is the Spark 4 name; getErrorClass the 3.x one
+    get_class = getattr(exc, "getCondition", None) or getattr(exc, "getErrorClass", None)
+    error_class = (get_class() or "") if callable(get_class) else ""
+    return error_class == "_LEGACY_ERROR_TEMP_1012" or "v1 table" in str(exc)
+
+
+def append_ref(df: DataFrame, ref: str) -> None:
     """Append to a ref.  Catalog tables use the V2 ``writeTo().append()``
     (transactional on Iceberg); v1 session-catalog tables (the only kind
     this sandbox's built-in catalog serves) fall back to the name-matched
     ``saveAsTable`` append, so the whole table-ref plumbing stays executable
-    without Iceberg jars.  Paths use a parquet append with hive-style
-    partition dirs."""
+    without Iceberg jars.  Paths use a parquet append."""
     if is_table_ref(ref):
         from pyspark.errors import AnalysisException
 
@@ -71,24 +81,55 @@ def append_ref(df: DataFrame, ref: str, partition_cols=()) -> None:
         try:
             df.writeTo(ident).append()
         except AnalysisException as exc:
-            # v1-session-catalog tables reject the V2 write path.  Gate the
-            # fallback on the stable error class (message wording varies by
-            # Spark version), with the message substring as a secondary
-            # signal; anything else (table missing, schema mismatch, ...)
-            # re-raises — saveAsTable would CREATE a missing table, which
-            # must stay an error on an append.
-            error_class = ""
-            # getCondition is the Spark 4 name; getErrorClass the 3.x one
-            get_class = getattr(exc, "getCondition", None) or getattr(
-                exc, "getErrorClass", None
-            )
-            if callable(get_class):
-                error_class = get_class() or ""
-            if error_class != "_LEGACY_ERROR_TEMP_1012" and "v1 table" not in str(exc):
+            # anything but a v1 table (table missing, schema mismatch, ...)
+            # re-raises: saveAsTable would CREATE a missing table, which
+            # must stay an error on an append
+            if not _is_v1_write_error(exc):
                 raise
             df.write.mode("append").saveAsTable(ident)
         return
-    writer = df.write.mode("append")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(ref)
+    df.write.mode("append").parquet(ref)
+
+
+def require_partitioned_by(spark, ref: str, column: str) -> None:
+    """Raise ValueError unless the ``table:`` ref ``ref`` is partitioned by
+    ``column``.  ``replace_partitions`` relies on it: an overwrite of an
+    unpartitioned table replaces every row."""
+    ident = ref[len(TABLE_PREFIX):]
+    if not any(c.name == column and c.isPartition for c in spark.catalog.listColumns(ident)):
+        raise ValueError(f"output table {ident!r} must be partitioned by {column!r}")
+
+
+def replace_partitions(df: DataFrame, ref: str, column: str) -> None:
+    """Write ``df`` to ``ref``, replacing the rows of every ``column``
+    partition that ``df`` holds and leaving the others as they are, so
+    writing the same rows twice leaves them once.  Catalog tables use the
+    V2 ``writeTo().overwritePartitions()`` (transactional on Iceberg).  A
+    v1 session-catalog table, which must be partitioned by ``column``
+    (``require_partitioned_by``), takes an ``insertInto`` overwrite: it
+    matches columns by position, so ``df`` is put in the table's column
+    order, and it follows the session's partition-overwrite mode, never a
+    writer option, so that mode is dynamic for the call and restored after
+    it.  Paths take a dynamic-partition overwrite with hive-style
+    partition dirs."""
+    if is_table_ref(ref):
+        from pyspark.errors import AnalysisException
+
+        ident = ref[len(TABLE_PREFIX):]
+        try:
+            df.writeTo(ident).overwritePartitions()
+        except AnalysisException as exc:
+            if not _is_v1_write_error(exc):
+                raise
+            spark = df.sparkSession
+            key = "spark.sql.sources.partitionOverwriteMode"
+            mode = spark.conf.get(key)
+            spark.conf.set(key, "dynamic")
+            try:
+                df.select(*spark.table(ident).columns).write.insertInto(ident, overwrite=True)
+            finally:
+                spark.conf.set(key, mode)
+        return
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        column
+    ).parquet(ref)

@@ -75,7 +75,9 @@ def _single_image(nodes):
 def unwrap_noscript_images(ctx):
     for node in dom.select(ctx.document, "noscript"):
         fragment = dom.parse_document(dom.inner_html(node))
-        new_image = _single_image(dom.select(fragment, "body > *"))
+        # the fragment's one <body> (a <body> tag merges into it)
+        body = dom.select(fragment, "body")[0]
+        new_image = _single_image([n for n in body.children if n.kind == dom.ELEMENT])
         if new_image is None:
             continue
         prev = node.prev_element_sibling()
@@ -237,7 +239,9 @@ def extract_json_ld(ctx):
     # documented intent — default True keeps byte-identical default output
     if not ctx.options.use_json_ld:
         return
-    for script in dom.select(ctx.document, "script[type='application/ld+json']"):
+    for script in dom.select(ctx.document, "script"):
+        if script.attrs.get("type") != "application/ld+json":
+            continue
         text = script.text().strip()
         if text.startswith("<![CDATA["):
             text = text[len("<![CDATA[") :]

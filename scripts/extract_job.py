@@ -4,7 +4,10 @@ surface: ``spark-submit --py-files readability_spark.zip scripts/extract_job.py`
 Mirrors the reference CLI (/root/reference/src/main.rs:12-34,
 /root/reference/src/arguments.rs:11-22) at dataset scale: instead of one
 HTML file -> stdout, a pages table -> articles table, with per-partition
-lineage, resume, and a JSON report line on stdout.
+lineage, resume, and a JSON report line on stdout.  The report's
+``docs``, ``ok`` and ``failed`` (and so ``docs_per_sec``) are at-least-once
+accumulator counts: a retried task adds its rows again, so they can exceed
+the output's row counts.  The report says so in its ``counts`` field.
 
 Usage:
   spark-submit --master local[8] --py-files readability_spark.zip \
@@ -136,6 +139,7 @@ def main(argv=None):
         "docs": report.docs,
         "ok": report.ok,
         "failed": report.failed,
+        "counts": "at-least-once",
         "wall_secs": round(wall, 3),
         "docs_per_sec": round(report.docs / wall, 1) if wall > 0 else 0.0,
     }

@@ -50,3 +50,38 @@ def run_stage_test(
 
 def md(**kwargs):
     return Metadata(**kwargs)
+
+
+# run_job's commit points: the second commit group's output write, and the
+# first group's lineage append
+CRASH_POINTS = ("before the write", "after the write", "after the lineage")
+
+
+class InjectedCrash(Exception):
+    """A failure injected at a run_job commit point."""
+
+
+def crash_run_job(monkeypatch, point):
+    """Make the next ``run_job`` die once at ``point``: before the second
+    commit group's output write, between that write and its lineage
+    append, or after the first group's lineage append."""
+    from readability_spark.spark import job
+
+    name, call, before = {
+        "before the write": ("replace_partitions", 2, True),
+        "after the write": ("replace_partitions", 2, False),
+        "after the lineage": ("_append_lineage", 1, False),
+    }[point]
+    real = getattr(job, name)
+    calls = []
+
+    def crashing(*args, **kwargs):
+        calls.append(None)
+        if len(calls) == call and before:
+            raise InjectedCrash(point)
+        out = real(*args, **kwargs)
+        if len(calls) == call:
+            raise InjectedCrash(point)
+        return out
+
+    monkeypatch.setattr(job, name, crashing)

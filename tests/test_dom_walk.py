@@ -4,6 +4,7 @@ the recursion limit; cache invalidation after every tree mutation; the
 source invariant the cache relies on; and ``remove_empty_containers``
 deciding from a node's children without walking its subtree."""
 
+import ast
 import re
 import sys
 from pathlib import Path
@@ -29,7 +30,6 @@ def reference_nodes(root, kind=dom.ELEMENT):
 
 REFERENCE_MATCH = {
     "a": lambda n: n.name == "a",
-    "div > a": lambda n: n.name == "a" and n.parent.name == "div",
     "*": lambda n: True,
 }
 
@@ -175,3 +175,143 @@ def test_mutation_audit_catches(line):
 )
 def test_mutation_audit_ignores_reads(line):
     assert not _MUTATION.search(line)
+
+
+# --------------------------------------------------------------- selectors
+
+
+@pytest.mark.parametrize("selector", ["div > a", "div[id='x']", "DIV", "div, *", ""])
+def test_select_rejects_other_selector_forms(selector):
+    doc, _ = parse_list()
+    with pytest.raises(ValueError, match="unsupported selector"):
+        dom.select(doc, selector)
+    with pytest.raises(ValueError, match="unsupported selector"):
+        dom.select_first_attr(doc, selector, "id")
+
+
+def test_select_takes_tag_lists():
+    doc, _ = parse_list()
+    assert [n.name for n in dom.select(doc, "span,p")] == ["p", "p", "span"]
+    assert [n.name for n in dom.select(doc, " span , div ")] == ["div", "span"]
+
+
+def _selector_literals(tree, path):
+    """(where, selector) for each selector argument of a ``select`` or
+    ``select_first_attr`` call in ``tree`` that is a string literal or a
+    module-level string constant."""
+    constants = {
+        t.id: node.value.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and isinstance(node.value, ast.Constant)
+        and isinstance(node.value.value, str)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or len(node.args) < 2:
+            continue
+        func = node.func
+        name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+        if name not in ("select", "select_first_attr"):
+            continue
+        arg = node.args[1]
+        where = f"{path.name}:{node.lineno}"
+        if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+            yield where, arg.value
+        elif isinstance(arg, ast.Name) and arg.id in constants:
+            yield where, constants[arg.id]
+
+
+def test_engine_selectors_are_tag_lists():
+    # a rarely run branch with another selector form would raise only when
+    # a page reaches it; this audit checks every literal up front
+    package = Path(__file__).resolve().parents[1] / "readability_spark"
+    found = []
+    for path in package.rglob("*.py"):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        found += _selector_literals(tree, path)
+    assert len(found) > 40
+    for where, selector in found:
+        try:
+            dom._tag_set(selector)
+        except ValueError:
+            pytest.fail(f"{where}: unsupported selector {selector!r}")
+
+
+def test_selector_audit_catches():
+    tree = ast.parse(
+        'SEL = "div > a"\n'
+        "dom.select(doc, \"script[type='x']\")\n"
+        "dom.select_first_attr(doc, SEL, 'id')\n"
+        "dom.select(doc, tag)\n"
+    )
+    got = [s for _, s in _selector_literals(tree, Path("m.py"))]
+    assert got == ["script[type='x']", "div > a"]
+
+
+# ------------------------------------------------------------ tree builder
+
+
+class _CountingStack(list):
+    """An open-element stack that counts the entries the builder reads."""
+
+    reads = 0
+
+    def __getitem__(self, i):
+        item = super().__getitem__(i)
+        self.reads += len(item) if isinstance(i, slice) else 1
+        return item
+
+
+def scope_reads(html):
+    builder = dom._TreeBuilder()
+    builder.stack = _CountingStack()
+    builder.fast_feed(html)
+    builder.finish()
+    return builder.stack.reads
+
+
+@pytest.mark.parametrize("unit", ["<div>x", "<ul><li>x"])
+def test_implied_close_work_is_linear_in_depth(unit):
+    # unclosed nesting: a quadratic scope scan reads ~16x the stack entries
+    # at 4n as at n, a linear one ~4x
+    n = 500
+    small = scope_reads("<html><body>" + unit * n)
+    large = scope_reads("<html><body>" + unit * (4 * n))
+    assert large <= 5 * small
+
+
+class _CheckedBuilder(dom._TreeBuilder):
+    """Asserts after every tag that ``open_p`` counts the open <p>s."""
+
+    def _check(self):
+        assert self.open_p == [n.name for n in self.stack].count("p")
+
+    def handle_starttag(self, tag, attrs):
+        super().handle_starttag(tag, attrs)
+        self._check()
+
+    def handle_endtag(self, tag):
+        super().handle_endtag(tag)
+        self._check()
+
+
+def test_open_p_count_matches_stack(monkeypatch):
+    from readability_spark.fixtures import build_rows
+
+    monkeypatch.setattr(dom, "_TreeBuilder", _CheckedBuilder)
+    pages = [r.html for r in build_rows(660)] + [
+        "<p><object><div><p>a</div></object>b<p>c</body><p>d",
+        "<table><tr><td><p>x<td><p>y</table><p>z</p></p><p/>",
+        "<head><p>h</head><body><p><p><button><p></button></p>",
+        "<ul><li><p>1<li><p>2</ul><dl><dt><p>3<dd><p>4</dl>",
+    ]
+    parsed = 0
+    for html in pages:
+        try:
+            dom.parse_document(html)
+        except UnicodeDecodeError:
+            continue  # an undecodable row never reaches the builder
+        parsed += 1
+    assert parsed > 600

@@ -22,6 +22,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from conftest import CRASH_POINTS, InjectedCrash, crash_run_job
 from readability_spark.fixtures import build_rows, golden_for
 from readability_spark.spark.job import extract_articles, run_job
 from readability_spark.spark.session import get_spark, map_batches, prepare_python_worker
@@ -151,6 +152,24 @@ def test_resume_without_recompute(spark, pages_df, tmp_path):
     assert clean == resumed
 
 
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_resume_after_crash_leaves_one_row_per_url(spark, pages_df, tmp_path, monkeypatch, point):
+    """A run that dies at any commit point and is resumed has exactly one
+    output row per url: a commit group whose output write landed but whose
+    lineage did not is re-run, and its write replaces its own partitions."""
+    out, lin = str(tmp_path / "a"), str(tmp_path / "l")
+    args = dict(run_id="x", num_partitions=8, salt_n=2, commit_groups=2)
+    with monkeypatch.context() as m:
+        crash_run_job(m, point)
+        with pytest.raises(InjectedCrash):
+            run_job(spark, pages_df, out, lin, **args)
+    rep = run_job(spark, pages_df, out, lin, **args)
+    assert rep.partitions_done_previously == 4 and rep.partitions_processed == 4
+    per_url = spark.read.parquet(out).groupBy("url").count()
+    assert per_url.count() == N_ROWS
+    assert per_url.filter("count != 1").count() == 0
+
+
 def test_file_uri_lineage_resumes(spark, pages_df, tmp_path, monkeypatch):
     """A ``file:`` lineage ref is written where it is read: the second run
     resumes instead of failing after its first output append, and no
@@ -180,7 +199,7 @@ def test_run_job_rejects_counts_below_one(spark, pages_df, tmp_path, param):
 def test_corrupt_lineage_fails_loudly(spark, pages_df, tmp_path):
     """A truncated lineage parquet (crash mid-write before the atomic rename
     existed) must NOT be silently treated as a fresh run — that would
-    re-append already-committed partitions.  And in-flight '.tmp' files are
+    recompute already-committed partitions.  And in-flight '.tmp' files are
     invisible to the resume read (the crash-safe write contract)."""
     from readability_spark.spark.job import LineageCorruptError, completed_partitions
 

@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
+from conftest import CRASH_POINTS, InjectedCrash, crash_run_job  # noqa: E402
 from extract_job import parse_args  # noqa: E402
 from readability_spark.spark import sources  # noqa: E402
 from readability_spark.spark.session import get_spark  # noqa: E402
@@ -243,11 +244,15 @@ class TestSources:
             [(1, "a"), (2, "b"), (3, "a")], "id long, part string"
         )
         ref = str(tmp_path / "t")
-        sources.append_ref(df, ref, ("part",))
-        sources.append_ref(df, ref, ("part",))  # append semantics
+        sources.replace_partitions(df, ref, "part")
+        # replaces the part=a rows only
+        sources.replace_partitions(spark.createDataFrame([(4, "a")], df.schema), ref, "part")
         back = sources.read_ref(spark, ref)
-        assert back.count() == 6
-        assert set(back.columns) == {"id", "part"}
+        assert sorted((r.id, r.part) for r in back.collect()) == [(2, "b"), (4, "a")]
+        log = str(tmp_path / "log")
+        sources.append_ref(df, log)
+        sources.append_ref(df, log)  # append semantics
+        assert sources.read_ref(spark, log).count() == 6
 
 
 class TestSingleDocCli:
@@ -300,40 +305,78 @@ class TestTableRefJob:
         )
         yield spark
 
-    def test_run_job_and_resume_on_catalog_tables(self, spark):
+    @pytest.fixture(scope="class")
+    def pages(self, spark):
         from readability_spark.fixtures import build_rows
-        from readability_spark.spark.job import (
-            LINEAGE_SCHEMA,
-            extract_articles,
-            run_job,
-            with_partition_id,
-        )
 
         rows = build_rows(40)
-        pages = spark.createDataFrame(
+        return spark.createDataFrame(
             [(r.url, r.warc_ts, r.html, r.text, r.lang) for r in rows],
             "url string, warc_ts timestamp, html binary, text string, lang string",
         )
+
+    @pytest.fixture
+    def tables(self, spark, pages):
+        """Empty articles and lineage tables; the articles table is
+        partitioned by partition_id, as run_job requires."""
+        from readability_spark.spark.job import LINEAGE_SCHEMA, extract_articles, with_partition_id
+
         try:
             extract_articles(with_partition_id(pages, 4)).limit(0).writeTo(
                 "articles_ref_t"
-            ).using("parquet").create()
+            ).using("parquet").partitionedBy("partition_id").create()
             spark.createDataFrame([], LINEAGE_SCHEMA).writeTo(
                 "lineage_ref_t"
             ).using("parquet").create()
-            rep = run_job(
-                spark, pages, "table:articles_ref_t", "table:lineage_ref_t",
-                run_id="t1", num_partitions=4, salt_n=2, commit_groups=2,
-            )
-            assert rep.docs == 40 and rep.partitions_processed == 4
-            # resume: lineage table says everything committed -> no recompute
-            rep2 = run_job(
-                spark, pages, "table:articles_ref_t", "table:lineage_ref_t",
-                run_id="t1", num_partitions=4, salt_n=2, commit_groups=2,
-            )
-            assert rep2.partitions_processed == 0
-            assert spark.table("articles_ref_t").count() == 40
-            assert spark.table("lineage_ref_t").count() == 4
+            yield "table:articles_ref_t", "table:lineage_ref_t"
         finally:
             spark.sql("DROP TABLE IF EXISTS articles_ref_t")
             spark.sql("DROP TABLE IF EXISTS lineage_ref_t")
+
+    def test_run_job_and_resume_on_catalog_tables(self, spark, pages, tables):
+        from readability_spark.spark.job import run_job
+
+        rep = run_job(spark, pages, *tables, run_id="t1", num_partitions=4, salt_n=2, commit_groups=2)
+        assert rep.docs == 40 and rep.partitions_processed == 4
+        # resume: lineage table says everything committed -> no recompute
+        rep2 = run_job(spark, pages, *tables, run_id="t1", num_partitions=4, salt_n=2, commit_groups=2)
+        assert rep2.partitions_processed == 0
+        assert spark.table("articles_ref_t").count() == 40
+        assert spark.table("lineage_ref_t").count() == 4
+
+    @pytest.mark.parametrize("point", CRASH_POINTS)
+    def test_resume_after_crash_leaves_one_row_per_url(self, spark, pages, tables, monkeypatch, point):
+        """The table sink's group write replaces its own partitions even
+        when the session's partition-overwrite mode is static, and leaves
+        that mode as it found it."""
+        from readability_spark.spark.job import run_job
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        spark.conf.set(key, "STATIC")
+        args = dict(run_id="c", num_partitions=4, salt_n=2, commit_groups=2)
+        try:
+            with monkeypatch.context() as m:
+                crash_run_job(m, point)
+                with pytest.raises(InjectedCrash):
+                    run_job(spark, pages, *tables, **args)
+            rep = run_job(spark, pages, *tables, **args)
+            assert spark.conf.get(key) == "STATIC"
+        finally:
+            spark.conf.unset(key)
+        assert rep.partitions_done_previously == 2 and rep.partitions_processed == 2
+        per_url = spark.table("articles_ref_t").groupBy("url").count()
+        assert per_url.count() == 40
+        assert per_url.filter("count != 1").count() == 0
+
+    def test_unpartitioned_output_table_is_rejected(self, spark, pages, tables):
+        """An overwrite of an unpartitioned table would replace every row,
+        so run_job refuses one before extracting anything."""
+        from readability_spark.spark.job import extract_articles, run_job
+
+        try:
+            extract_articles(pages).limit(0).writeTo("articles_flat_t").using("parquet").create()
+            with pytest.raises(ValueError, match="partitioned by 'partition_id'"):
+                run_job(spark, pages, "table:articles_flat_t", tables[1], run_id="u", num_partitions=4)
+            assert spark.table(tables[1][len("table:"):]).count() == 0
+        finally:
+            spark.sql("DROP TABLE IF EXISTS articles_flat_t")

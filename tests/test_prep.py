@@ -23,6 +23,11 @@ def parse_body(html):
     return dom.parse_document(f"<html><body>{html}</body></html>")
 
 
+def by_id(root, tag, id_):
+    """``tag`` elements under ``root`` whose id is ``id_``."""
+    return [n for n in dom.select(root, tag) if n.attrs.get("id") == id_]
+
+
 def wrap(html):
     """Parse a fragment and return a detached article wrapper around it,
     the shape prep_article receives from grab_article."""
@@ -111,8 +116,8 @@ class TestCleanConditionally:
         links = "".join(f'<a href="/{i}">link {i} text</a>' for i in range(8))
         w = wrap(f'<div id="junk">{links}</div><div id="art"><p>{LONG}</p></div>')
         prep.clean_conditionally(w, "div")
-        assert dom.select(w, "div[id='junk']") == []
-        assert len(dom.select(w, "div[id='art']")) == 1
+        assert by_id(w, "div", "junk") == []
+        assert len(by_id(w, "div", "art")) == 1
 
     def test_negative_weight_plus_score_removed(self):
         w = wrap('<div class="comment" id="c1"><p>Some comment text here.</p></div>')
@@ -142,8 +147,8 @@ class TestCleanConditionally:
         )
         data = prep.mark_data_tables(w)
         prep.clean_conditionally(w, "table", data_tables=data)
-        assert dom.select(w, "table[id='layout']") == []
-        assert len(dom.select(w, "table[id='data']")) == 1
+        assert by_id(w, "table", "layout") == []
+        assert len(by_id(w, "table", "data")) == 1
 
     def test_content_inside_data_table_protected(self):
         w = wrap(
@@ -157,12 +162,12 @@ class TestCleanConditionally:
     def test_code_block_contents_protected(self):
         w = wrap("<code><div id='in-code'>x</div></code>")
         prep.clean_conditionally(w, "div")
-        assert len(dom.select(w, "div[id='in-code']")) == 1
+        assert len(by_id(w, "div", "in-code")) == 1
 
     def test_ad_word_node_removed(self):
         w = wrap("<div id='ad'>Advertisement</div><div id='art'><p>Real, prose.</p></div>")
         prep.clean_conditionally(w, "div")
-        assert dom.select(w, "div[id='ad']") == []
+        assert by_id(w, "div", "ad") == []
 
     def test_contentscore_rescues_negative_class(self):
         w = wrap(f'<div class="comment" id="c1"><p>{LONG}</p></div>')
@@ -251,7 +256,7 @@ class TestPrepArticle:
     def test_paragraph_like_div_renamed_to_p(self):
         w = wrap(f"<div id='plain'>{LONG}</div>")
         prep.prep_article(w)
-        assert dom.select(w, "div[id='plain']") == []
+        assert by_id(w, "div", "plain") == []
         assert any(n.attrs.get("id") == "plain" for n in dom.select(w, "p"))
 
     def test_form_and_fieldset_stripped(self):
@@ -263,7 +268,7 @@ class TestPrepArticle:
         prep.prep_article(w)
         assert dom.select(w, "form") == []
         assert dom.select(w, "fieldset") == []
-        assert len(dom.select(w, "div[id='art']")) == 1
+        assert len(by_id(w, "div", "art")) == 1
 
     def test_inputs_buttons_selects_removed(self):
         w = wrap(f"<p>{LONG}</p><input name='a'><button>Go</button><select></select>"

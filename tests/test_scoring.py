@@ -18,6 +18,11 @@ def parse_body(html):
     return dom.parse_document(f"<html><body>{html}</body></html>")
 
 
+def by_id(root, tag, id_):
+    """``tag`` elements under ``root`` whose id is ``id_``."""
+    return [n for n in dom.select(root, tag) if n.attrs.get("id") == id_]
+
+
 LONG = (
     "This paragraph has enough prose, with commas, to be a serious scoring "
     "candidate for the content selector in every conceivable configuration. "
@@ -66,8 +71,8 @@ class TestPrimitives:
             "<div id='g'><div id='par'><p>" + "z" * 120 + "</p></div></div>"
         )
         scores = scoring.score_candidates(doc)
-        par = dom.select(doc, "div[id='par']")[0]
-        g = dom.select(doc, "div[id='g']")[0]
+        par = by_id(doc, "div", "par")[0]
+        g = by_id(doc, "div", "g")[0]
         body = dom.select(doc, "body")[0]
         seed = 1.0 + 1  # len 120 -> +1
         assert scores[par] == pytest.approx(5 + seed)  # level 0: full
